@@ -58,7 +58,7 @@ object BenchExtra {
     def counted[T](f: => T): (Long, Long, Long) = {
       val j0 = jobs.get(); val g0 = stages.get(); val t0 = tasks.get()
       f
-      Thread.sleep(300) // listener bus drain
+      org.apache.spark.GraftSparkBridge.waitUntilEmpty(s.sparkContext, 10000L)
       (jobs.get() - j0, stages.get() - g0, tasks.get() - t0)
     }
 

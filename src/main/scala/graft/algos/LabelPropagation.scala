@@ -1,63 +1,107 @@
 package graft.algos
 
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import graft.util.Ckpt._
 
-/** Synchronous label propagation (community detection).
+import graft.pagerank.CsrPageRank
+import graft.pagerank.CsrPageRank.{IdxPartitioner, PartitionValueAcc}
+
+/** Synchronous label propagation (community detection), run on the
+  * partition-local CSR blocks of [[graft.pagerank.CsrPageRank.build]].
   *
   * Semantics (SURVEY.md §2.9, fixed so outputs are exactly checkable):
   * init label = vertex id; each synchronous round every vertex adopts the
   * MODE (most frequent) label among its neighbors on the symmetrized graph,
-  * ties broken by the SMALLEST label — fully deterministic. Runs a fixed
-  * number of rounds (sync LP on bipartite-ish structures can oscillate, so
-  * a fixed round count is the deterministic, published-definition choice).
+  * ties broken by the SMALLEST label — fully deterministic. Runs at most
+  * `rounds` rounds (sync LP on bipartite-ish structures can oscillate, so
+  * a round cap is the deterministic, published-definition choice) and stops
+  * after the first round that changes no label.
   *
-  * Scale shape per round: one O(|E|) join against the cached src-partitioned
-  * edge table, a two-key count aggregation (map-side combined; hub skew is
-  * absorbed because each (dst,label) key is pre-reduced per partition), and
-  * a per-vertex top-1 window over the (dst,label) counts — window partitions
-  * are per-vertex, so no single-partition bottleneck.
+  * Each round is ONE Spark job with ONE exchange: every vertex sends its
+  * label along its out-edges as packed (dstIdx, label) arrays per target
+  * partition; the receiving partition buckets the labels by local vertex
+  * (counting sort over the block's vertex array), sorts each bucket and
+  * takes its longest run — the smallest label on ties, since runs are
+  * scanned in ascending order. A vertex that receives nothing keeps its
+  * label. Changed labels are counted by a per-partition
+  * overwrite-idempotent accumulator, which drives the early stop.
   */
 object LabelPropagation {
 
   def run(spark: SparkSession, symEdges: DataFrame,
       rounds: Int = 10): DataFrame = {
-    val parts = spark.sparkContext.defaultParallelism
-    val edges = symEdges.select("src", "dst")
-      .repartition(parts, col("src")).ckpt()
-    val verts = edges.select(col("src").as("id")).distinct()
-      .ckpt()
+    val sc = spark.sparkContext
+    val g = new CsrPageRank(spark).build(symEdges)
+    val parts = g.vCounts.length
+    val ip = new IdxPartitioner(parts)
 
-    // localCheckpoint every round — eager lineage truncation (the round
-    // plan references `labels` twice; same pattern as PageRank).
-    var labels = verts.select(col("id"), col("id").as("label"))
-      .repartition(parts, col("id")).ckpt()
-
+    var labels: RDD[Array[Long]] = g.blocks.map(_.srcs)
     var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      val counts = edges
-        .join(labels.withColumnRenamed("id", "src"), Seq("src"))
-        .groupBy(col("dst").as("id"), col("label"))
-        .agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy("id").orderBy(desc("n"), asc("label"))
-      val mode = counts.withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1).select(col("id"), col("label"))
-      // isolated vertices (none after self-loop-free symmetrize of a
-      // connected fixture, but keep total): retain previous label.
-      val next = labels.withColumnRenamed("label", "prevLabel")
-        .join(mode, Seq("id"), "left")
-        .select(col("id"), coalesce(col("label"), col("prevLabel")).as("label"),
-          col("prevLabel"))
-        .ckpt()
-      val changed = next.where(col("label") =!= col("prevLabel")).count()
-      labels = next.select("id", "label").repartition(parts, col("id"))
-        .ckpt()
+    var changed = 1L
+    while (r < rounds && changed > 0) {
+      val acc = new PartitionValueAcc
+      sc.register(acc)
+      val next = g.blocks.zipPartitions(labels, preservesPartitioning = false) {
+        (bIt, lIt) => CsrLabels.push(bIt.next(), lIt.next(), null, parts)
+      }.partitionBy(ip)
+        .zipPartitions(labels, preservesPartitioning = true) { (mIt, lIt) =>
+          val old = lIt.next()
+          val got = mIt.map(_._2).toArray
+          val n = old.length
+          // bucket the received labels by local vertex: start(v) until
+          // start(v + 1) is v's slice of `bucket`
+          val start = new Array[Int](n + 1)
+          got.foreach { case (idxs, _) =>
+            var j = 0
+            while (j < idxs.length) { start(idxs(j) + 1) += 1; j += 1 }
+          }
+          var v = 0
+          while (v < n) { start(v + 1) += start(v); v += 1 }
+          val fill = start.clone()
+          val bucket = new Array[Long](start(n))
+          got.foreach { case (idxs, ls) =>
+            var j = 0
+            while (j < idxs.length) {
+              bucket(fill(idxs(j))) = ls(j)
+              fill(idxs(j)) += 1
+              j += 1
+            }
+          }
+          val out = new Array[Long](n)
+          var moved = 0L
+          v = 0
+          while (v < n) {
+            out(v) =
+              if (start(v) == start(v + 1)) old(v)
+              else mode(bucket, start(v), start(v + 1))
+            if (out(v) != old(v)) moved += 1
+            v += 1
+          }
+          acc.add((TaskContext.getPartitionId(), moved.toDouble))
+          Iterator.single(out)
+        }
+      changed = CsrLabels.materialize(next, acc)
+      labels.unpersist(false)
+      labels = next
       r += 1
-      converged = changed == 0
     }
-    labels
+    CsrLabels.toDF(spark, g, labels, "label")
+  }
+
+  /** Most frequent label in a(from until to), the smallest on ties. Sorts
+    * that range in place. */
+  private def mode(a: Array[Long], from: Int, to: Int): Long = {
+    java.util.Arrays.sort(a, from, to)
+    var best = a(from)
+    var bestN = 0
+    var i = from
+    while (i < to) {
+      var j = i
+      while (j < to && a(j) == a(i)) j += 1
+      if (j - i > bestN) { best = a(i); bestN = j - i }
+      i = j
+    }
+    best
   }
 }

@@ -18,8 +18,8 @@ import graft.model.{PagerankOptions, PagerankStats}
   * separate residual job. This path freezes the graph ONCE into
   * per-partition CSR blocks over primitive arrays, keeps the rank vector as
   * one dense `Array[Double]` per partition (the reference's flat rank
-  * vector, partition-blocked), and runs each superstep as exactly ONE job
-  * with ONE shuffle of packed primitive arrays:
+  * vector, partition-blocked), and runs each superstep as ONE shuffle of
+  * packed primitive arrays, with a block of supersteps fused into one job:
   *
   *   sweep (local):   for each src i: w = rank(i)·invDeg(i); scatter w into
   *                    a per-destination-partition accumulator indexed by the
@@ -65,7 +65,7 @@ class CsrPageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()
     val sc = spark.sparkContext
     val parts = sc.defaultParallelism
     val hp = new HashPartitioner(parts)
-    val ip = new IndexPartitioner(parts)
+    val ip = new IdxPartitioner(parts)
 
     val edges: RDD[(Long, Long)] = yEdges.select("src", "dst").rdd
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -177,7 +177,7 @@ class CsrPageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()
     // The graph carries its own partition count — a CsrGraph built under a
     // different parallelism setting must still sweep correctly.
     val parts = g.vCounts.length
-    val ip = new IndexPartitioner(parts)
+    val ip = new IdxPartitioner(parts)
     if (g.n == 0) {
       import spark.implicits._
       return (PagerankRun(Seq.empty[(Long, Double)].toDF("id", "rank"),
@@ -209,12 +209,17 @@ class CsrPageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()
     // `this` (and the SparkSession) into the serialized task
     val damp = P
     val useL1 = opts.useL1Residual
-    while (iter < opts.maxIterations && residual >= opts.tolerance) {
-      val stepT0 = System.nanoTime()
-      val acc = new ResidualAccumulator
-      sc.register(acc) // unnamed: no per-superstep registry pinning
+
+    /** Define ONE superstep lazily — no action here. Its residual lands in
+      * an unnamed (registry-free) per-partition accumulator, overwrite-
+      * idempotent, so the step may run inside a ShuffleMapStage of a fused
+      * block where Spark can re-run a task. */
+    def defineStep(prev: RDD[Array[Double]])
+        : (RDD[Array[Double]], PartitionValueAcc) = {
+      val acc = new PartitionValueAcc
+      sc.register(acc)
       val contribs: RDD[(Int, (Array[Int], Array[Double]))] =
-        g.blocks.zipPartitions(ranks, preservesPartitioning = false) {
+        g.blocks.zipPartitions(prev, preservesPartitioning = false) {
           (bIt, rIt) =>
             val b = bIt.next()
             val r = rIt.next()
@@ -223,7 +228,7 @@ class CsrPageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()
             else sweepSparse(b, r, vc)
         }
       val next = contribs.partitionBy(ip)
-        .zipPartitions(ranks, preservesPartitioning = true) { (cIt, rIt) =>
+        .zipPartitions(prev, preservesPartitioning = true) { (cIt, rIt) =>
           val old = rIt.next()
           val acc2 = new Array[Double](old.length)
           cIt.foreach { case (_, (idxs, vals)) =>
@@ -247,23 +252,54 @@ class CsrPageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()
           Iterator.single(acc2)
         }
       next.persist(StorageLevel.MEMORY_AND_DISK)
+      (next, acc)
+    }
+
+    // BLOCK FUSION (as in CsrDynamic's loop): define up to
+    // CsrDynamic.fuseMax supersteps lazily and run them as ONE job — each
+    // step's combine runs as the map stage of its successor's shuffle, and
+    // its rank blocks persist as a side effect. The per-step accumulators are
+    // then read in order and the loop keeps the FIRST step whose residual
+    // fell under the tolerance, so iterations, ranks and crossIters equal
+    // the one-job-per-step loop's. The supersteps a block ran past that step
+    // are discarded. Per-step wall is the block wall split evenly.
+    while (iter < opts.maxIterations && residual >= opts.tolerance) {
+      val blockT0 = System.nanoTime()
+      val block = math.min(CsrDynamic.fuseMax, opts.maxIterations - iter)
+      val steps = new scala.collection.mutable.ArrayBuffer[
+        (RDD[Array[Double]], PartitionValueAcc)](block)
+      var chain = ranks
+      while (steps.length < block) {
+        val s = defineStep(chain)
+        steps += s
+        chain = s._1
+      }
       // Truncate the RDD object-graph periodically: task closures serialize
       // the stage's lineage chain, which otherwise grows per superstep.
-      if ((iter + 1) % 15 == 0) next.localCheckpoint()
-      next.count()
-      residual =
-        if (!measureResidual) Double.MaxValue
-        else if (acc.value.isEmpty) 0.0
-        else if (opts.useL1Residual) acc.value.values.sum
-        else acc.value.values.max
-      ranks.unpersist(false)
-      ranks = next
-      iter += 1
-      stepTimes += (System.nanoTime() - stepT0) / 1e6
-      if (crossIters < 0 && crossTol > 0 && residual < crossTol) {
-        crossIters = iter
-        crossSecs = (System.nanoTime() - t1) / 1e9
+      if ((iter + block) / 15 > iter / 15) chain.localCheckpoint()
+      chain.count()
+      val stepMs = (System.nanoTime() - blockT0) / 1e6 / block
+      var k = 0
+      var stop = false
+      while (!stop) {
+        val vals = steps(k)._2.value.values
+        residual =
+          if (!measureResidual) Double.MaxValue
+          else if (vals.isEmpty) 0.0
+          else if (useL1) vals.sum
+          else vals.max
+        iter += 1
+        stepTimes += stepMs
+        if (crossIters < 0 && crossTol > 0 && residual < crossTol) {
+          crossIters = iter
+          crossSecs = (blockT0 - t1) / 1e9 + stepMs * (k + 1) / 1e3
+        }
+        k += 1
+        stop = k == block || residual < opts.tolerance
       }
+      ranks.unpersist(false)
+      steps.indices.foreach(j => if (j != k - 1) steps(j)._1.unpersist(false))
+      ranks = steps(k - 1)._1
     }
 
     val t3 = System.nanoTime()
@@ -305,27 +341,33 @@ object CsrPageRank {
   final case class CsrGraph(blocks: RDD[CsrBlock], vCounts: Array[Int],
       n: Long, nEdges: Long)
 
-  private final class IndexPartitioner(val parts: Int) extends Partitioner {
+  /** Routes a record keyed by its target partition index to that partition.
+    * Shared by every partition-local CSR loop (static and dynamic PageRank,
+    * connected components, label propagation).
+    *
+    * Trap: `partitionBy` (and `combineByKey`) skip the shuffle when the input
+    * already carries an equal partitioner, so an RDD of messages keyed for
+    * this partitioner must not come from a `preservesPartitioning = true`
+    * zip — the messages would then stay on the partition that sent them. */
+  final class IdxPartitioner(val parts: Int) extends Partitioner {
     def numPartitions: Int = parts
     def getPartition(key: Any): Int = key.asInstanceOf[Int]
     override def equals(o: Any): Boolean = o match {
-      case p: IndexPartitioner => p.parts == parts
+      case p: IdxPartitioner => p.parts == parts
       case _ => false
     }
     override def hashCode(): Int = parts
   }
 
-  /** Retry-safe residual accumulator: one Δ-norm value PER PARTITION,
+  /** Retry-safe per-partition scalar accumulator: one value PER PARTITION,
     * merged by overwrite (idempotent under task re-execution — a retried
-    * partition just rewrites its slot), folded to L∞ (max) or L1 (sum)
-    * at read time. */
-  private final class ResidualAccumulator
+    * partition just rewrites its slot, where a `LongAccumulator` would add
+    * twice). Readers fold the slots (max or sum) themselves. */
+  final class PartitionValueAcc
       extends AccumulatorV2[(Int, Double), Map[Int, Double]] {
     private var m = Map.empty[Int, Double]
     def isZero: Boolean = m.isEmpty
-    def copy(): ResidualAccumulator = {
-      val a = new ResidualAccumulator; a.m = m; a
-    }
+    def copy(): PartitionValueAcc = { val a = new PartitionValueAcc; a.m = m; a }
     def reset(): Unit = m = Map.empty
     def add(x: (Int, Double)): Unit = m += x
     def merge(o: AccumulatorV2[(Int, Double), Map[Int, Double]]): Unit =

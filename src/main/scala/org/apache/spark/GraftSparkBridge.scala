@@ -4,6 +4,9 @@ package org.apache.spark
   * org.apache.spark.sql.GraftBridge — same standard pattern, nothing else
   * in this package).
   *
+  * `waitUntilEmpty` drains the listener bus, so counters kept by a
+  * SparkListener are complete when read.
+  *
   * `detachAppStatusListener` exists because the AppStatusListener cannot be
   * disabled by configuration, yet on long-running iterative workloads it is
   * a driver-memory leak: an endurance stream emits hundreds of tiny jobs
@@ -20,4 +23,11 @@ object GraftSparkBridge {
     * the UI is disabled and no SparkStatusTracker consumer is in play. */
   def detachAppStatusListener(sc: SparkContext): Unit =
     sc.statusStore.listener.foreach(sc.listenerBus.removeListener)
+
+  /** Block until every event posted so far has reached every listener, or
+    * `timeoutMs` elapsed (then throws a TimeoutException). Read listener
+    * counters only after this — events of a finished job may still be in
+    * flight on the bus. */
+  def waitUntilEmpty(sc: SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
 }

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.GraftSparkBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.algos.{ConnectedComponents, LabelPropagation, TriangleCount}
@@ -12,6 +15,38 @@ class AlgosSpec extends AnyFunSuite {
 
   val twoComponents = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L), (12L, 10L))
   val k4 = for { a <- 1L to 4L; b <- 1L to 4L if a < b } yield (a, b)
+
+  /** The shape the snapshot workload feeds CC and LP: seeded random links,
+    * a self-loop on every vertex, vertices 60..71 with the self-loop as
+    * their only edge, symmetrized. */
+  lazy val snapshotShape: (DataFrame, Oracle.G) = {
+    val rnd = new scala.util.Random(11)
+    val links = Seq.fill(70)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+    val loops = (0L until 72L).map(v => (v, v))
+    val sym = EdgeOps.symmetrize(TestSpark.edgesDf(spark, links ++ loops)).cache()
+    (sym, new Oracle.G(sym.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq))
+  }
+
+  /** Jobs `f` starts on this thread, read after the listener bus drained. */
+  def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.test.job") == tag)
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setLocalProperty("graft.test.job", tag)
+    try f
+    finally {
+      sc.setLocalProperty("graft.test.job", null)
+      GraftSparkBridge.waitUntilEmpty(sc, 10000L)
+      sc.removeSparkListener(l)
+    }
+    n.get()
+  }
 
   test("CC: exact min-id labels on twoComponents") {
     val sym = EdgeOps.symmetrize(TestSpark.edgesDf(spark, twoComponents))
@@ -41,6 +76,28 @@ class AlgosSpec extends AnyFunSuite {
     val got = TestSpark.collectLabels(labels)
     assert(got.size === n)
     assert(got.values.forall(_ == 0L))
+  }
+
+  test("CC and LP on the snapshot shape match the oracle across partitions") {
+    assert(spark.sparkContext.defaultParallelism >= 2)
+    val (sym, g) = snapshotShape
+    val cc = Oracle.connectedComponents(g)
+    assert(cc.values.toSet.size > 12, "fixture should have several components")
+    assert(TestSpark.collectLabels(ConnectedComponents.run(spark, sym)) === cc)
+    assert(TestSpark.collectLabels(LabelPropagation.run(spark, sym, 3)) ===
+      Oracle.labelPropagation(g, 3))
+  }
+
+  test("LP stops before `rounds` once no label changes") {
+    val (sym, g) = snapshotShape
+    val (want, settled) = Oracle.labelPropagationRounds(g, 50)
+    assert(settled < 50, "fixture should settle")
+    var got = Map.empty[Long, Long]
+    val capped = jobsOf(LabelPropagation.run(spark, sym, settled).collect())
+    val loose = jobsOf { got = TestSpark.collectLabels(LabelPropagation.run(spark, sym, 50)) }
+    assert(got === want)
+    // one job per round: a 50-round cap runs no more rounds than `settled`
+    assert(loose === capped)
   }
 
   test("LP: deterministic sync mode labels match the oracle") {

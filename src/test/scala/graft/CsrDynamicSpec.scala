@@ -59,6 +59,21 @@ class CsrDynamicSpec extends AnyFunSuite {
       s"maxDiff=${Oracle.maxDiff(got, dfDataframe)}")
   }
 
+  test("deleting a vertex's only edge (its self-loop) breaks the self-loop contract") {
+    val edges = TestSpark.edgesDf(spark,
+      selfLooped(Seq((1L, 2L), (2L, 3L))) :+ ((9L, 9L)))
+    val dyn = new CsrDynamic(spark)
+    val g0 = new CsrPageRank(spark).build(edges)
+    val (_, st0) = dyn.staticWithState(g0)
+    val del = TestSpark.edgesDf(spark, Seq((9L, 9L)))
+    val e = intercept[Exception](
+      dyn.applyBatch(g0, st0, del.limit(0), del, prune = true))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains(
+      "vertex 9 would lose its last edge (self-loop contract)")), e.toString)
+  }
+
   test("decomposition counters: supersteps and kernel critical-path advance") {
     val (base, ins) = fixture()
     val xDf = TestSpark.edgesDf(spark, base)

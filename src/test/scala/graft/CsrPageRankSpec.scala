@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.graph.EdgeOps
 import graft.ingest.WebGraphFixture
 import graft.model.PagerankOptions
-import graft.pagerank.{CsrPageRank, PageRank}
+import graft.pagerank.{CsrDynamic, CsrPageRank, PageRank}
 
 /** The partition-local CSR fast path must be VALUE-IDENTICAL to the
   * DataFrame superstep (allclose 1e-12, same iteration count) — it is a
@@ -49,6 +49,28 @@ class CsrPageRankSpec extends AnyFunSuite {
     assert(a.size === P)
     assert(Oracle.allclose(a, b, 1e-12), s"maxDiff=${Oracle.maxDiff(a, b)}")
     assert(csr.stats.iterations === df.stats.iterations)
+  }
+
+  test("fused sweep: crossIters inside a 1e-10 run equals a 1e-6 run's iterations") {
+    val edges = TestSpark.edgesDf(spark,
+      selfLooped((1L to 40L).map(i => (i, (i * 5) % 41)) ++ line4))
+    val g = new CsrPageRank(spark).build(edges)
+    val (run, _, crossSecs, crossIters) =
+      new CsrPageRank(spark).staticDetailed(g, crossTol = 1e-6)
+    val at6 = new CsrPageRank(spark, PagerankOptions(tolerance = 1e-6))
+      .staticOnGraph(g)
+    assert(crossIters % CsrDynamic.fuseMax != 0, "crossing should fall inside a block")
+    assert(crossIters === at6.stats.iterations)
+    assert(crossSecs > 0.0)
+    assert(run.stats.iterations > crossIters)
+    assert(run.stats.stepTimesMs.length === run.stats.iterations)
+    assert(at6.stats.stepTimesMs.length === at6.stats.iterations)
+    // the 1e-6 run keeps the crossing step's ranks, not its block's last
+    val df = new PageRank(spark, PagerankOptions(tolerance = 1e-6)).static(edges)
+    assert(at6.stats.iterations === df.stats.iterations)
+    val a = TestSpark.collectRanks(at6.ranks)
+    val b = TestSpark.collectRanks(df.ranks)
+    assert(Oracle.allclose(a, b, 1e-12), s"maxDiff=${Oracle.maxDiff(a, b)}")
   }
 
   test("sparse sweep (packed-key map, maxDenseBytes=0) == dense sweep") {

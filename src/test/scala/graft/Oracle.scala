@@ -68,7 +68,12 @@ object Oracle {
   }
 
   /** Sync LP, mode label with smallest-label tie-break (SURVEY.md §2.9). */
-  def labelPropagation(g: G, rounds: Int): Map[Long, Long] = {
+  def labelPropagation(g: G, rounds: Int): Map[Long, Long] =
+    labelPropagationRounds(g, rounds)._1
+
+  /** [[labelPropagation]] plus the rounds it ran: it stops after the first
+    * round that changes no label. */
+  def labelPropagationRounds(g: G, rounds: Int): (Map[Long, Long], Int) = {
     var labels: Map[Long, Long] = g.verts.map(v => v -> v).toMap
     var r = 0
     var changed = true
@@ -86,7 +91,7 @@ object Oracle {
       labels = next
       r += 1
     }
-    labels
+    (labels, r)
   }
 
   /** Brute-force triangle count on the symmetrized graph w/o self-loops. */
