@@ -7,7 +7,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.pagerank.CsrDynamic.homePart
 import graft.pagerank.CsrPageRank
-import graft.pagerank.CsrPageRank.{IdxPartitioner, PartitionValueAcc}
+import graft.pagerank.CsrPageRank.{IdxPartitioner, PartitionAcc}
 
 /** Connected components via Hash-Min with pointer doubling (shortcutting),
   * run on the partition-local CSR blocks of [[graft.pagerank.CsrPageRank.build]].
@@ -66,7 +66,7 @@ object ConnectedComponents {
     var changed = 1L
     var rounds = 0
     while (changed > 0) {
-      val acc = new PartitionValueAcc
+      val acc = new PartitionAcc[Long]
       sc.register(acc)
       // (1) hash-min. Kept with it: the sorted distinct foreign labels
       // (comp(v) != v) whose own comp the shortcut asks for.
@@ -127,7 +127,7 @@ object ConnectedComponents {
               if (out(i) != prev(i)) { moved(i) = true; n += 1 }
               i += 1
             }
-            acc.add((TaskContext.getPartitionId(), n.toDouble))
+            acc.add((TaskContext.getPartitionId(), n.toLong))
             Iterator.single((out, moved))
         }
       changed = CsrLabels.materialize(next, acc)

@@ -4,7 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-import graft.pagerank.CsrPageRank.{CsrBlock, CsrGraph, PartitionValueAcc}
+import graft.pagerank.CsrPageRank.{CsrBlock, CsrGraph, PartitionAcc}
 
 /** Plumbing shared by the label algorithms that run on the frozen CSR blocks
   * of [[graft.pagerank.CsrPageRank.build]] ([[ConnectedComponents]],
@@ -45,11 +45,11 @@ private[algos] object CsrLabels {
   /** Persist and materialize one round's labels in ONE job, truncating
     * their lineage at that job (registered before it runs, or the truncation
     * is a no-op), and return the round's changed-label count. */
-  def materialize(next: RDD[_], changed: PartitionValueAcc): Long = {
+  def materialize(next: RDD[_], changed: PartitionAcc[Long]): Long = {
     next.persist(StorageLevel.MEMORY_AND_DISK)
     next.localCheckpoint()
     next.count()
-    changed.value.values.sum.toLong
+    changed.value.values.sum
   }
 
   /** (id, `name`) rows of the final label blocks. */

@@ -5,7 +5,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.pagerank.CsrPageRank
-import graft.pagerank.CsrPageRank.{IdxPartitioner, PartitionValueAcc}
+import graft.pagerank.CsrPageRank.{IdxPartitioner, PartitionAcc}
 
 /** Synchronous label propagation (community detection), run on the
   * partition-local CSR blocks of [[graft.pagerank.CsrPageRank.build]].
@@ -40,7 +40,7 @@ object LabelPropagation {
     var r = 0
     var changed = 1L
     while (r < rounds && changed > 0) {
-      val acc = new PartitionValueAcc
+      val acc = new PartitionAcc[Long]
       sc.register(acc)
       val next = g.blocks.zipPartitions(labels, preservesPartitioning = false) {
         (bIt, lIt) => CsrLabels.push(bIt.next(), lIt.next(), null, parts)
@@ -78,7 +78,7 @@ object LabelPropagation {
             if (out(v) != old(v)) moved += 1
             v += 1
           }
-          acc.add((TaskContext.getPartitionId(), moved.toDouble))
+          acc.add((TaskContext.getPartitionId(), moved.toLong))
           Iterator.single(out)
         }
       changed = CsrLabels.materialize(next, acc)

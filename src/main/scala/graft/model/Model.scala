@@ -57,7 +57,8 @@ final case class PagerankOptions(
     hubThreshold: Option[Long] = None,
     /** Route PageRank through the partition-local CSR engine instead of the
       * DataFrame superstep — identical results. Static sweeps run one
-      * packed-primitive shuffle + one job per superstep
+      * packed-primitive shuffle per superstep, with up to
+      * [[graft.pagerank.CsrDynamic.fuseMax]] supersteps fused into one job
       * ([[graft.pagerank.CsrPageRank]]); the dynamic variants (DF / DF-P /
       * DT) run O(frontier) push supersteps ([[graft.pagerank.CsrDynamic]]),
       * and the streaming front end carries the frozen graph across

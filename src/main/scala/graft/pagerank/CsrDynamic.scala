@@ -1,12 +1,13 @@
 package graft.pagerank
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 import graft.model.{PagerankOptions, PagerankStats}
-import CsrPageRank.{CsrBlock, CsrGraph, IdxPartitioner, PartitionValueAcc}
+import CsrPageRank.{contributionSums, pack, CsrBlock, CsrGraph, IdxPartitioner,
+  Msg, PartitionAcc, PushAcc, SparsePush}
 import CsrDynamic._
 
 /** Dynamic Frontier / DF-P PageRank over partition-local CSR blocks — the
@@ -23,7 +24,8 @@ import CsrDynamic._
   *
   * Because S is maintained incrementally, a superstep touches ONLY the
   * frontier: sweep each flagged v (a = C0 + P·S, or the DF-P closed form),
-  * push Δrank·invDeg to its out-neighbors as packed sparse arrays (keeping
+  * push Δrank·invDeg to its out-neighbors through the static sweep's kernel,
+  * [[CsrPageRank.PushAcc]]`.pushRow`, as packed sparse arrays (keeping
   * every S exact), and mark receivers whose sender's relative change
   * exceeded frontierTolerance (DF expansion, pagerank.hxx:688-692; DF-P
   * additionally unflags swept vertices at rest and skips the self edge,
@@ -38,10 +40,11 @@ import CsrDynamic._
   * dst pre-resolved to (part, idx); each touched src's adjacency segment is
   * rewritten (array copy, no shuffle of untouched edges — the reference's
   * amortized lazy adjacency merge, /root/reference/inc/_bitset.hxx:227-262),
-  * while the SAME pass emits S-correction deltas (old-degree terms retracted,
-  * new-degree terms added) and the DF initial marking (out-neighbors in x of
-  * deletion srcs, in y of insertion srcs, pagerank.hxx:631-637) as the first
-  * round of messages.
+  * while the SAME pass pushes S-correction deltas (old-degree terms
+  * retracted, new-degree terms added) and the DF initial marking
+  * (out-neighbors in x of deletion srcs, in y of insertion srcs,
+  * pagerank.hxx:631-637) into a sparse [[CsrPageRank.PushAcc]], whose
+  * messages are the first round's traffic.
   *
   * Numeric contract identical to [[PageRank]]'s DF variants; CsrDynamicSpec
   * asserts allclose vs the DataFrame path and the in-memory oracle.
@@ -57,50 +60,12 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
       * no hashing, no boxing (a boxed HashMap here made a dynamic superstep
       * cost 2-3× a STATIC superstep, erasing the frontier win); beyond it,
       * a packed-key open-address primitive map bounded by the frontier's
-      * out-edges (the 10¹²-vertex regime). */
-    maxDenseBytes: Long = 128L * 1024 * 1024,
-    /** Per-task dense-vs-sparse push choice by frontier size (sparse when a
-      * task's frontier out-edges < |V|/32 — skips the dense buffer's O(|V|)
-      * zero+scan on tiny-frontier supersteps). false = always dense while
-      * maxDenseBytes allows, the pre-round-4 behavior (A/B benching). */
-    adaptivePush: Boolean = true) {
+      * out-edges (the 10¹²-vertex regime). Under the threshold a superstep
+      * task still picks the sparse map when its frontier is small (see
+      * [[runLoop]]). */
+    maxDenseBytes: Long = 128L * 1024 * 1024) {
 
   private val ip = (parts: Int) => new IdxPartitioner(parts)
-
-  /** Contribution sums for the given ranks — one full sweep job (used once
-    * per base graph; batches thereafter keep S exact incrementally). */
-  def computeS(g: CsrGraph, ranks: RDD[Array[Double]]): RDD[Array[Double]] = {
-    val parts = g.vCounts.length
-    val vc = spark.sparkContext.broadcast(g.vCounts)
-    val denseOk = g.n * 8L <= maxDenseBytes
-    val msgs = g.blocks.zipPartitions(ranks, preservesPartitioning = false) {
-      (bIt, rIt) =>
-        val b = bIt.next()
-        val r = rIt.next()
-        val push = PushAcc(vc.value, denseOk, b.dstPart.length)
-        var i = 0
-        while (i < b.srcs.length) {
-          val w = r(i) * b.invDeg(i)
-          var e = b.offsets(i)
-          while (e < b.offsets(i + 1)) {
-            push.add(b.dstPart(e), b.dstIdx(e), w, mark = false)
-            e += 1
-          }
-          i += 1
-        }
-        push.emit()
-    }
-    msgs.partitionBy(ip(parts))
-      .zipPartitions(g.blocks, preservesPartitioning = true) { (mIt, bIt) =>
-        val n = bIt.next().srcs.length
-        val s = new Array[Double](n)
-        mIt.foreach { case (_, (idxs, deltas, _)) =>
-          var j = 0
-          while (j < idxs.length) { s(idxs(j)) += deltas(j); j += 1 }
-        }
-        Iterator.single(s)
-      }
-  }
 
   /** Static run that also returns the carried dynamic state (ranks + S) —
     * the batch loop's base-graph step. */
@@ -132,11 +97,11 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
         Iterator.single(arr)
       }
     ranks.persist(StorageLevel.MEMORY_AND_DISK).count()
-    val s = computeS(g, ranks)
-    val state = ranks.zipPartitions(s, preservesPartitioning = true) {
-      (rIt, sIt) =>
-        val r = rIt.next()
-        Iterator.single(CsrState(r, sIt.next(), new Array[Boolean](r.length)))
+    // exact S for the given ranks — one full sweep job, once per base graph
+    // (batches thereafter keep S exact incrementally)
+    val state = contributionSums(g, ranks, spark.sparkContext.broadcast(g.vCounts),
+      dense = g.n * 8L <= maxDenseBytes) { (s, r) =>
+      CsrState(r, s, new Array[Boolean](r.length))
     }
     state.persist(StorageLevel.MEMORY_AND_DISK)
     // pre-materialization truncation (see applyBatchImpl): carried state
@@ -156,7 +121,7 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
       .partitionBy(new HashPartitioner(parts))
       .zipPartitions(g.blocks, preservesPartitioning = false) { (iIt, bIt) =>
         val b = bIt.next()
-        val p = org.apache.spark.TaskContext.getPartitionId()
+        val p = TaskContext.getPartitionId()
         val buf = new scala.collection.mutable.ArrayBuilder.ofInt
         iIt.foreach { case (id, _) =>
           val i = java.util.Arrays.binarySearch(b.srcs, id)
@@ -252,7 +217,7 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
       .partitionBy(hp)
       .zipPartitions(g.blocks, preservesPartitioning = false) { (eIt, bIt) =>
         val b = bIt.next()
-        val p = org.apache.spark.TaskContext.getPartitionId()
+        val p = TaskContext.getPartitionId()
         eIt.map { case (dst, (src, isDel)) =>
           val di = java.util.Arrays.binarySearch(b.srcs, dst)
           if (di < 0) throw new UniverseGrowthRequired(
@@ -270,15 +235,14 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
     // pass over the block cache per batch (a measurable slice of a
     // small-fraction batch's wall, VERDICT r4 item 4).
     val vc = sc.broadcast(g.vCounts)
-    val nEdgesAcc = new PartitionValueAcc
+    val nEdgesAcc = new PartitionAcc[Long]
     sc.register(nEdgesAcc)
     val spliced = routed.zipPartitions(g.blocks, state,
       preservesPartitioning = true) { (eIt, bIt, stIt) =>
       val b = bIt.next()
       val st = stIt.next()
       val out = spliceBlock(b, st, eIt, vc.value.length)
-      nEdgesAcc.add((org.apache.spark.TaskContext.getPartitionId(),
-        out._1.offsets.last.toDouble))
+      nEdgesAcc.add((TaskContext.getPartitionId(), out._1.offsets.last.toLong))
       Iterator.single(out)
     }.persist(StorageLevel.MEMORY_AND_DISK)
     spliced.count()
@@ -297,7 +261,7 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
     // permanently-live deps per batch, 76k tmpfs files and per-superstep
     // driver overhead growing 74→450 ms across 45 endurance batches).
     newBlocks.localCheckpoint()
-    val nEdges = nEdgesAcc.value.values.sum.toLong
+    val nEdges = nEdgesAcc.value.values.sum
     val newG = CsrGraph(newBlocks, g.vCounts, g.n, nEdges)
 
     // Loop state: (state with patches NOT yet applied, patch messages as the
@@ -358,7 +322,6 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
     val pTol = opts.pruneTolerance
     val denseOk = g.n * 8L <= maxDenseBytes
     val nGlob = g.n // primitive capture — never close over `g` (holds RDDs)
-    val adapt = adaptivePush
     val fixedF = fixedFrontier
     var iter = 0
     var residual = Double.MaxValue
@@ -375,8 +338,8 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
       * the kernel safe to run inside a ShuffleMapStage (block fusion
       * below), where Spark may re-count updates on stage retry. */
     def defineStep(prev: RDD[(CsrState, Array[(Int, Msg)])], iterNo: Int)
-        : (RDD[(CsrState, Array[(Int, Msg)])], PartitionVecAcc) = {
-      val statAcc = new PartitionVecAcc
+        : (RDD[(CsrState, Array[(Int, Msg)])], PartitionAcc[Array[Double]]) = {
+      val statAcc = new PartitionAcc[Array[Double]]
       sc.register(statAcc)
       if (CsrDynamic.trackDeps)
         CsrDynamic.trackLabel =
@@ -387,7 +350,7 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
         val tTask0 = System.nanoTime()
         val st0 = stIt.next()
         val b = bIt.next()
-        val p = org.apache.spark.TaskContext.getPartitionId()
+        val p = TaskContext.getPartitionId()
         // Drain the (few, packed) incoming message batches first so the
         // clone decisions below can see what this task will actually touch.
         val msgsArr = mIt.toArray
@@ -416,7 +379,7 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
           // supersteps most partitions take this path, skipping three
           // O(|V_p|) array clones + the push buffer's O(|V_p|) zero/scan
           // per task — a dominant share of the in-stage per-task constant
-          // the r5 DynProbe decomposition measured (VERDICT r5 "Next" #1).
+          // the r5 stage decomposition measured (VERDICT r5 "Next" #1).
           // INVARIANT: fe0 == 0 means "no flagged vertex" only because every
           // CSR vertex has at least one out-edge (its self-loop): build()
           // makes every vertex a src, and spliceBlock's require refuses a
@@ -460,15 +423,14 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
         // never a boxed hash map in the per-edge hot loop. The dense
         // buffer costs O(|V|) zero-on-acquire + O(|V|) emit scan per TASK,
         // which dominates the whole superstep when the frontier is small
-        // (measured via DynProbe: it was most of the sweep stage at
+        // (measured by a stage breakdown: it was most of the sweep stage at
         // 12M-vertex scale) — so the choice is per-task: sparse only when
         // this task's frontier out-edges (exact upper bound on its pushes,
         // counted post-message-apply, pre-prune) are under |V|/32, where
         // the open-address map is unambiguously cheaper; near-full sweeps
         // (the expansion phase — most supersteps of a converging run) keep
         // the dense buffer and its ~2 ns/edge adds.
-        val push = PushAcc(vc.value,
-          denseOk && (!adapt || fe0 * 32L >= nGlob),
+        val push = PushAcc(vc.value, denseOk && fe0 * 32L >= nGlob,
           math.min(b.dstPart.length.toLong, math.max(16L, fe0)).toInt)
         var maxD = 0.0
         var nActive = 0L
@@ -488,16 +450,10 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
             if (d != 0.0) {
               st.rank(i) = a
               val dw = (a - r0) * inv
-              // fixed-frontier (DT) mode never expands the affected set
-              val mark = !fixedF && relD > fTol
-              var e = b.offsets(i)
-              while (e < b.offsets(i + 1)) {
-                val tp = b.dstPart(e)
-                val ti = b.dstIdx(e)
-                // DF-P expansion skips the self edge (v != u)
-                push.add(tp, ti, dw, mark && !(prune && tp == p && ti == i))
-                e += 1
-              }
+              // fixed-frontier (DT) mode never expands the affected set;
+              // DF-P expansion skips the self edge (v != u)
+              push.pushRow(b, i, dw, mark = !fixedF && relD > fTol,
+                selfPart = if (prune) p else -1)
             }
             if (st.flag(i)) {
               nActive += 1
@@ -523,7 +479,7 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
     // job. Each intermediate superstep's kernel then executes as the MAP
     // stage of its successor's message shuffle — kernel + push emit +
     // shuffle write in a single stage — instead of paying a separate
-    // 32-task message-map stage plus a job gap per superstep (DynProbe at
+    // 32-task message-map stage plus a job gap per superstep (measured at
     // 4M pages: ~38 ms of a ~165 ms small-frontier superstep wall). The
     // fused supersteps' states persist as a side effect of those map
     // stages, so the narrow zip consumer of each state reads it from
@@ -550,7 +506,7 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
               (opts.maxIterations - iter).toDouble)).toInt)
         }
       val steps = new scala.collection.mutable.ArrayBuffer[
-        (RDD[(CsrState, Array[(Int, Msg)])], PartitionVecAcc)](block)
+        (RDD[(CsrState, Array[(Int, Msg)])], PartitionAcc[Array[Double]])](block)
       var chain = cur
       var k = 0
       while (k < block) {
@@ -688,16 +644,12 @@ object CsrDynamic {
   final case class CsrState(rank: Array[Double], s: Array[Double],
       flag: Array[Boolean])
 
-  /** Packed message batch for one target partition:
-    * (local idxs, S deltas, marked local idxs). */
-  type Msg = (Array[Int], Array[Double], Array[Int])
-
   /** Shuffle a superstep's packed message batches to their target
     * partitions on the SORT-path writer, scoped to this one shuffle. With
     * ≤ bypassMergeThreshold (200) reduce partitions Spark's bypass writer
     * opens one compressed stream per reduce partition per MAP task — on the
     * dynamic loop's near-empty message data that per-file setup was 46.7 s
-    * of 48.4 s executor time across one 20-superstep run (DynProbe). A
+    * of 48.4 s executor time across one 20-superstep run (measured). A
     * map-side combine makes the shuffle ineligible for bypass, routing it
     * to the sort path's single output file per map task. The combine is
     * structurally inert map-side — each map task holds ONE partition state
@@ -745,193 +697,6 @@ object CsrDynamic {
     (live, total, labels.toSeq)
   }
 
-  /** Retry-safe per-partition stats-vector accumulator (overwrite-
-    * idempotent): one task result carries one update holding all of a
-    * superstep's per-partition scalars — [maxDelta, active, flagEdges,
-    * marks, taskNanos] — instead of five separate accumulators. */
-  final class PartitionVecAcc
-      extends org.apache.spark.util.AccumulatorV2[(Int, Array[Double]), Map[Int, Array[Double]]] {
-    private var m = Map.empty[Int, Array[Double]]
-    def isZero: Boolean = m.isEmpty
-    def copy(): PartitionVecAcc = { val a = new PartitionVecAcc; a.m = m; a }
-    def reset(): Unit = m = Map.empty
-    def add(x: (Int, Array[Double])): Unit = m += x
-    def merge(o: org.apache.spark.util.AccumulatorV2[(Int, Array[Double]), Map[Int, Array[Double]]]): Unit =
-      m ++= o.value
-    def value: Map[Int, Array[Double]] = m
-  }
-
-  def pack(part: Int, idx: Int): Long =
-    (part.toLong << 32) | (idx.toLong & 0xffffffffL)
-
-  // ------------------------------------------------------------ push sweeps
-
-  /** Per-task accumulator for pushed S-deltas + expansion marks, keyed by
-    * (target partition, local index). Two regimes, mirroring
-    * [[CsrPageRank]]'s sweep buffers:
-    *  - dense: |V|-wide thread-local primitive arrays addressed by the
-    *    global offset of (part, idx) — no hashing, no boxing; buffers are
-    *    reused across tasks on the same executor thread (zeroed on acquire,
-    *    which keeps them safe after a failed task);
-    *  - sparse: a growing packed-key open-address primitive map bounded by
-    *    the frontier's out-edge count — |V|-independent, for the
-    *    10¹²-vertex regime. */
-  private[pagerank] sealed trait PushAcc {
-    def add(part: Int, idx: Int, dw: Double, mark: Boolean): Unit
-    /** Number of DISTINCT marked targets so far. */
-    def markCount: Int
-    /** Per-target-partition packed messages (empty partitions skipped). */
-    def emit(): Iterator[(Int, Msg)]
-  }
-
-  private[pagerank] object PushAcc {
-    def apply(vc: Array[Int], dense: Boolean, edgeBound: Int): PushAcc =
-      if (dense) new DensePush(vc) else new SparsePush(vc, edgeBound)
-  }
-
-  private val dBuf = new ThreadLocal[Array[Double]]
-  private val mBuf = new ThreadLocal[Array[Boolean]]
-  private def threadDoubles(n: Int): Array[Double] = {
-    var a = dBuf.get()
-    if (a == null || a.length < n) { a = new Array[Double](n); dBuf.set(a) }
-    else java.util.Arrays.fill(a, 0, n, 0.0)
-    a
-  }
-  private def threadBools(n: Int): Array[Boolean] = {
-    var a = mBuf.get()
-    if (a == null || a.length < n) { a = new Array[Boolean](n); mBuf.set(a) }
-    else java.util.Arrays.fill(a, 0, n, false)
-    a
-  }
-
-  private final class DensePush(vc: Array[Int]) extends PushAcc {
-    private val parts = vc.length
-    private val base = new Array[Int](parts + 1)
-    locally {
-      var p = 0
-      while (p < parts) { base(p + 1) = base(p) + vc(p); p += 1 }
-    }
-    private val acc = threadDoubles(base(parts))
-    private val marked = threadBools(base(parts))
-    private var nMarks = 0
-
-    def add(part: Int, idx: Int, dw: Double, mark: Boolean): Unit = {
-      val o = base(part) + idx
-      acc(o) += dw
-      if (mark && !marked(o)) { marked(o) = true; nMarks += 1 }
-    }
-    def markCount: Int = nMarks
-    def emit(): Iterator[(Int, Msg)] =
-      (0 until parts).iterator.flatMap { q =>
-        val lo = base(q); val hi = base(q + 1)
-        var nd = 0; var nm = 0
-        var k = lo
-        while (k < hi) {
-          if (acc(k) != 0.0) nd += 1
-          if (marked(k)) nm += 1
-          k += 1
-        }
-        if (nd == 0 && nm == 0) Iterator.empty
-        else {
-          val idxs = new Array[Int](nd)
-          val vals = new Array[Double](nd)
-          val marks = new Array[Int](nm)
-          var di = 0; var mi = 0
-          k = lo
-          while (k < hi) {
-            if (acc(k) != 0.0) { idxs(di) = k - lo; vals(di) = acc(k); di += 1 }
-            if (marked(k)) { marks(mi) = k - lo; mi += 1 }
-            k += 1
-          }
-          Iterator.single((q, (idxs, vals, marks): Msg))
-        }
-      }
-  }
-
-  /** Growing open-address map (linear probing, power-of-two capacity,
-    * doubling rehash at 50% load) over packed (part,idx) keys with a
-    * parallel mark bit — all primitive arrays. */
-  private final class SparsePush(vc: Array[Int], edgeBound: Int)
-      extends PushAcc {
-    // start at ~1/8 of the partition's edge bound (frontier sweeps are
-    // usually far sparser than a full sweep), grow by doubling
-    private var cap = java.lang.Integer.highestOneBit(
-      math.min(1 << 20, math.max(1 << 12, edgeBound / 8)))
-    private var keys = new Array[Long](cap)
-    private var vals = new Array[Double](cap)
-    private var used = new Array[Boolean](cap)
-    private var marked = new Array[Boolean](cap)
-    private var size = 0
-    private var nMarks = 0
-
-    private def slot(key: Long, ks: Array[Long], us: Array[Boolean],
-        c: Int): Int = {
-      var h = java.lang.Long.hashCode(key * 0x9e3779b97f4a7c15L) & (c - 1)
-      while (us(h) && ks(h) != key) h = (h + 1) & (c - 1)
-      h
-    }
-    private def grow(): Unit = {
-      val nc = cap << 1
-      val nk = new Array[Long](nc)
-      val nv = new Array[Double](nc)
-      val nu = new Array[Boolean](nc)
-      val nm = new Array[Boolean](nc)
-      var h = 0
-      while (h < cap) {
-        if (used(h)) {
-          val s = slot(keys(h), nk, nu, nc)
-          nk(s) = keys(h); nv(s) = vals(h); nu(s) = true; nm(s) = marked(h)
-        }
-        h += 1
-      }
-      cap = nc; keys = nk; vals = nv; used = nu; marked = nm
-    }
-
-    def add(part: Int, idx: Int, dw: Double, mark: Boolean): Unit = {
-      if (size * 2 >= cap) grow()
-      val key = pack(part, idx)
-      val h = slot(key, keys, used, cap)
-      if (!used(h)) { used(h) = true; keys(h) = key; size += 1 }
-      vals(h) += dw
-      if (mark && !marked(h)) { marked(h) = true; nMarks += 1 }
-    }
-    def markCount: Int = nMarks
-    def emit(): Iterator[(Int, Msg)] = {
-      val parts = vc.length
-      val nd = new Array[Int](parts)
-      val nm = new Array[Int](parts)
-      var h = 0
-      while (h < cap) {
-        if (used(h)) {
-          val q = (keys(h) >>> 32).toInt
-          if (vals(h) != 0.0) nd(q) += 1
-          if (marked(h)) nm(q) += 1
-        }
-        h += 1
-      }
-      val outI = Array.tabulate(parts)(q => new Array[Int](nd(q)))
-      val outV = Array.tabulate(parts)(q => new Array[Double](nd(q)))
-      val outM = Array.tabulate(parts)(q => new Array[Int](nm(q)))
-      val ci = new Array[Int](parts)
-      val cm = new Array[Int](parts)
-      h = 0
-      while (h < cap) {
-        if (used(h)) {
-          val q = (keys(h) >>> 32).toInt
-          val li = (keys(h) & 0xffffffffL).toInt
-          if (vals(h) != 0.0) {
-            outI(q)(ci(q)) = li; outV(q)(ci(q)) = vals(h); ci(q) += 1
-          }
-          if (marked(h)) { outM(q)(cm(q)) = li; cm(q) += 1 }
-        }
-        h += 1
-      }
-      (0 until parts).iterator
-        .filter(q => nd(q) > 0 || nm(q) > 0)
-        .map(q => (q, (outI(q), outV(q), outM(q)): Msg))
-    }
-  }
-
   /** Home partition of a vertex id under Spark's HashPartitioner(parts). */
   def homePart(id: Long, parts: Int): Int = {
     val h = (id ^ (id >>> 32)).toInt
@@ -939,33 +704,9 @@ object CsrDynamic {
     if (m < 0) m + parts else m
   }
 
-  /** Bucket a packed (part,idx)→delta map (+ marked keys) into per-target
-    * packed arrays. */
-  def emitPacked(acc: java.util.HashMap[Long, Double],
-      marks: java.util.Set[java.lang.Long], parts: Int)
-      : Iterator[(Int, Msg)] = {
-    val idxBuf = Array.fill(parts)(new scala.collection.mutable.ArrayBuilder.ofInt)
-    val valBuf = Array.fill(parts)(new scala.collection.mutable.ArrayBuilder.ofDouble)
-    val markBuf = Array.fill(parts)(new scala.collection.mutable.ArrayBuilder.ofInt)
-    val it = acc.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val q = (e.getKey >>> 32).toInt
-      idxBuf(q) += (e.getKey & 0xffffffffL).toInt
-      valBuf(q) += e.getValue
-    }
-    val mit = marks.iterator()
-    while (mit.hasNext) {
-      val k = mit.next().longValue()
-      markBuf((k >>> 32).toInt) += (k & 0xffffffffL).toInt
-    }
-    (0 until parts).iterator.map { q =>
-      (q, (idxBuf(q).result(), valBuf(q).result(), markBuf(q).result()))
-    }.filter { case (_, (i, _, m)) => i.nonEmpty || m.nonEmpty }
-  }
-
-  /** Rewrite one partition's CSR block with its batch slice; emit S
-    * corrections and the DF initial marking as packed messages.
+  /** Rewrite one partition's CSR block with its batch slice; push S
+    * corrections and the DF initial marking through a [[SparsePush]] and
+    * return its packed messages.
     *
     * Per touched src u (local index i):
     *  - retract old terms: Δ −= rank(u)·invDegOld to every OLD neighbor
@@ -1008,8 +749,8 @@ object CsrDynamic {
     val outP = new scala.collection.mutable.ArrayBuilder.ofInt
     val outI = new scala.collection.mutable.ArrayBuilder.ofInt
     val newInv = new Array[Double](n)
-    val patch = new java.util.HashMap[Long, Double]()
-    val marks = new java.util.HashSet[java.lang.Long]()
+    // starts at its minimum capacity and grows with the touched targets
+    val patch = new SparsePush(parts, edgeBound = 0)
     var i = 0
     var w = 0
     while (i < n) {
@@ -1054,13 +795,10 @@ object CsrDynamic {
         newInv(i) = invNew
         val r = st.rank(i)
         // retract old contributions, add new (also covers pure degree change)
-        oldKeys.forEach { k =>
-          patch.merge(k, -r * invOld, (a: Double, x: Double) => a + x)
-          if (removed) marks.add(k) // mark out-nbrs of u in x on deletion
-        }
+        // and mark out-nbrs of u in x on deletion, in y on insertion
+        oldKeys.forEach(k => patch.add(k, -r * invOld, removed))
         newKeys.forEach { k =>
-          patch.merge(k, r * invNew, (a: Double, x: Double) => a + x)
-          if (hadIns) marks.add(k) // mark out-nbrs of u in y on insertion
+          patch.add(k, r * invNew, hadIns)
           outP += (k >>> 32).toInt
           outI += (k & 0xffffffffL).toInt
         }
@@ -1070,6 +808,6 @@ object CsrDynamic {
     }
     newOffsets(n) = w
     val nb = CsrBlock(b.srcs, newInv, newOffsets, outP.result(), outI.result())
-    (nb, cleared(st), emitPacked(patch, marks, parts).toArray)
+    (nb, cleared(st), patch.emit().toArray)
   }
 }

@@ -1,10 +1,13 @@
 package graft.pagerank
 
-import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.{HashPartitioner, Partitioner, TaskContext}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.AccumulatorV2
+
+import scala.reflect.ClassTag
 
 import graft.model.{PagerankOptions, PagerankStats}
 
@@ -21,18 +24,23 @@ import graft.model.{PagerankOptions, PagerankStats}
   * vector, partition-blocked), and runs each superstep as ONE shuffle of
   * packed primitive arrays, with a block of supersteps fused into one job:
   *
-  *   sweep (local):   for each src i: w = rank(i)·invDeg(i); scatter w into
-  *                    a per-destination-partition accumulator indexed by the
-  *                    PRE-RESOLVED (dstPart, dstIdx) of every out-edge —
+  *   sweep (local):   for each src i: w = rank(i)·invDeg(i); `pushRow` w
+  *                    into the task's [[CsrPageRank.PushAcc]], indexed by
+  *                    the PRE-RESOLVED (dstPart, dstIdx) of every out-edge —
   *                    no hashing, no boxing, no codegen in the hot loop;
-  *   exchange:        one (Array[Int], Array[Double]) sparse pair per
-  *                    (srcPart → dstPart) — #parts² packed records total,
+  *   exchange:        one packed (idxs, deltas) message per non-empty
+  *                    (srcPart → dstPart) — ≤ #parts² records total,
   *                    pre-combined map-side (hub in-degree skew is absorbed
   *                    here: a hub receives ≤ parts partial entries);
-  *   combine+resid:   add incoming sparse arrays into a dense block,
-  *                    apply a[v] = C0 + P·Σ, fold the L∞ delta into a
-  *                    max-accumulator (retry-safe: max is idempotent) —
-  *                    all in the same task that materializes the new block.
+  *   combine+resid:   add incoming sparse arrays into a dense block
+  *                    ([[CsrPageRank.contributionSums]]), apply
+  *                    a[v] = C0 + P·Σ, fold the L∞ delta into a per-partition
+  *                    overwrite accumulator (retry-safe) — all in the same
+  *                    task that materializes the new block.
+  *
+  * `PushAcc.pushRow` is the one accumulation kernel of every CSR PageRank
+  * loop: this sweep, the S initialisation of [[CsrDynamic]], its DF/DF-P
+  * supersteps and (through the sparse map's per-key `add`) its batch splice.
   *
   * Semantics are EXACTLY the DataFrame path's (Jacobi full sweep, same
   * numeric contract): CsrPageRankSpec asserts allclose 1e-12 and equal
@@ -123,7 +131,7 @@ class CsrPageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()
       .zipPartitions(adj, preservesPartitioning = false) { (eIt, aIt) =>
         val a = aIt.next()
         val srcs = a._1
-        val p = TaskContextHolder.partitionId()
+        val p = TaskContext.getPartitionId()
         eIt.map { case (dst, (srcPart, ePos)) =>
           val idx = java.util.Arrays.binarySearch(srcs, dst)
           require(idx >= 0, s"dst $dst has no vertex entry (missing self-loop?)")
@@ -174,10 +182,6 @@ class CsrPageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()
       t0: Long = System.nanoTime())
       : (PagerankRun, RDD[Array[Double]], Double, Int) = {
     val sc = spark.sparkContext
-    // The graph carries its own partition count — a CsrGraph built under a
-    // different parallelism setting must still sweep correctly.
-    val parts = g.vCounts.length
-    val ip = new IdxPartitioner(parts)
     if (g.n == 0) {
       import spark.implicits._
       return (PagerankRun(Seq.empty[(Long, Double)].toDF("id", "rank"),
@@ -187,9 +191,9 @@ class CsrPageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()
     val n = g.n
     val c0 = (1 - P) / n
     val init = 1.0 / n
-    // Dense sweep buffers cover all |V| per task when cheap; above the
-    // threshold fall back to per-edge-bounded packed-key open hashing
-    // (scales with edges/partition, not |V| — the 10¹²-vertex regime).
+    // Dense push buffers cover all |V| per task when cheap; above the
+    // threshold the push falls back to per-edge-bounded packed-key open
+    // hashing (scales with edges/partition, not |V| — the 10¹²-vertex regime).
     val denseOk = n * 8L <= maxDenseBytes
     val vCounts = sc.broadcast(g.vCounts)
 
@@ -210,47 +214,30 @@ class CsrPageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()
     val damp = P
     val useL1 = opts.useL1Residual
 
-    /** Define ONE superstep lazily — no action here. Its residual lands in
-      * an unnamed (registry-free) per-partition accumulator, overwrite-
-      * idempotent, so the step may run inside a ShuffleMapStage of a fused
-      * block where Spark can re-run a task. */
+    /** Define ONE superstep lazily — no action here: the contribution sums
+      * of `prev`, overwritten in place with the new ranks. Its residual lands in an unnamed (registry-free) per-partition
+      * accumulator, overwrite-idempotent, so the step may run inside a
+      * ShuffleMapStage of a fused block where Spark can re-run a task. */
     def defineStep(prev: RDD[Array[Double]])
-        : (RDD[Array[Double]], PartitionValueAcc) = {
-      val acc = new PartitionValueAcc
+        : (RDD[Array[Double]], PartitionAcc[Double]) = {
+      val acc = new PartitionAcc[Double]
       sc.register(acc)
-      val contribs: RDD[(Int, (Array[Int], Array[Double]))] =
-        g.blocks.zipPartitions(prev, preservesPartitioning = false) {
-          (bIt, rIt) =>
-            val b = bIt.next()
-            val r = rIt.next()
-            val vc = vCounts.value
-            if (denseOk) sweepDense(b, r, vc)
-            else sweepSparse(b, r, vc)
+      val next = contributionSums(g, prev, vCounts, denseOk) { (a, old) =>
+        var maxD = 0.0
+        var sumD = 0.0
+        var i = 0
+        while (i < old.length) {
+          val nr = c0 + damp * a(i)
+          val d = math.abs(nr - old(i))
+          if (d > maxD) maxD = d
+          sumD += d
+          a(i) = nr
+          i += 1
         }
-      val next = contribs.partitionBy(ip)
-        .zipPartitions(prev, preservesPartitioning = true) { (cIt, rIt) =>
-          val old = rIt.next()
-          val acc2 = new Array[Double](old.length)
-          cIt.foreach { case (_, (idxs, vals)) =>
-            var j = 0
-            while (j < idxs.length) { acc2(idxs(j)) += vals(j); j += 1 }
-          }
-          var maxD = 0.0
-          var sumD = 0.0
-          var i = 0
-          while (i < old.length) {
-            val nr = c0 + damp * acc2(i)
-            val d = math.abs(nr - old(i))
-            if (d > maxD) maxD = d
-            sumD += d
-            acc2(i) = nr
-            i += 1
-          }
-          if (measureResidual)
-            acc.add((TaskContextHolder.partitionId(),
-              if (useL1) sumD else maxD))
-          Iterator.single(acc2)
-        }
+        if (measureResidual)
+          acc.add((TaskContext.getPartitionId(), if (useL1) sumD else maxD))
+        a
+      }
       next.persist(StorageLevel.MEMORY_AND_DISK)
       (next, acc)
     }
@@ -267,7 +254,7 @@ class CsrPageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()
       val blockT0 = System.nanoTime()
       val block = math.min(CsrDynamic.fuseMax, opts.maxIterations - iter)
       val steps = new scala.collection.mutable.ArrayBuffer[
-        (RDD[Array[Double]], PartitionValueAcc)](block)
+        (RDD[Array[Double]], PartitionAcc[Double])](block)
       var chain = ranks
       while (steps.length < block) {
         val s = defineStep(chain)
@@ -359,133 +346,275 @@ object CsrPageRank {
     override def hashCode(): Int = parts
   }
 
-  /** Retry-safe per-partition scalar accumulator: one value PER PARTITION,
-    * merged by overwrite (idempotent under task re-execution — a retried
-    * partition just rewrites its slot, where a `LongAccumulator` would add
-    * twice). Readers fold the slots (max or sum) themselves. */
-  final class PartitionValueAcc
-      extends AccumulatorV2[(Int, Double), Map[Int, Double]] {
-    private var m = Map.empty[Int, Double]
+  /** Retry-safe per-partition accumulator: one value PER PARTITION, merged
+    * by overwrite (idempotent under task re-execution — a retried partition
+    * just rewrites its slot, where a `LongAccumulator` would add twice), so
+    * a kernel that feeds it may run inside a fused ShuffleMapStage. Readers
+    * fold the slots (max or sum) themselves. */
+  final class PartitionAcc[T] extends AccumulatorV2[(Int, T), Map[Int, T]] {
+    private var m = Map.empty[Int, T]
     def isZero: Boolean = m.isEmpty
-    def copy(): PartitionValueAcc = { val a = new PartitionValueAcc; a.m = m; a }
+    def copy(): PartitionAcc[T] = { val a = new PartitionAcc[T]; a.m = m; a }
     def reset(): Unit = m = Map.empty
-    def add(x: (Int, Double)): Unit = m += x
-    def merge(o: AccumulatorV2[(Int, Double), Map[Int, Double]]): Unit =
-      m ++= o.value
-    def value: Map[Int, Double] = m
+    def add(x: (Int, T)): Unit = m += x
+    def merge(o: AccumulatorV2[(Int, T), Map[Int, T]]): Unit = m ++= o.value
+    def value: Map[Int, T] = m
   }
 
-  /** Executor-thread-local dense buffer: a |V|-wide Array[Double] per task
-    * would otherwise be ~|V|·8B fresh garbage per task per superstep (3 GB/
+  /** Packed message batch for one target partition:
+    * (local idxs, S deltas, marked local idxs). */
+  type Msg = (Array[Int], Array[Double], Array[Int])
+
+  def pack(part: Int, idx: Int): Long =
+    (part.toLong << 32) | (idx.toLong & 0xffffffffL)
+
+  /** Contribution sums S(v) = Σ_{u→v} rank(u)·invDeg(u) for rank blocks
+    * aligned to `g.blocks`, defined lazily: one full sweep through
+    * [[PushAcc.pushRow]], one shuffle to the target partitions (the graph's
+    * own partition count, so a graph built under a different parallelism
+    * still sweeps correctly), then one dense sum per partition, zipped
+    * narrowly with the partition's own rank block and handed to
+    * `f(sums, ranks)` — fresh sums per task, so `f` may overwrite them in
+    * place. The sweep zips with `preservesPartitioning = false`: a
+    * partitioned input would make `partitionBy` skip the shuffle (see
+    * [[IdxPartitioner]]). */
+  def contributionSums[T: ClassTag](g: CsrGraph, ranks: RDD[Array[Double]],
+      vc: Broadcast[Array[Int]], dense: Boolean)(
+      f: (Array[Double], Array[Double]) => T): RDD[T] =
+    g.blocks.zipPartitions(ranks, preservesPartitioning = false) {
+      (bIt, rIt) =>
+        val b = bIt.next()
+        val r = rIt.next()
+        val push = PushAcc(vc.value, dense, b.dstPart.length)
+        var i = 0
+        while (i < b.srcs.length) {
+          push.pushRow(b, i, r(i) * b.invDeg(i), mark = false, selfPart = -1)
+          i += 1
+        }
+        push.emit()
+    }.partitionBy(new IdxPartitioner(g.vCounts.length))
+      .zipPartitions(ranks, preservesPartitioning = true) { (mIt, rIt) =>
+        val r = rIt.next()
+        val s = new Array[Double](r.length)
+        mIt.foreach { case (_, (idxs, deltas, _)) =>
+          var j = 0
+          while (j < idxs.length) { s(idxs(j)) += deltas(j); j += 1 }
+        }
+        Iterator.single(f(s, r))
+      }
+
+  // ------------------------------------------------------------ push kernel
+
+  /** Per-task accumulator for pushed S-deltas + expansion marks, keyed by
+    * (target partition, local index) — the one accumulation path of every
+    * CSR PageRank loop (static sweep, S initialisation, DF/DF-P supersteps,
+    * batch splice). Two regimes:
+    *  - dense: a |V|-wide thread-local primitive array addressed by the
+    *    global offset of (part, idx) — no hashing, no boxing; buffers are
+    *    reused across tasks on the same executor thread (zeroed on acquire,
+    *    which keeps them safe after a failed task);
+    *  - sparse: a growing packed-key open-address primitive map bounded by
+    *    the pushed out-edge count — |V|-independent, for the 10¹²-vertex
+    *    regime. */
+  private[pagerank] sealed trait PushAcc {
+    /** Add `dw` to every out-edge target of local vertex `i` of `b`. With
+      * `mark`, also mark each target except the self edge (selfPart, i);
+      * `selfPart = -1` skips none (DF), DF-P passes its own partition. */
+    def pushRow(b: CsrBlock, i: Int, dw: Double, mark: Boolean,
+        selfPart: Int): Unit
+    /** Number of DISTINCT marked targets so far. */
+    def markCount: Int
+    /** Per-target-partition packed messages (empty partitions skipped). */
+    def emit(): Iterator[(Int, Msg)]
+  }
+
+  private[pagerank] object PushAcc {
+    def apply(vc: Array[Int], dense: Boolean, edgeBound: Int): PushAcc =
+      if (dense) new DensePush(vc) else new SparsePush(vc.length, edgeBound)
+  }
+
+  /** Executor-thread-local dense buffers: a |V|-wide array per task would
+    * otherwise be ~|V|·8B fresh garbage per task per superstep (3 GB/
     * superstep at 12M vertices × 32 cores) — GC churn that flattens core
     * scaling. Executor threads are reused, so each thread zeroes and reuses
     * one buffer (zeroing is a linear write, ~10 ms for 100 MB). */
-  private val denseBuf = new ThreadLocal[Array[Double]]
-
-  private def threadBuffer(size: Int): Array[Double] = {
-    var a = denseBuf.get()
-    if (a == null || a.length < size) {
-      a = new Array[Double](size)
-      denseBuf.set(a)
-    } else {
-      java.util.Arrays.fill(a, 0, size, 0.0)
-    }
+  private val dBuf = new ThreadLocal[Array[Double]]
+  private val mBuf = new ThreadLocal[Array[Boolean]]
+  private def threadDoubles(n: Int): Array[Double] = {
+    var a = dBuf.get()
+    if (a == null || a.length < n) { a = new Array[Double](n); dBuf.set(a) }
+    else java.util.Arrays.fill(a, 0, n, 0.0)
+    a
+  }
+  private def threadBools(n: Int): Array[Boolean] = {
+    var a = mBuf.get()
+    if (a == null || a.length < n) { a = new Array[Boolean](n); mBuf.set(a) }
+    else java.util.Arrays.fill(a, 0, n, false)
     a
   }
 
-  /** Sweep with one dense |V|-wide accumulator, then sparsify per target
-    * partition. No hashing: dst is pre-resolved to (part, idx), and the
-    * dense buffer is addressed by the GLOBAL offset of (part, idx). */
-  private def sweepDense(b: CsrBlock, r: Array[Double], vc: Array[Int])
-      : Iterator[(Int, (Array[Int], Array[Double]))] = {
-    val parts = vc.length
-    val base = new Array[Int](parts + 1)
-    var p = 0
-    while (p < parts) { base(p + 1) = base(p) + vc(p); p += 1 }
-    val acc = threadBuffer(base(parts))
-    var i = 0
-    while (i < b.srcs.length) {
-      val w = r(i) * b.invDeg(i)
+  private final class DensePush(vc: Array[Int]) extends PushAcc {
+    private val parts = vc.length
+    private val base = new Array[Int](parts + 1)
+    locally {
+      var p = 0
+      while (p < parts) { base(p + 1) = base(p) + vc(p); p += 1 }
+    }
+    private val acc = threadDoubles(base(parts))
+    // acquired on the first marked push: a sweep that never marks (static,
+    // S initialisation) skips its O(|V|) zero and emit scan
+    private var marked: Array[Boolean] = null
+    private var nMarks = 0
+
+    def pushRow(b: CsrBlock, i: Int, dw: Double, mark: Boolean,
+        selfPart: Int): Unit = {
+      val acc = this.acc
+      val base = this.base
+      val dstPart = b.dstPart
+      val dstIdx = b.dstIdx
       var e = b.offsets(i)
       val end = b.offsets(i + 1)
-      while (e < end) {
-        acc(base(b.dstPart(e)) + b.dstIdx(e)) += w
-        e += 1
+      if (!mark) {
+        while (e < end) { acc(base(dstPart(e)) + dstIdx(e)) += dw; e += 1 }
+      } else {
+        if (marked == null) marked = threadBools(base(parts))
+        val mk = marked
+        val self = if (selfPart < 0) -1 else base(selfPart) + i
+        while (e < end) {
+          val o = base(dstPart(e)) + dstIdx(e)
+          acc(o) += dw
+          if (o != self && !mk(o)) { mk(o) = true; nMarks += 1 }
+          e += 1
+        }
       }
-      i += 1
     }
-    (0 until parts).iterator.map { q =>
-      val lo = base(q); val hi = base(q + 1)
-      var nz = 0
-      var k = lo
-      while (k < hi) { if (acc(k) != 0.0) nz += 1; k += 1 }
-      val idxs = new Array[Int](nz)
-      val vals = new Array[Double](nz)
-      var o = 0
-      k = lo
-      while (k < hi) {
-        if (acc(k) != 0.0) { idxs(o) = k - lo; vals(o) = acc(k); o += 1 }
-        k += 1
+    def markCount: Int = nMarks
+    def emit(): Iterator[(Int, Msg)] =
+      (0 until parts).iterator.flatMap { q =>
+        val acc = this.acc
+        val mk = marked
+        val lo = base(q); val hi = base(q + 1)
+        var nd = 0; var nm = 0
+        var k = lo
+        while (k < hi) { if (acc(k) != 0.0) nd += 1; k += 1 }
+        if (mk != null) {
+          k = lo
+          while (k < hi) { if (mk(k)) nm += 1; k += 1 }
+        }
+        if (nd == 0 && nm == 0) Iterator.empty
+        else {
+          val idxs = new Array[Int](nd)
+          val vals = new Array[Double](nd)
+          var di = 0
+          k = lo
+          while (k < hi) {
+            if (acc(k) != 0.0) { idxs(di) = k - lo; vals(di) = acc(k); di += 1 }
+            k += 1
+          }
+          val marks = new Array[Int](nm)
+          var mi = 0
+          k = lo
+          while (mi < nm) {
+            if (mk(k)) { marks(mi) = k - lo; mi += 1 }
+            k += 1
+          }
+          Iterator.single((q, (idxs, vals, marks): Msg))
+        }
       }
-      (q, (idxs, vals))
-    }
   }
 
-  /** Sweep with a packed-key (part<<32|idx) open-address map — memory bound
-    * by this partition's distinct dsts (≤ its edge count), independent of
-    * |V|. */
-  private def sweepSparse(b: CsrBlock, r: Array[Double], vc: Array[Int])
-      : Iterator[(Int, (Array[Int], Array[Double]))] = {
-    val m = b.dstPart.length
-    var cap = java.lang.Integer.highestOneBit(math.max(16, m * 2 - 1)) * 2
-    var keys = new Array[Long](cap)
-    var vals = new Array[Double](cap)
-    var used = new Array[Boolean](cap)
-    var size = 0
-    def insert(key: Long, v: Double): Unit = {
-      var h = (java.lang.Long.hashCode(key * 0x9e3779b97f4a7c15L)) & (cap - 1)
-      while (used(h) && keys(h) != key) h = (h + 1) & (cap - 1)
+  /** Growing open-address map (linear probing, power-of-two capacity,
+    * doubling rehash at 50% load) over packed (part,idx) keys with a
+    * parallel mark bit — all primitive arrays. The batch splice pushes its
+    * per-key S corrections and marks through [[add]]. */
+  private[pagerank] final class SparsePush(parts: Int, edgeBound: Int)
+      extends PushAcc {
+    // start at ~1/8 of the edge bound (frontier sweeps are usually far
+    // sparser than a full sweep), grow by doubling
+    private var cap = java.lang.Integer.highestOneBit(
+      math.min(1 << 20, math.max(1 << 12, edgeBound / 8)))
+    private var keys = new Array[Long](cap)
+    private var vals = new Array[Double](cap)
+    private var used = new Array[Boolean](cap)
+    private var marked = new Array[Boolean](cap)
+    private var size = 0
+    private var nMarks = 0
+
+    private def slot(key: Long, ks: Array[Long], us: Array[Boolean],
+        c: Int): Int = {
+      var h = java.lang.Long.hashCode(key * 0x9e3779b97f4a7c15L) & (c - 1)
+      while (us(h) && ks(h) != key) h = (h + 1) & (c - 1)
+      h
+    }
+    private def grow(): Unit = {
+      val nc = cap << 1
+      val nk = new Array[Long](nc)
+      val nv = new Array[Double](nc)
+      val nu = new Array[Boolean](nc)
+      val nm = new Array[Boolean](nc)
+      var h = 0
+      while (h < cap) {
+        if (used(h)) {
+          val s = slot(keys(h), nk, nu, nc)
+          nk(s) = keys(h); nv(s) = vals(h); nu(s) = true; nm(s) = marked(h)
+        }
+        h += 1
+      }
+      cap = nc; keys = nk; vals = nv; used = nu; marked = nm
+    }
+
+    /** Push one packed (part, idx) target. */
+    def add(key: Long, dw: Double, mark: Boolean): Unit = {
+      if (size * 2 >= cap) grow()
+      val h = slot(key, keys, used, cap)
       if (!used(h)) { used(h) = true; keys(h) = key; size += 1 }
-      vals(h) += v
+      vals(h) += dw
+      if (mark && !marked(h)) { marked(h) = true; nMarks += 1 }
     }
-    var i = 0
-    while (i < b.srcs.length) {
-      val w = r(i) * b.invDeg(i)
+    def pushRow(b: CsrBlock, i: Int, dw: Double, mark: Boolean,
+        selfPart: Int): Unit = {
       var e = b.offsets(i)
       val end = b.offsets(i + 1)
       while (e < end) {
-        insert((b.dstPart(e).toLong << 32) | (b.dstIdx(e).toLong & 0xffffffffL), w)
+        val tp = b.dstPart(e)
+        val ti = b.dstIdx(e)
+        add(pack(tp, ti), dw, mark && !(tp == selfPart && ti == i))
         e += 1
       }
-      i += 1
     }
-    // bucket by target partition
-    val parts = vc.length
-    val counts = new Array[Int](parts)
-    var h = 0
-    while (h < cap) {
-      if (used(h)) counts((keys(h) >>> 32).toInt) += 1
-      h += 1
-    }
-    val outIdx = Array.tabulate(parts)(q => new Array[Int](counts(q)))
-    val outVal = Array.tabulate(parts)(q => new Array[Double](counts(q)))
-    val cursor = new Array[Int](parts)
-    h = 0
-    while (h < cap) {
-      if (used(h)) {
-        val q = (keys(h) >>> 32).toInt
-        val c = cursor(q)
-        outIdx(q)(c) = (keys(h) & 0xffffffffL).toInt
-        outVal(q)(c) = vals(h)
-        cursor(q) = c + 1
+    def markCount: Int = nMarks
+    def emit(): Iterator[(Int, Msg)] = {
+      val nd = new Array[Int](parts)
+      val nm = new Array[Int](parts)
+      var h = 0
+      while (h < cap) {
+        if (used(h)) {
+          val q = (keys(h) >>> 32).toInt
+          if (vals(h) != 0.0) nd(q) += 1
+          if (marked(h)) nm(q) += 1
+        }
+        h += 1
       }
-      h += 1
+      val outI = Array.tabulate(parts)(q => new Array[Int](nd(q)))
+      val outV = Array.tabulate(parts)(q => new Array[Double](nd(q)))
+      val outM = Array.tabulate(parts)(q => new Array[Int](nm(q)))
+      val ci = new Array[Int](parts)
+      val cm = new Array[Int](parts)
+      h = 0
+      while (h < cap) {
+        if (used(h)) {
+          val q = (keys(h) >>> 32).toInt
+          val li = (keys(h) & 0xffffffffL).toInt
+          if (vals(h) != 0.0) {
+            outI(q)(ci(q)) = li; outV(q)(ci(q)) = vals(h); ci(q) += 1
+          }
+          if (marked(h)) { outM(q)(cm(q)) = li; cm(q) += 1 }
+        }
+        h += 1
+      }
+      (0 until parts).iterator
+        .filter(q => nd(q) > 0 || nm(q) > 0)
+        .map(q => (q, (outI(q), outV(q), outM(q)): Msg))
     }
-    (0 until parts).iterator.map(q => (q, (outIdx(q), outVal(q))))
   }
-}
-
-/** TaskContext.partitionId without importing spark internals at call sites. */
-private object TaskContextHolder {
-  def partitionId(): Int = org.apache.spark.TaskContext.getPartitionId()
 }

@@ -62,11 +62,6 @@ final case class LinkState(links: DataFrame, degs: DataFrame, n: Long,
   * ([[EdgeOps.withSelfLoops]]) — the reference driver's invariant that
   * removes dangling mass (/root/reference/main.cxx:127-128).
   */
-object PageRank {
-  /** Plan-growth diagnostics (env GRAFT_DEBUG_PLANS=1). */
-  val debugPlans: Boolean = sys.env.contains("GRAFT_DEBUG_PLANS")
-}
-
 class PageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()) {
   import spark.implicits._
 
@@ -504,14 +499,7 @@ class PageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()) {
       val frontierChanged = expand != NoExpansion
       val nextFrontierMat = nextFrontier.map { f =>
         if (!frontierChanged) f // same fixed frontier, already checkpointed
-        else {
-          if (PageRank.debugPlans) {
-            var c = 0
-            f.queryExecution.logical.foreach(_ => c += 1)
-            println(s"[pr-debug] iter=$iter preFrontierNodes=$c")
-          }
-          f.ckpt()
-        }
+        else f.ckpt()
       }
       val nextFrontierN =
         if (!frontierChanged) frontierN
@@ -526,17 +514,6 @@ class PageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()) {
       opts.checkpointDir.foreach { dir =>
         if (willStop || iter % opts.checkpointEvery == 0)
           Checkpointer.save(dir, iter, newRanks, nextFrontierMat, residual)
-      }
-
-      if (PageRank.debugPlans) {
-        def nodes(df: DataFrame): Int = {
-          var c = 0
-          df.queryExecution.logical.foreach(_ => c += 1)
-          c
-        }
-        println(s"[pr-debug] iter=$iter ranksNodes=${nodes(newRanks)} " +
-          s"frontierNodes=${nextFrontierMat.map(nodes).getOrElse(-1)} " +
-          s"frontierN=$nextFrontierN residual=$residual")
       }
 
       // Swap buffers (reference's swap(a, r), pagerank.hxx:366); old

@@ -213,22 +213,26 @@ class CsrDynamicSpec extends AnyFunSuite {
   }
 
   test("sparse push path (maxDenseBytes=0) matches the dense path") {
-    val (base, ins) = fixture(150L)
-    val xDf = TestSpark.edgesDf(spark, base)
+    val (base, ins) = fixture(200L)
+    // the mixed-batch test's deletions: the splice retracts and marks through
+    // the sparse map, and DF-P's expansion skips the self edge on both paths
+    val del = base.filter { case (a, b) => a != b && a % 13 == 0 }.take(8)
+    val g0 = new CsrPageRank(spark).build(TestSpark.edgesDf(spark, base))
     val insDf = TestSpark.edgesDf(spark, ins)
-    val none = insDf.limit(0)
-    def runWith(dyn: CsrDynamic): Map[Long, Double] = {
-      val g0 = new CsrPageRank(spark).build(xDf)
-      val (_, st0) = dyn.staticWithState(g0)
-      val (_, run, _) = dyn.applyBatch(g0, st0, insDf, none, prune = false)
-      TestSpark.collectRanks(run.ranks)
+    val delDf = TestSpark.edgesDf(spark, del)
+    for (prune <- Seq(false, true)) {
+      def runWith(dyn: CsrDynamic): Map[Long, Double] = {
+        val (_, st0) = dyn.staticWithState(g0)
+        val (_, run, _) = dyn.applyBatch(g0, st0, insDf, delDf, prune)
+        TestSpark.collectRanks(run.ranks)
+      }
+      val dense = runWith(new CsrDynamic(spark))
+      val sparse = runWith(new CsrDynamic(spark, graft.model.PagerankOptions(),
+        maxDenseBytes = 0))
+      // delta-application order differs between the two emit layouts → ulp
+      assert(Oracle.allclose(dense, sparse, 1e-12),
+        s"prune=$prune maxDiff=${Oracle.maxDiff(dense, sparse)}")
     }
-    val dense = runWith(new CsrDynamic(spark))
-    val sparse = runWith(new CsrDynamic(spark, graft.model.PagerankOptions(),
-      maxDenseBytes = 0))
-    // delta-application order differs between the two emit layouts → ulp
-    assert(Oracle.allclose(dense, sparse, 1e-12),
-      s"maxDiff=${Oracle.maxDiff(dense, sparse)}")
   }
 
   test("empty batch is a fixpoint no-op (1 superstep, ranks unchanged)") {
