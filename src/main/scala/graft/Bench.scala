@@ -71,11 +71,8 @@ import graft.pagerank.CsrDynamic.CsrState
   *    SAME carried engines advance through 1e-5 and 1e-3 slices with a
   *    per-batch 1e-10 static baseline (timing only — the L1 evidence lives
   *    on the 1e-4 track).
-  *  - The dynamic engine measured is [[CsrDynamic]] (the PagerankOptions
-  *    .useCsr route of the public dynamicFrontier/Prune API, carried-state
-  *    form). The DataFrame-superstep dynamic variants are correctness-
-  *    verified (DuckDB oracles, ScalaTest) but floored at O(|V|) rows ×
-  *    4-5 jobs per superstep — measured only when GRAFT_BENCH_DF_BATCHES>0.
+  *  - The dynamic engine measured is [[CsrDynamic]] in its carried-state
+  *    form (the engine behind the public dynamic variants of PageRank).
   *
   * Emit contract (S6): stdout carries ONLY headline scalars (≤ ~1.5 KB —
   * the round driver tails the last 2,000 chars of output; r3's 2,770-char
@@ -258,8 +255,8 @@ object Bench {
         WebGraphFixture.edgesOnly(s, benchPages / 40).toDF().select("src", "dst"),
         s.range(benchPages / 40).select(col("id")))
       new PageRank(s, PagerankOptions(tolerance = 0.0, maxIterations = 2)).static(warmY)
-      new PageRank(s, PagerankOptions(tolerance = 0.0, maxIterations = 2,
-        useCsr = true)).static(warmY)
+      new CsrPageRank(s, PagerankOptions(tolerance = 0.0, maxIterations = 2))
+        .static(warmY)
     }
     // Drain the fixture write's dirty pages BEFORE measurement starts: the
     // ~GB parquet write otherwise flushes asynchronously for minutes and the
@@ -288,7 +285,7 @@ object Bench {
       * @return (edges/sec/superstep [min-step], ditto [median-step],
       *          compute secs, |E|, busy-cores, per-step secs,
       *          steal fraction of the side's core-capacity) */
-    def throughputRun(cores: Int, useCsr: Boolean, dir: String,
+    def throughputRun(cores: Int, csr: Boolean, dir: String,
         steps: Int = throughputSteps)
         : (Double, Double, Double, Long, Double, Seq[Double], Double) = {
       val s = session(cores, forPagerank = true)
@@ -299,7 +296,7 @@ object Bench {
       val steal0 = stealCoreSecs()
       val w0 = System.nanoTime()
       val stats =
-        if (!useCsr) {
+        if (!csr) {
           val pr = new PageRank(s, opts)
           val ls = pr.buildLinks(y)
           pr.static(y, Some(ls)).stats
@@ -342,17 +339,17 @@ object Bench {
            Double, Double) =
       if (nFirst) {
         val (thrN, thrNMed, _, _, busyN, stN, sfN) =
-          throughputRun(coresN, useCsr = false, fixtureDir, steps)
+          throughputRun(coresN, csr = false, fixtureDir, steps)
         val (thr4N, thr4NMed, _, nE, busy4N, st4N, sf4N) =
-          throughputRun(cores4N, useCsr = false, fixtureDir, steps)
+          throughputRun(cores4N, csr = false, fixtureDir, steps)
         stepTraces += (("n", stN)); stepTraces += (("4n", st4N))
         (thrN, thr4N, nE, busyN, busy4N, thr4NMed / (4.0 * thrNMed),
           thrNMed, thr4NMed, sfN, sf4N)
       } else {
         val (thr4N, thr4NMed, _, nE, busy4N, st4N, sf4N) =
-          throughputRun(cores4N, useCsr = false, fixtureDir, steps)
+          throughputRun(cores4N, csr = false, fixtureDir, steps)
         val (thrN, thrNMed, _, _, busyN, stN, sfN) =
-          throughputRun(coresN, useCsr = false, fixtureDir, steps)
+          throughputRun(coresN, csr = false, fixtureDir, steps)
         stepTraces += (("4n", st4N)); stepTraces += (("n", stN))
         (thrN, thr4N, nE, busyN, busy4N, thr4NMed / (4.0 * thrNMed),
           thrNMed, thr4NMed, sfN, sf4N)
@@ -494,8 +491,8 @@ object Bench {
     if (remainingSecs > 300) {
       // the bus-saturated 8→32 point, one back-to-back pair; 32-core side
       // also supplies the headline local[32] throughput
-      val (thr8, _, sec8, _, _, _, _) = throughputRun(8, useCsr = false, fixtureDir)
-      val (thr32, _, sec32, _, _, _, _) = throughputRun(32, useCsr = false, fixtureDir)
+      val (thr8, _, sec8, _, _, _, _) = throughputRun(8, csr = false, fixtureDir)
+      val (thr32, _, sec32, _, _, _, _) = throughputRun(32, csr = false, fixtureDir)
       qTimes("pagerank_throughput_local8") = sec8
       qTimes("pagerank_throughput_local32") = sec32
       val eff832 = thr32 / (4.0 * thr8)
@@ -509,10 +506,10 @@ object Bench {
       // size-scaling point (fixed 32 cores, |E| × ~10) — the local-box
       // evidence axis for the CSR engine, whose sub-second supersteps
       // saturate the single shared memory bus before 32 cores.
-      val (csr8, _, csrSec8, _, _, _, _) = throughputRun(8, useCsr = true, fixtureDir)
-      val (csr32, _, csrSec32, _, _, _, _) = throughputRun(32, useCsr = true, fixtureDir)
+      val (csr8, _, csrSec8, _, _, _, _) = throughputRun(8, csr = true, fixtureDir)
+      val (csr32, _, csrSec32, _, _, _, _) = throughputRun(32, csr = true, fixtureDir)
       val (csrSmall32, _, csrSmallSec, weakEdges, _, _, _) =
-        throughputRun(32, useCsr = true, weakDir)
+        throughputRun(32, csr = true, weakDir)
       qTimes("pagerank_csr_local8") = csrSec8
       qTimes("pagerank_csr_local32") = csrSec32
       qTimes("pagerank_csr_local32_small") = csrSmallSec
@@ -585,11 +582,6 @@ object Bench {
     qTimes("pagerank_static_converge_1e10") = tDfStatic
     put("dataframe_static_converge_secs", f"$tDfStatic%.1f")
     put("static_converge_iters", dfStaticRun.stats.iterations.toString)
-
-    // Optional legacy DataFrame-superstep dynamic track (default OFF — the
-    // DataFrame superstep is floored at O(|V|)+4-5 jobs per superstep
-    // regardless of frontier; CsrDynamic is the engine for dynamic).
-    val dfBatches = sys.env.getOrElse("GRAFT_BENCH_DF_BATCHES", "0").toInt
 
     val dyn = new CsrDynamic(s)
     val csr = new CsrPageRank(s)
@@ -887,7 +879,8 @@ object Bench {
       s.sparkContext.addSparkListener(probeListener)
       val ((gProbe, probeRun, stProbe), tProbeWall) =
         time(dyn.applyBatch(gDfp, stDfp, probeNone, probeDel, prune = true))
-      Thread.sleep(2000) // listener bus is async — let it drain
+      // listener bus is async — drain it before reading the counters
+      org.apache.spark.GraftSparkBridge.waitUntilEmpty(s.sparkContext, 10000L)
       s.sparkContext.removeSparkListener(probeListener)
       val probeSteps = math.max(1L, CsrDynamic.superstepRuns.get() - pss0)
       val probeKernelSecs = (CsrDynamic.kernelCritNanos.get() - pkn0) / 1e9
@@ -915,43 +908,6 @@ object Bench {
         put("probe_stage_breakdown", byName, compact = false)
       }
       phaseDone("probe")
-    }
-
-    // ---- Optional: legacy DataFrame-superstep dynamic track --------------
-    if (dfBatches > 0 && remainingSecs > 300) {
-      val dfSecs = new scala.collection.mutable.ArrayBuffer[Double]
-      val dfpSecs = new scala.collection.mutable.ArrayBuffer[Double]
-      var dfIters, dfpIters = 0
-      var ls = ls0
-      var prevDf = dfStaticRun.ranks
-      var prevDfp = dfStaticRun.ranks
-      var xLinks = ls.links.select("src", "dst")
-      for (bb <- 0 until math.min(dfBatches, nBatches)) {
-        val ins = batchIns(bb, xLinks).cache()
-        val none = ins.limit(0)
-        val lsY = pr.updateLinks(ls, ins, none)
-        val yLinks = lsY.links.select("src", "dst")
-        val (dfRun, tDf) = time {
-          pr.dynamicFrontier(xLinks, yLinks, ins, none, prevDf, Some(lsY))
-        }
-        val (dfpRun, tDfp) = time {
-          pr.dynamicFrontierPrune(xLinks, yLinks, ins, none, prevDfp, Some(lsY))
-        }
-        dfSecs += tDf; dfpSecs += tDfp
-        dfIters += dfRun.stats.iterations; dfpIters += dfpRun.stats.iterations
-        prevDf = dfRun.ranks; prevDfp = dfpRun.ranks
-        ls = lsY; xLinks = yLinks
-        ins.unpersist()
-      }
-      qTimes("pagerank_dynamic_frontier_converge") = dfSecs.sum / dfSecs.size
-      qTimes("pagerank_dfp_converge") = dfpSecs.sum / dfpSecs.size
-      put("df_batch_secs", arr(dfSecs.toSeq), compact = false)
-      put("dfp_batch_secs", arr(dfpSecs.toSeq), compact = false)
-      put("df_avg_iters",
-        f"${dfIters.toDouble / math.max(1, dfSecs.size)}%.1f", compact = false)
-      put("dfp_avg_iters",
-        f"${dfpIters.toDouble / math.max(1, dfpSecs.size)}%.1f", compact = false)
-      phaseDone("df_legacy")
     }
 
     emitFinal(currentFields)

@@ -70,9 +70,8 @@ object SparkEntry {
     (x, y, ins)
   }
 
-  private def tightDynOpts(useCsr: Boolean = false): PagerankOptions =
-    PagerankOptions(frontierTolerance = 1e-12, pruneTolerance = 1e-12,
-      useCsr = useCsr)
+  private def tightDynOpts: PagerankOptions =
+    PagerankOptions(frontierTolerance = 1e-12, pruneTolerance = 1e-12)
 
   /** Web fixture graph (pages → links → ids), small scale for Verify. */
   private def webGraph(s: SparkSession, pageCount: Long): (DataFrame, DataFrame) = {
@@ -195,7 +194,7 @@ object SparkEntry {
     "q_pagerank_csr_converged" -> ((s, dir) => {
       val e = derivedEdges(s, dir)
       val y = EdgeOps.withSelfLoops(e, EdgeOps.vertices(e))
-      new PageRank(s, PagerankOptions(useCsr = true)).static(y).ranks
+      new CsrPageRank(s).static(y).ranks
         .select(col("id"), round(col("rank"), 6).as("rank")).orderBy("id")
     }),
 
@@ -205,6 +204,7 @@ object SparkEntry {
     // the 100-round oracle over the full edge set — verifying the
     // batch-apply + warm-start + convergence path with no DF truncation
     // caveat (DF itself is covered by ScalaTest vs the in-memory oracle).
+    // Like every dynamic variant it runs on the CsrDynamic engine.
     "q_pagerank_naive_dynamic" -> ((s, dir) => {
       val (x, y, _) = dynamicSplit(s, dir)
       val pr = new PageRank(s)
@@ -217,10 +217,12 @@ object SparkEntry {
     // q_pagerank_naive_dynamic): frontier/prune tolerances tightened to
     // 1e-12 so the frontier-truncation error (≈ tol·rank/(1−P)) sits orders
     // below the 5e-7 rounding margin — every variant re-converges to the
-    // SAME fixpoint as the 200-round power-iteration oracle.
+    // SAME fixpoint as the 200-round power-iteration oracle. These three rows
+    // run the same CsrDynamic engine as the csr_* rows below, through the
+    // public PageRank API.
     "q_pagerank_dynamic_frontier" -> ((s, dir) => {
       val (x, y, ins) = dynamicSplit(s, dir)
-      val pr = new PageRank(s, tightDynOpts())
+      val pr = new PageRank(s, tightDynOpts)
       val prev = pr.static(x).ranks
       pr.dynamicFrontier(x, y, ins, ins.limit(0), prev).ranks
         .select(col("id"), round(col("rank"), 6).as("rank")).orderBy("id")
@@ -228,7 +230,7 @@ object SparkEntry {
 
     "q_pagerank_dynamic_traversal" -> ((s, dir) => {
       val (x, y, ins) = dynamicSplit(s, dir)
-      val pr = new PageRank(s, tightDynOpts())
+      val pr = new PageRank(s, tightDynOpts)
       val prev = pr.static(x).ranks
       pr.dynamicTraversal(x, y, ins, ins.limit(0), prev).ranks
         .select(col("id"), round(col("rank"), 6).as("rank")).orderBy("id")
@@ -236,38 +238,34 @@ object SparkEntry {
 
     "q_pagerank_dfp" -> ((s, dir) => {
       val (x, y, ins) = dynamicSplit(s, dir)
-      val pr = new PageRank(s, tightDynOpts())
+      val pr = new PageRank(s, tightDynOpts)
       val prev = pr.static(x).ranks
       pr.dynamicFrontierPrune(x, y, ins, ins.limit(0), prev).ranks
         .select(col("id"), round(col("rank"), 6).as("rank")).orderBy("id")
     }),
 
-    // The same Dynamic Frontier run routed through the partition-local CSR
-    // engine (PagerankOptions.useCsr → CsrDynamic) — puts the O(frontier)
-    // dynamic fast path itself under the hard signal.
+    // The same dynamic runs warm-started from the CSR static ranks instead
+    // of the DataFrame ones — the all-CSR pipeline under the hard signal.
     "q_pagerank_csr_frontier" -> ((s, dir) => {
       val (x, y, ins) = dynamicSplit(s, dir)
-      val pr = new PageRank(s, tightDynOpts(useCsr = true))
-      val prev = pr.static(x).ranks
+      val pr = new PageRank(s, tightDynOpts)
+      val prev = new CsrPageRank(s, tightDynOpts).static(x).ranks
       pr.dynamicFrontier(x, y, ins, ins.limit(0), prev).ranks
         .select(col("id"), round(col("rank"), 6).as("rank")).orderBy("id")
     }),
 
     "q_pagerank_csr_traversal" -> ((s, dir) => {
       val (x, y, ins) = dynamicSplit(s, dir)
-      val pr = new PageRank(s, tightDynOpts(useCsr = true))
-      val prev = pr.static(x).ranks
+      val pr = new PageRank(s, tightDynOpts)
+      val prev = new CsrPageRank(s, tightDynOpts).static(x).ranks
       pr.dynamicTraversal(x, y, ins, ins.limit(0), prev).ranks
         .select(col("id"), round(col("rank"), 6).as("rank")).orderBy("id")
     }),
 
-    // The CSR-routed PRUNE kernel (DF-P closed form + shrink rule inside
-    // CsrDynamic) under the hard signal — frontier and traversal CSR routes
-    // were oracled in r3, prune was ScalaTest-only.
     "q_pagerank_csr_dfp" -> ((s, dir) => {
       val (x, y, ins) = dynamicSplit(s, dir)
-      val pr = new PageRank(s, tightDynOpts(useCsr = true))
-      val prev = pr.static(x).ranks
+      val pr = new PageRank(s, tightDynOpts)
+      val prev = new CsrPageRank(s, tightDynOpts).static(x).ranks
       pr.dynamicFrontierPrune(x, y, ins, ins.limit(0), prev).ranks
         .select(col("id"), round(col("rank"), 6).as("rank")).orderBy("id")
     }),
@@ -279,7 +277,7 @@ object SparkEntry {
     // under the hard signal. Same fixpoint as the 200-round oracle.
     "q_pagerank_csr_splice" -> ((s, dir) => {
       val (x, _, ins) = dynamicSplit(s, dir)
-      val opts = tightDynOpts()
+      val opts = tightDynOpts
       val dyn = new CsrDynamic(s, opts)
       val g = new CsrPageRank(s, opts).build(x)
       val (_, st0) = dyn.staticWithState(g)
@@ -296,7 +294,7 @@ object SparkEntry {
       val del = e.where((col("src") + col("dst")) % 17 === 0 &&
         col("src") =!= col("dst"))
       val x = EdgeOps.withSelfLoops(e, EdgeOps.vertices(e))
-      val opts = tightDynOpts()
+      val opts = tightDynOpts
       val dyn = new CsrDynamic(s, opts)
       val g = new CsrPageRank(s, opts).build(x)
       val (_, st0) = dyn.staticWithState(g)
@@ -321,7 +319,7 @@ object SparkEntry {
       val delA = sliceA.where(col("src") % 2 === 0 && col("src") =!= col("dst"))
       val base = e.join(sliceA, Seq("src", "dst"), "left_anti")
         .join(sliceB, Seq("src", "dst"), "left_anti")
-      val ipr = new IncrementalPageRank(s, verts, tightDynOpts(useCsr = true))
+      val ipr = new IncrementalPageRank(s, verts, tightDynOpts)
       ipr.applyBatch(base)
       ipr.applyBatch(sliceA)
       ipr.applyBatch(

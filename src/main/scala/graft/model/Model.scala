@@ -40,7 +40,8 @@ final case class Page(
   *
   * `useL1Residual`: the north rule's text says "1e-10 L1 residual"; the
   * reference's in-loop check is L∞ (L1 is only the reported error metric) —
-  * both are available, defaulting to the reference's L∞ (SURVEY.md §2.5).
+  * both are available for the static sweeps, defaulting to the reference's
+  * L∞ (SURVEY.md §2.5); the dynamic variants always stop on L∞.
   */
 final case class PagerankOptions(
     damping: Double = 0.85,
@@ -54,16 +55,7 @@ final case class PagerankOptions(
     /** In-degree above which a dst is treated as a hub and its contribution
       * aggregation is salted two-phase (None = auto: max(1M, |E|/parts/4)).
       * Set low only in tests to force the salted plan at toy scale. */
-    hubThreshold: Option[Long] = None,
-    /** Route PageRank through the partition-local CSR engine instead of the
-      * DataFrame superstep — identical results. Static sweeps run one
-      * packed-primitive shuffle per superstep, with up to
-      * [[graft.pagerank.CsrDynamic.fuseMax]] supersteps fused into one job
-      * ([[graft.pagerank.CsrPageRank]]); the dynamic variants (DF / DF-P /
-      * DT) run O(frontier) push supersteps ([[graft.pagerank.CsrDynamic]]),
-      * and the streaming front end carries the frozen graph across
-      * micro-batches. */
-    useCsr: Boolean = false)
+    hubThreshold: Option[Long] = None)
 
 /** Result of one PageRank run — mirrors the reference's PagerankResult
   * (/root/reference/inc/pagerank.hxx:64-113): converged ranks, iteration

@@ -4,44 +4,36 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Durable per-superstep checkpointing (north rule: "every superstep
-  * checkpoints per-partition rank vectors with lineage and convergence
-  * metrics so runs resume mid-iteration").
+/** Durable per-superstep checkpointing of the static DataFrame run (north
+  * rule: "every superstep checkpoints per-partition rank vectors with
+  * lineage and convergence metrics so runs resume mid-iteration").
   *
   * Layout under `dir`:
   *   ranks_i=NNNN/   — rank vector parquet (per-partition files = the
   *                     per-partition rank vectors; parquet footers carry
   *                     lineage back to the manifest line that wrote them)
-  *   frontier_i=NNNN/ — affected-vertex set parquet (when frontier-based)
   *   MANIFEST.jsonl  — one line per superstep:
-  *                     {superstep, ranksPath, frontierPath?, residual, ts-free}
+  *                     {superstep, ranksPath, residual, ts-free}
   *
   * Resume: [[latest]] returns the last completed superstep's state; the
-  * PageRank driver can be re-entered with `prevRanks = ranks` and the saved
-  * frontier, continuing mid-iteration after a kill.
+  * run continues mid-iteration after a kill by re-entering PageRank with
+  * `prevRanks = ranks` (warm start, [[PageRank.naiveDynamic]]).
   */
 object Checkpointer {
 
   def save(dir: String, superstep: Int, ranks: DataFrame,
-      frontier: Option[DataFrame], residual: Double): Unit = {
+      residual: Double): Unit = {
     val tag = f"$superstep%05d"
     val ranksPath = s"$dir/ranks_i=$tag"
     ranks.write.mode("overwrite").parquet(ranksPath)
-    val frontierPath = frontier.map { f =>
-      val p = s"$dir/frontier_i=$tag"
-      f.write.mode("overwrite").parquet(p)
-      p
-    }
-    val fp = frontierPath.map(p => s""","frontierPath":"$p"""").getOrElse("")
     val line =
-      s"""{"superstep":$superstep,"ranksPath":"$ranksPath"$fp,"residual":$residual}""" + "\n"
+      s"""{"superstep":$superstep,"ranksPath":"$ranksPath","residual":$residual}""" + "\n"
     Files.createDirectories(Paths.get(dir))
     Files.writeString(Paths.get(s"$dir/MANIFEST.jsonl"), line,
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 
-  final case class Resume(superstep: Int, ranks: DataFrame,
-      frontier: Option[DataFrame], residual: Double)
+  final case class Resume(superstep: Int, ranks: DataFrame, residual: Double)
 
   /** Last completed superstep recorded in the manifest, or None. */
   def latest(spark: SparkSession, dir: String): Option[Resume] = {
@@ -60,7 +52,6 @@ object Checkpointer {
       step <- field("superstep").map(_.toInt)
       rp <- field("ranksPath")
       res <- field("residual").map(_.toDouble)
-    } yield Resume(step, spark.read.parquet(rp),
-      field("frontierPath").map(spark.read.parquet(_)), res)
+    } yield Resume(step, spark.read.parquet(rp), res)
   }
 }

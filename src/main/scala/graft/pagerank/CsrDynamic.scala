@@ -46,8 +46,10 @@ import CsrDynamic._
   * pagerank.hxx:631-637) into a sparse [[CsrPageRank.PushAcc]], whose
   * messages are the first round's traffic.
   *
-  * Numeric contract identical to [[PageRank]]'s DF variants; CsrDynamicSpec
-  * asserts allclose vs the DataFrame path and the in-memory oracle.
+  * This is the one engine of [[PageRank]]'s dynamic variants (ND, DT, DF,
+  * DF-P) and of the streaming front end; CsrDynamicSpec asserts allclose
+  * vs the sequential Jacobi reference (test `Oracle.dynamic`) and the
+  * converged in-memory oracle.
   * Semantics requirement: the vertex universe is FIXED (every batch endpoint
   * already has its self-loop in the base graph) — the same eager-universe
   * contract the reference's temporal loader establishes
@@ -79,8 +81,8 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
     * of `g` absent from `prevRanks` warm-start at 0.0 — the reference's
     * pagerankInitializeRanksFrom copies q[v], which is 0 for previously-
     * absent ids (/root/reference/inc/pagerank.hxx:287-295, SURVEY.md §7.4
-    * R3). This is the entry point for routing the DataFrame-facing dynamic
-    * variants (PagerankOptions.useCsr) through this engine. */
+    * R3). This is the entry point of [[PageRank]]'s dynamic variants into
+    * this engine. */
   def stateFromRanks(g: CsrGraph, prevRanks: org.apache.spark.sql.DataFrame)
       : RDD[CsrState] = {
     val parts = g.vCounts.length
@@ -138,8 +140,8 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
   }
 
   /** One dynamic run over an already-updated graph: warm state + explicit
-    * seed marking (the one-shot form of [[applyBatch]], used by the
-    * PagerankOptions.useCsr routing where the batch is already merged into
+    * seed marking (the one-shot form of [[applyBatch]], used by
+    * [[PageRank]]'s dynamic variants where the batch is already merged into
     * `g` by the caller). Flags start CLEARED — the reference allocates a
     * fresh affected vector per invocation (inc/pagerank.hxx:683).
     * `fixedFrontier` = Dynamic Traversal semantics (V3,

@@ -42,9 +42,10 @@ import graft.model.{PagerankOptions, PagerankStats}
   * loop: this sweep, the S initialisation of [[CsrDynamic]], its DF/DF-P
   * supersteps and (through the sparse map's per-key `add`) its batch splice.
   *
-  * Semantics are EXACTLY the DataFrame path's (Jacobi full sweep, same
-  * numeric contract): CsrPageRankSpec asserts allclose 1e-12 and equal
-  * iteration counts. Swapped in behind PagerankOptions.useCsr.
+  * Semantics are EXACTLY the static DataFrame run's (Jacobi full sweep,
+  * same numeric contract): CsrPageRankSpec asserts allclose 1e-12 and equal
+  * iteration counts. Callers that want this route call [[static]]
+  * directly.
   *
   * Same caller contract as [[PageRank]]: simple digraph with self-loops on
   * every vertex (⇒ every vertex is a src AND receives ≥1 contribution).

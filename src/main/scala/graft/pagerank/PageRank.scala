@@ -2,7 +2,6 @@ package graft.pagerank
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.graph.EdgeOps
 import graft.util.Ckpt._
@@ -12,24 +11,22 @@ import graft.model.{PagerankOptions, PagerankStats}
   * mirrors the reference's PagerankResult (/root/reference/inc/pagerank.hxx:64-113). */
 final case class PagerankRun(ranks: DataFrame, stats: PagerankStats)
 
-/** Prebuilt degree-annotated link state — the engine's analog of the
-  * reference's cached degree-annotated transpose xt/yt that the batch loop
-  * carries across snapshots (/root/reference/main.cxx:83,104-105). Built once
-  * with [[PageRank.buildLinks]], advanced per batch with
-  * [[PageRank.updateLinks]] (O(|batch|·outDeg) new rows + one O(|E|)
-  * broadcast anti-join scan — no full links/degree/hub rebuild), and passed
-  * into the dynamic variants so a 1e-4·|E| batch never pays an O(|E|)
-  * shuffle+aggregate rebuild.
+/** Prebuilt degree-annotated link state of the static DataFrame superstep
+  * — the engine's analog of the reference's cached degree-annotated
+  * transpose xt/yt (/root/reference/main.cxx:83,104-105). Built once with
+  * [[PageRank.buildLinks]] and passed into [[PageRank.static]] so repeated
+  * static runs over one graph never pay the O(|E|) shuffle+aggregate
+  * rebuild.
   *
   * `links` columns: src, dst, outDeg (+ salt when `hubs` present); cached
   * src-hash-partitioned. `hubs` is the broadcastable (dst, saltMod) skew map
-  * — kept as built (hub membership drifts only O(batch) per batch; it is a
-  * performance hint, never a correctness input).
+  * — a performance hint, never a correctness input.
   */
 final case class LinkState(links: DataFrame, degs: DataFrame, n: Long,
     nEdges: Long, hubs: Option[DataFrame])
 
-/** The five PageRank variants of the reference, as BSP Dataset supersteps.
+/** The five PageRank variants of the reference: static as BSP Dataset
+  * supersteps, the four dynamic variants on the [[CsrDynamic]] engine.
   *
   * Numeric contract (SURVEY.md §2.5): damping P=0.85, teleport C0=(1−P)/N,
   * stop when L∞(a−r) < tolerance=1e-10, maxIterations=500
@@ -46,24 +43,24 @@ final case class LinkState(links: DataFrame, degs: DataFrame, n: Long,
   * tol 1e-10. Unaffected vertices copy r→a (as the reference's prune kernel
   * does explicitly, /root/reference/inc/pagerankPrune.hxx:60).
   *
-  * Scale shape per superstep: the big edge table is cached hash-partitioned
-  * by `src` and never moves; only the O(|V|) rank vector is exchanged (join
-  * on src), and raw contributions are exchanged by dst BEFORE aggregating
-  * (clustered keys → flat per-task hash maps). Hub in-degree skew is
-  * absorbed by the salted two-phase aggregation planned at [[buildLinks]]
-  * (no reduce key ever receives more than ~a quarter-partition of rows —
-  * the AQE-off PR session has no skew-join splitting to fall back on).
-  * Frontiers are broadcast when small, so the frontier semi-join never
-  * re-shuffles the edge table. The partition-local CSR fast path
-  * ([[CsrPageRank]], opts.useCsr) and the O(frontier) dynamic engine
-  * ([[CsrDynamic]]) are the physical accelerators of the same semantics.
+  * Scale shape per static superstep: the big edge table is cached
+  * hash-partitioned by `src` and never moves; only the O(|V|) rank vector is
+  * exchanged (join on src), and raw contributions are exchanged by dst
+  * BEFORE aggregating (clustered keys → flat per-task hash maps). Hub
+  * in-degree skew is absorbed by the salted two-phase aggregation planned at
+  * [[buildLinks]] (no reduce key ever receives more than ~a quarter-partition
+  * of rows — the AQE-off PR session has no skew-join splitting to fall back
+  * on). [[CsrPageRank.static]] is the partition-local CSR form of the same
+  * sweep. The dynamic variants freeze y into CSR blocks and run the
+  * O(frontier) push loop from the variant's seed marking — one engine, as
+  * the reference runs every variant through one pagerankInvoke
+  * (/root/reference/inc/pagerank.hxx:335-373).
   *
   * All graphs passed in must already carry self-loops on every vertex
   * ([[EdgeOps.withSelfLoops]]) — the reference driver's invariant that
   * removes dangling mass (/root/reference/main.cxx:127-128).
   */
 class PageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()) {
-  import spark.implicits._
 
   private val P = opts.damping
   /** Broadcast the frontier semi-join side below this many vertices. */
@@ -72,41 +69,133 @@ class PageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()) {
   // ---------------------------------------------------------------- variants
 
   /** V1 — pagerankStatic (/root/reference/inc/pagerank.hxx:441-467):
-    * all vertices affected, cold init 1/N. With opts.useCsr the run goes
-    * through the partition-local CSR fast path (SURVEY.md §7.1 step 6) —
-    * same results, one packed-primitive shuffle per superstep. */
-  def static(yEdges: DataFrame, state: Option[LinkState] = None): PagerankRun =
-    if (opts.useCsr) new CsrPageRank(spark, opts).static(yEdges)
-    else run(yEdges, prevRanks = None, frontier0 = FrontierAll,
-      expand = NoExpansion, state = state)
+    * all vertices affected, cold init 1/N, as DataFrame supersteps (see
+    * the class doc). `state` reuses a prebuilt [[LinkState]] of `yEdges`.
+    *
+    * With opts.checkpointDir set, the rank vector is written through
+    * [[Checkpointer]] every `checkpointEvery` supersteps plus always on the
+    * final one, so `Checkpointer.latest` resumes from at most
+    * checkpointEvery-1 steps back and the converged state is always
+    * durable. */
+  def static(yEdges: DataFrame, state: Option[LinkState] = None): PagerankRun = {
+    val t0 = System.nanoTime()
+    val parts = spark.sparkContext.defaultParallelism
+    val st = state.getOrElse(buildLinks(yEdges))
+    val links = st.links
+    val n = st.n
+    // Empty graph → empty result (reference: `if (xt.empty) return {}`,
+    // /root/reference/inc/pagerank.hxx:444).
+    if (n == 0) {
+      return PagerankRun(st.degs.select(col("id"), lit(0.0).as("rank")),
+        PagerankStats(0, 0, 0, 0, 0.0))
+    }
+    val c0 = (1 - P) / n
+
+    // Every per-iteration vector is localCheckpoint(eager)-ed: iterative
+    // plans reference their predecessor more than once, so without eager
+    // lineage truncation the logical plan doubles per superstep
+    // (SURVEY.md §7.4 R5).
+    var ranks = st.degs.select(col("id"), lit(1.0 / n).as("rank"))
+      .repartition(parts, col("id")).ckpt()
+    val t1 = System.nanoTime()
+
+    var iter = 0
+    var residual = Double.MaxValue
+    val stepTimes = scala.collection.mutable.ArrayBuffer[Double]()
+
+    while (iter < opts.maxIterations && residual >= opts.tolerance) {
+      val stepT0 = System.nanoTime()
+      // Aggregate AFTER an explicit repartition by dst: links are clustered
+      // by src, so dst keys are ~random per map task — a pre-shuffle partial
+      // aggregation would build a near-|V|-sized hash map per task (combine
+      // ratio ≈ 1) and sit at the spill boundary. Shuffling the raw
+      // contributions first costs ~25% more shuffle bytes but the partial+
+      // final aggregation pair then runs post-exchange on clustered keys
+      // (per-task map = |V|/parts entries), flat in memory.
+      // With hub dsts present, the exchange key is (dst, salt) and a second
+      // O(|V| + hubs·saltMod)-row aggregation folds the salted partials —
+      // no reduce key ever receives more than ~hubThreshold rows.
+      val rawContribs = links
+        .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
+      val contribs =
+        if (st.hubs.isEmpty)
+          rawContribs
+            .select(col("dst").as("id"), (col("rank") / col("outDeg")).as("rc"))
+            .repartition(parts, col("id"))
+            .groupBy(col("id"))
+            .agg(sum(col("rc")).as("c"))
+        else
+          rawContribs
+            .select(col("dst").as("id"), col("salt"),
+              (col("rank") / col("outDeg")).as("rc"))
+            .repartition(parts, col("id"), col("salt"))
+            .groupBy(col("id"), col("salt"))
+            .agg(sum(col("rc")).as("rc"))
+            .groupBy(col("id"))
+            .agg(sum(col("rc")).as("c"))
+
+      // This localCheckpoint is the ONE expensive materialization job of the
+      // superstep; it also truncates lineage, which would otherwise double
+      // per superstep.
+      val newRanks = contribs
+        .select(col("id"), (lit(c0) + lit(P) * col("c")).as("rank")).ckpt()
+
+      // Residual over the full vectors — two checkpointed RDDs, cheap O(|V|)
+      // job (L∞ default, like the reference's liNormDelta; L1 behind the
+      // flag). Throughput-measurement mode (tolerance <= 0): the stop rule
+      // can never fire, so the residual job is skipped entirely and the
+      // superstep is exactly one materialization job.
+      if (opts.tolerance <= 0) {
+        residual = Double.MaxValue
+      } else {
+        val normCol =
+          if (opts.useL1Residual) sum(abs(col("rank") - col("prev")))
+          else max(abs(col("rank") - col("prev")))
+        val row = newRanks
+          .join(ranks.withColumnRenamed("rank", "prev"), Seq("id"))
+          .agg(normCol.as("res")).collect()(0)
+        residual = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
+      }
+
+      iter += 1
+      val willStop = iter >= opts.maxIterations || residual < opts.tolerance
+      opts.checkpointDir.foreach { dir =>
+        if (willStop || iter % opts.checkpointEvery == 0)
+          Checkpointer.save(dir, iter, newRanks, residual)
+      }
+
+      // Swap buffers (reference's swap(a, r), pagerank.hxx:366); old
+      // checkpoint RDDs are reclaimed by the ContextCleaner once
+      // unreferenced (spark.cleaner.referenceTracking.cleanCheckpoints).
+      ranks = newRanks
+      stepTimes += (System.nanoTime() - stepT0) / 1e6
+    }
+
+    val t3 = System.nanoTime()
+    PagerankRun(ranks, PagerankStats(iter, (t1 - t0) / 1e6, 0.0,
+      (t3 - t1) / 1e6, residual, stepTimes.toSeq))
+  }
 
   /** V2 — pagerankNaiveDynamic (/root/reference/inc/pagerank.hxx:482-509):
     * all vertices affected, warm init from previous ranks. New vertices
     * start at 0.0, NOT 1/N (/root/reference/inc/pagerank.hxx:287-295 copies
-    * q[v], which is 0 for previously-absent ids — SURVEY.md §7.4 R3). */
-  def naiveDynamic(yEdges: DataFrame, prevRanks: DataFrame,
-      state: Option[LinkState] = None): PagerankRun =
-    run(yEdges, Some(prevRanks), FrontierAll, NoExpansion, state = state)
+    * q[v], which is 0 for previously-absent ids — SURVEY.md §7.4 R3). The
+    * seeds are every vertex of y (its self-loops) as a fixed frontier. */
+  def naiveDynamic(yEdges: DataFrame, prevRanks: DataFrame): PagerankRun =
+    runCsr(yEdges, prevRanks,
+      yEdges.where(col("src") === col("dst")).select(col("src").as("id")),
+      prune = false, fixedFrontier = true)
 
   /** V3 — pagerankDynamicTraversal (/root/reference/inc/pagerank.hxx:525-615):
     * affected = BFS closure in y from the DF seed set; frontier fixed across
-    * supersteps. */
+    * supersteps. The closure is out-edge-closed, so every push lands inside
+    * the affected set. */
   def dynamicTraversal(xEdges: DataFrame, yEdges: DataFrame,
-      insertions: DataFrame, deletions: DataFrame, prevRanks: DataFrame,
-      state: Option[LinkState] = None): PagerankRun = {
-    val seeds = frontierSeeds(xEdges, yEdges, insertions, deletions)
-    if (opts.useCsr) {
-      // CSR route: the BFS closure is out-edge-closed, so every push lands
-      // inside the affected set — runFromSeeds in fixed-frontier mode.
-      val g = new CsrPageRank(spark, opts).build(yEdges)
-      val dyn = new CsrDynamic(spark, opts)
-      val st = dyn.stateFromRanks(g, prevRanks)
-      return dyn.runFromSeeds(g, st, bfsClosure(yEdges, seeds),
-        prune = false, fixedFrontier = true)._1
-    }
-    run(yEdges, Some(prevRanks), FrontierFixed(bfsClosure(yEdges, seeds)),
-      NoExpansion, state = state)
-  }
+      insertions: DataFrame, deletions: DataFrame,
+      prevRanks: DataFrame): PagerankRun =
+    runCsr(yEdges, prevRanks,
+      bfsClosure(yEdges, frontierSeeds(xEdges, yEdges, insertions, deletions)),
+      prune = false, fixedFrontier = true)
 
   /** V4 — pagerankDynamicFrontier (/root/reference/inc/pagerank.hxx:631-729):
     * initial marking = out-neighbors (in x) of each deleted edge's source and
@@ -115,51 +204,37 @@ class PageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()) {
     * marks its out-neighbors in y. Frontier grows monotonically (the driver's
     * ASYNCF=true semantics, /root/reference/main.cxx:96). */
   def dynamicFrontier(xEdges: DataFrame, yEdges: DataFrame,
-      insertions: DataFrame, deletions: DataFrame, prevRanks: DataFrame,
-      state: Option[LinkState] = None): PagerankRun = {
-    if (opts.useCsr)
-      return csrDynamicRun(xEdges, yEdges, insertions, deletions, prevRanks,
-        prune = false)
-    val seeds = frontierSeeds(xEdges, yEdges, insertions, deletions)
-    run(yEdges, Some(prevRanks), FrontierFixed(seeds), ExpandMonotone,
-      state = state)
-  }
+      insertions: DataFrame, deletions: DataFrame,
+      prevRanks: DataFrame): PagerankRun =
+    runCsr(yEdges, prevRanks,
+      frontierSeeds(xEdges, yEdges, insertions, deletions),
+      prune = false, fixedFrontier = false)
 
   /** V5 — pagerankPruneDynamicFrontier (/root/reference/inc/pagerankPrune.hxx:301-329):
     * DF marking + closed-form self-loop removal
     * a[v] = (C0 + P·(av − rv/d)) / (1 − P/d)  (pagerankPrune.hxx:29-41),
     * and the frontier can SHRINK: a swept vertex stays marked only while its
-    * relative change exceeds pruneTolerance (pagerankPrune.hxx:62-67).
+    * relative change exceeds pruneTolerance (pagerankPrune.hxx:62-67);
+    * expansion skips the self edge.
     * Note the reference's OMP prune driver divides C0 by span, not order
     * (pagerankPrune.hxx:261) — with our dense 0-based ids span==order, so
     * C0=(1−P)/N is exact (SURVEY.md §7.4 R2). */
   def dynamicFrontierPrune(xEdges: DataFrame, yEdges: DataFrame,
-      insertions: DataFrame, deletions: DataFrame, prevRanks: DataFrame,
-      state: Option[LinkState] = None): PagerankRun = {
-    if (opts.useCsr)
-      return csrDynamicRun(xEdges, yEdges, insertions, deletions, prevRanks,
-        prune = true)
-    val seeds = frontierSeeds(xEdges, yEdges, insertions, deletions)
-    run(yEdges, Some(prevRanks), FrontierFixed(seeds), ExpandPrune,
-      pruneKernel = true, state = state)
-  }
+      insertions: DataFrame, deletions: DataFrame,
+      prevRanks: DataFrame): PagerankRun =
+    runCsr(yEdges, prevRanks,
+      frontierSeeds(xEdges, yEdges, insertions, deletions),
+      prune = true, fixedFrontier = false)
 
-  /** PagerankOptions.useCsr routing for the dynamic-frontier variants: the
-    * one-shot form of the [[CsrDynamic]] engine — freeze y, align the warm
-    * ranks (+exact S), deliver the DF initial marking as the first round's
-    * messages, run the O(frontier) push loop. Batch loops that carry CSR
-    * state across batches should call [[CsrDynamic.applyBatch]] directly
-    * (splice instead of re-freeze); results are identical
-    * (CsrDynamicSpec). */
-  private def csrDynamicRun(xEdges: DataFrame, yEdges: DataFrame,
-      insertions: DataFrame, deletions: DataFrame, prevRanks: DataFrame,
-      prune: Boolean): PagerankRun = {
-    val seeds = frontierSeeds(xEdges, yEdges, insertions, deletions)
+  /** The one-shot form of the [[CsrDynamic]] engine shared by the dynamic
+    * variants: freeze y, align the warm ranks (+ exact S), deliver `seeds`
+    * as the first round's marks, run the O(frontier) push loop. */
+  private def runCsr(yEdges: DataFrame, prevRanks: DataFrame,
+      seeds: DataFrame, prune: Boolean, fixedFrontier: Boolean): PagerankRun = {
     val g = new CsrPageRank(spark, opts).build(yEdges)
     val dyn = new CsrDynamic(spark, opts)
-    val state = dyn.stateFromRanks(g, prevRanks)
-    val (res, _) = dyn.runFromSeeds(g, state, seeds, prune)
-    res
+    dyn.runFromSeeds(g, dyn.stateFromRanks(g, prevRanks), seeds, prune,
+      fixedFrontier)._1
   }
 
   // ------------------------------------------------------------- link state
@@ -219,69 +294,7 @@ class PageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()) {
     LinkState(links, degs, degs.count(), nEdges, hubsOpt)
   }
 
-  /** Advance the link state by one batch WITHOUT an O(|E|) rebuild — the
-    * Spark analog of the reference's lazy amortized adjacency merge
-    * (/root/reference/inc/_bitset.hxx:227-262): only vertices whose out-list
-    * the batch touches are re-derived.
-    *
-    *  - touched = distinct srcs of insertions ∪ deletions (O(|batch|), broadcast)
-    *  - untouched links rows pass through (one broadcast anti-join SCAN of
-    *    the cached links — no shuffle, no re-aggregation)
-    *  - touched rows are rebuilt from prev links ∪ ins − del and re-counted
-    *    (O(|batch|·outDeg) rows)
-    *
-    * Contract (same as the engine-wide invariant): insertions must carry a
-    * self-loop for any vertex not previously in the graph, so every vertex
-    * keeps outDeg ≥ 1. The hub/salt map is carried over unchanged (skew
-    * drifts only O(|batch|) per batch; it is a performance hint — refreshed
-    * on the next full [[buildLinks]]).
-    */
-  def updateLinks(prev: LinkState, insertions: DataFrame,
-      deletions: DataFrame): LinkState = {
-    val parts = spark.sparkContext.defaultParallelism
-    val ins = insertions.select(col("src"), col("dst"))
-    val del = deletions.select(col("src"), col("dst"))
-    val touched = ins.select("src").union(del.select("src")).distinct().ckpt()
-    val untouched = prev.links.join(broadcast(touched), Seq("src"), "left_anti")
-    val prevTouched = prev.links
-      .join(broadcast(touched), Seq("src"), "left_semi")
-      .select(col("src"), col("dst"))
-    val newEdges = prevTouched
-      .join(del, Seq("src", "dst"), "left_anti")
-      .union(ins.join(broadcast(touched), Seq("src"), "left_semi"))
-      .dropDuplicates("src", "dst")
-    val newDeg = newEdges.groupBy("src").agg(count(lit(1)).as("outDeg"))
-    var touchedLinks = newEdges.join(newDeg, "src")
-      .select(col("src"), col("dst"), col("outDeg"))
-    prev.hubs.foreach { h =>
-      touchedLinks = touchedLinks.join(broadcast(h), Seq("dst"), "left")
-        .select(col("src"), col("dst"), col("outDeg"),
-          pmod(xxhash64(col("src")), coalesce(col("saltMod"), lit(1L)))
-            .as("salt"))
-    }
-    // One |E|-row repartition restores the src partitioning for the
-    // superstep joins (the union would otherwise leave it unknown and every
-    // superstep would re-shuffle); no |E|-scale aggregation happens anywhere.
-    val links = untouched.union(touchedLinks)
-      .repartition(parts, col("src")).ckpt()
-    // Degrees advance incrementally as well: untouched ids keep theirs.
-    val degs = prev.degs
-      .join(broadcast(touched.withColumnRenamed("src", "id")), Seq("id"), "left_anti")
-      .union(newDeg.select(col("src").as("id"), col("outDeg")))
-      .ckpt()
-    LinkState(links, degs, degs.count(), links.count(), prev.hubs)
-  }
-
   // ------------------------------------------------------------ frontier ops
-
-  private sealed trait Frontier0
-  private case object FrontierAll extends Frontier0
-  private final case class FrontierFixed(ids: DataFrame) extends Frontier0
-
-  private sealed trait Expansion
-  private case object NoExpansion extends Expansion
-  private case object ExpandMonotone extends Expansion
-  private case object ExpandPrune extends Expansion
 
   /** DF initial marking (/root/reference/inc/pagerank.hxx:631-637): for each
     * deleted edge (u,·) mark out-neighbors of u in x; for each inserted
@@ -333,201 +346,4 @@ class PageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()) {
 
   private def maybeBroadcast(df: DataFrame, n: Long): DataFrame =
     if (n <= broadcastFrontierMax) broadcast(df) else df
-
-  // ------------------------------------------------------------- main driver
-
-  /** The superstep loop — the reference's pagerankInvoke
-    * (/root/reference/inc/pagerank.hxx:335-373) with fi/fm/fa/fu/fc/fs bound
-    * by the variant wrappers above. */
-  private def run(yEdges: DataFrame, prevRanks: Option[DataFrame],
-      frontier0: Frontier0, expand: Expansion,
-      pruneKernel: Boolean = false,
-      state: Option[LinkState] = None): PagerankRun = {
-
-    val t0 = System.nanoTime()
-    val parts = spark.sparkContext.defaultParallelism
-    val st = state.getOrElse(buildLinks(yEdges))
-    val links = st.links
-    val degs = st.degs
-    val n = st.n
-    val salted = st.hubs.isDefined
-    // Empty graph → empty result (reference: `if (xt.empty) return {}`,
-    // /root/reference/inc/pagerank.hxx:444).
-    if (n == 0) {
-      return PagerankRun(degs.select(col("id"), lit(0.0).as("rank")),
-        PagerankStats(0, 0, 0, 0, 0.0))
-    }
-    val c0 = (1 - P) / n
-
-    // fi — init ranks (1/N cold, or warm copy with 0.0 for new vertices).
-    // Every per-iteration vector is localCheckpoint(eager)-ed: iterative
-    // plans reference their predecessor more than once, so without eager
-    // lineage truncation the logical plan doubles per superstep
-    // (SURVEY.md §7.4 R5). On a multi-executor cluster with opts.checkpointDir
-    // set, the Checkpointer additionally persists ranks durably.
-    var ranks = (prevRanks match {
-      case None => degs.select(col("id"), lit(1.0 / n).as("rank"))
-      case Some(q) =>
-        degs.select("id").join(q.select("id", "rank"), Seq("id"), "left")
-          .select(col("id"), coalesce(col("rank"), lit(0.0)).as("rank"))
-    }).repartition(parts, col("id")).ckpt()
-    val t1 = System.nanoTime()
-
-    // fm — mark affected.
-    var frontier: Option[DataFrame] = frontier0 match {
-      case FrontierAll => None
-      case FrontierFixed(ids) => Some(ids.ckpt())
-    }
-    var frontierN = frontier.map(_.count()).getOrElse(n)
-    val t2 = System.nanoTime()
-
-    var iter = 0
-    var residual = Double.MaxValue
-    val stepTimes = scala.collection.mutable.ArrayBuffer[Double]()
-
-    while (iter < opts.maxIterations && residual >= opts.tolerance &&
-        frontierN > 0) {
-      val stepT0 = System.nanoTime()
-      // Sweep: contributions pulled over in-edges of affected vertices only.
-      val sweptLinks = frontier match {
-        case None => links
-        case Some(f) =>
-          links.join(maybeBroadcast(f.withColumnRenamed("id", "dst"), frontierN),
-            Seq("dst"), "left_semi")
-      }
-      // Aggregate AFTER an explicit repartition by dst: links are clustered
-      // by src, so dst keys are ~random per map task — a pre-shuffle partial
-      // aggregation would build a near-|V|-sized hash map per task (combine
-      // ratio ≈ 1) and sit at the spill boundary. Shuffling the raw
-      // contributions first costs ~25% more shuffle bytes but the partial+
-      // final aggregation pair then runs post-exchange on clustered keys
-      // (per-task map = |V|/parts entries), flat in memory.
-      // With hub dsts present, the exchange key is (dst, salt) and a second
-      // O(|V| + hubs·saltMod)-row aggregation folds the salted partials —
-      // no reduce key ever receives more than ~hubThreshold rows.
-      val rawContribs = sweptLinks
-        .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
-      val contribs =
-        if (!salted)
-          rawContribs
-            .select(col("dst").as("id"), (col("rank") / col("outDeg")).as("rc"))
-            .repartition(parts, col("id"))
-            .groupBy(col("id"))
-            .agg(sum(col("rc")).as("c"))
-        else
-          rawContribs
-            .select(col("dst").as("id"), col("salt"),
-              (col("rank") / col("outDeg")).as("rc"))
-            .repartition(parts, col("id"), col("salt"))
-            .groupBy(col("id"), col("salt"))
-            .agg(sum(col("rc")).as("rc"))
-            .groupBy(col("id"))
-            .agg(sum(col("rc")).as("c"))
-
-      val newAffected =
-        if (!pruneKernel)
-          contribs.select(col("id"), (lit(c0) + lit(P) * col("c")).as("rank"))
-        else
-          // closed-form self-loop removal (pagerankPrune.hxx:29-41); needs
-          // the vertex's own previous rank and out-degree — joined below.
-          contribs.join(degs, Seq("id"))
-            .join(ranks.withColumnRenamed("rank", "prev0"), Seq("id"))
-            .select(col("id"),
-              ((lit(c0) + lit(P) * (col("c") - col("prev0") / col("outDeg")))
-                / (lit(1.0) - lit(P) / col("outDeg"))).as("rank"))
-
-      // New rank vector: swept vertices take their new rank, unaffected
-      // vertices copy through (the reference prune kernel's a[u]=r[u],
-      // /root/reference/inc/pagerankPrune.hxx:60). This localCheckpoint is
-      // the ONE expensive materialization job of the superstep; it also
-      // truncates lineage, which would otherwise double per superstep.
-      val newRanks = (frontier match {
-        case None => newAffected
-        case Some(f) =>
-          newAffected.union(
-            ranks.join(maybeBroadcast(f, frontierN), Seq("id"), "left_anti"))
-            .repartition(parts, col("id"))
-      }).ckpt()
-
-      // Residual over the full vectors — two checkpointed RDDs, cheap O(|V|)
-      // job. Copy-through rows contribute Δ=0, exactly like the reference's
-      // liNormDelta over the whole span (L∞ default; L1 behind the flag).
-      // Throughput-measurement mode (tolerance <= 0, full sweep): the stop
-      // rule can never fire, so the residual job is skipped entirely and the
-      // superstep is exactly one materialization job.
-      val joined = newRanks
-        .join(ranks.withColumnRenamed("rank", "prev"), Seq("id"))
-      if (opts.tolerance <= 0 && expand == NoExpansion) {
-        residual = Double.MaxValue
-      } else {
-        val normCol =
-          if (opts.useL1Residual) sum(abs(col("rank") - col("prev")))
-          else max(abs(col("rank") - col("prev")))
-        val row = joined.agg(normCol.as("res")).collect()(0)
-        residual = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-      }
-
-      // fs — frontier transform for the next superstep. relΔ of unswept rows
-      // is exactly 0, so filtering the full join recovers the swept sets.
-      val relDelta = abs(col("rank") - col("prev")) /
-        greatest(col("rank"), col("prev"))
-      val nextFrontier: Option[DataFrame] = expand match {
-        case NoExpansion => frontier
-        case ExpandMonotone =>
-          // fu (/root/reference/inc/pagerank.hxx:688-692): mark out-neighbors
-          // of vertices whose relative change exceeds frontierTolerance.
-          val changed = joined.where(relDelta > opts.frontierTolerance)
-            .select(col("id").as("src"))
-          val grown = links
-            .join(maybeBroadcast(changed, frontierN), Seq("src"), "left_semi")
-            .select(col("dst").as("id"))
-          Some(frontier.get.union(grown).distinct())
-        case ExpandPrune =>
-          // prune rule (/root/reference/inc/pagerankPrune.hxx:62-67): keep a
-          // swept vertex only while relΔ > pruneTolerance; expansion skips
-          // the self edge (v != u).
-          val keep = joined.where(relDelta > opts.pruneTolerance).select("id")
-          val changed = joined.where(relDelta > opts.frontierTolerance)
-            .select(col("id").as("src"))
-          val grown = links.where(col("dst") =!= col("src"))
-            .join(maybeBroadcast(changed, frontierN), Seq("src"), "left_semi")
-            .select(col("dst").as("id"))
-          Some(keep.union(grown).distinct())
-      }
-
-      iter += 1
-      val frontierChanged = expand != NoExpansion
-      val nextFrontierMat = nextFrontier.map { f =>
-        if (!frontierChanged) f // same fixed frontier, already checkpointed
-        else f.ckpt()
-      }
-      val nextFrontierN =
-        if (!frontierChanged) frontierN
-        else nextFrontierMat.map(_.count()).getOrElse(n)
-
-      // Durable checkpoint manifest for mid-iteration resume (north rule).
-      // Written every `checkpointEvery` supersteps plus always on the final
-      // one, so `latest()` resumes from at most checkpointEvery-1 steps back
-      // and the converged state is always durable.
-      val willStop = iter >= opts.maxIterations || residual < opts.tolerance ||
-        nextFrontierN == 0
-      opts.checkpointDir.foreach { dir =>
-        if (willStop || iter % opts.checkpointEvery == 0)
-          Checkpointer.save(dir, iter, newRanks, nextFrontierMat, residual)
-      }
-
-      // Swap buffers (reference's swap(a, r), pagerank.hxx:366); old
-      // checkpoint RDDs are reclaimed by the ContextCleaner once
-      // unreferenced (spark.cleaner.referenceTracking.cleanCheckpoints).
-      ranks = newRanks
-      frontierN = nextFrontierN
-      frontier = nextFrontierMat
-      stepTimes += (System.nanoTime() - stepT0) / 1e6
-    }
-
-    val t3 = System.nanoTime()
-    val stats = PagerankStats(iter, (t1 - t0) / 1e6, (t2 - t1) / 1e6,
-      (t3 - t2) / 1e6, residual, stepTimes.toSeq)
-    PagerankRun(ranks, stats)
-  }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.graph.EdgeOps
 import graft.util.Ckpt._
 import graft.model.PagerankOptions
-import graft.pagerank.{CsrDynamic, CsrPageRank, PageRank}
+import graft.pagerank.{CsrDynamic, CsrPageRank}
 import graft.pagerank.CsrPageRank.CsrGraph
 import graft.pagerank.CsrDynamic.CsrState
 
@@ -25,11 +25,11 @@ import graft.pagerank.CsrDynamic.CsrState
   * exactly the reference's per-batch loop (§3.2), driven by Spark's source
   * sequencing, checkpointing and exactly-once batch replay.
   *
-  * With `opts.useCsr` the re-rank runs on a CARRIED [[CsrDynamic]] engine:
-  * the frozen CSR graph + per-partition (rank, S, flag) state advance by
-  * in-place splice per micro-batch — O(frontier) supersteps, no per-batch
-  * refreeze — falling back to a warm full re-rank + lazy refreeze only when
-  * a batch grows the vertex universe.
+  * The re-rank runs on a CARRIED [[CsrDynamic]] engine: the frozen CSR
+  * graph + per-partition (rank, S, flag) state advance by in-place splice
+  * per micro-batch — O(frontier) supersteps, no per-batch refreeze. A batch
+  * that grows the vertex universe re-freezes the grown graph and re-ranks
+  * it with Naive-dynamic, whose state the next batch carries on.
   *
   * Durability & resume (north rule): with `opts.checkpointDir` set, every
   * COMPLETED batch appends its normalized batch rows and its converged rank
@@ -69,11 +69,10 @@ class IncrementalPageRank(spark: SparkSession,
   /** Current vertex universe — starts at `vertexUniverse` and GROWS when a
     * batch introduces novel endpoints (see [[growUniverse]]). */
   @volatile private var universe: DataFrame = vertexUniverse
-  /** Carried CSR engine state (opts.useCsr): the frozen graph + per-
-    * partition (rank, S, flag) blocks advanced by in-place splice per
-    * micro-batch — O(frontier) supersteps instead of the DataFrame path's
-    * O(|V|)-per-superstep floor. Rebuilt lazily (after resume, or after a
-    * universe-growth batch invalidates the frozen universe). */
+  /** Carried CSR engine state: the frozen graph + per-partition (rank, S,
+    * flag) blocks advanced by in-place splice per micro-batch. Set by every
+    * batch; only [[restore]] leaves it empty, and the next batch re-freezes
+    * the restored edge set. */
   @volatile private var csrG: CsrGraph = _
   @volatile private var csrSt: org.apache.spark.rdd.RDD[CsrState] = _
 
@@ -90,8 +89,8 @@ class IncrementalPageRank(spark: SparkSession,
     * batch — because every vertex keeps its self-loop (engine invariant,
     * /root/reference/main.cxx:127-128). Filtering only inside the CSR
     * splice (as before r4) let the `edges` DataFrame and the carried CSR
-    * graph diverge on such a batch: a later refreeze (growth, resume) or
-    * the non-CSR path would then silently rank a different graph. */
+    * graph diverge on such a batch: a later refreeze (growth, resume)
+    * would then silently rank a different graph. */
   private def split(batch: DataFrame): (DataFrame, DataFrame) = {
     val b = batch
     // NULL op = insert (a plain (src,dst,seq) file read through the
@@ -131,7 +130,7 @@ class IncrementalPageRank(spark: SparkSession,
     * full sweep): the documented rebuild trigger. Subsequent batches with no
     * novel endpoints resume the O(frontier) DF path. */
   def applyBatch(batch: DataFrame): Unit = synchronized {
-    val pr = new PageRank(spark, opts)
+    val dyn = new CsrDynamic(spark, opts)
     val (ins, del) = split(batch)
     val grew = growUniverse(ins, del)
     if (edges == null) {
@@ -141,52 +140,54 @@ class IncrementalPageRank(spark: SparkSession,
       edges = EdgeOps.withSelfLoops(
         EdgeOps.applyBatch(ins.limit(0), ins, del), universe)
         .ckpt()
-      ranks = pr.static(edges).ranks
-    } else {
-      val x = edges
-      val y =
-        (if (grew)
-          EdgeOps.withSelfLoops(EdgeOps.applyBatch(x, ins, del), universe)
-        else EdgeOps.applyBatch(x, ins, del)).ckpt()
-      if (grew) {
-        // universe grew ⇒ N and C0 changed ⇒ warm full re-rank, and the
-        // frozen CSR universe is stale — drop it; rebuilt lazily next batch
-        ranks = pr.naiveDynamic(y, ranks).ranks
-        dropCsr()
-      } else if (opts.useCsr) {
-        if (csrG == null) bootstrapCsr(x)
-        val dyn = new CsrDynamic(spark, opts)
-        // splice contract: insertions absent from x, deletions present
-        // (self-loop deletions were already dropped in split())
-        val insT = EdgeOps.tidyInsertions(ins, x)
-        val delT = EdgeOps.tidyDeletions(del, x)
-        val (g2, run, st2) = dyn.applyBatch(csrG, csrSt, insT, delT,
-          prune = false)
-        csrG.blocks.unpersist(false)
-        csrSt.unpersist(false)
-        csrG = g2; csrSt = st2
-        ranks = run.ranks
-      } else {
-        ranks = pr.dynamicFrontier(x, y, ins, del, ranks).ranks
-      }
+      val g = new CsrPageRank(spark, opts).build(edges)
+      val (run, st) = dyn.staticWithState(g)
+      carry(g, st)
+      ranks = run.ranks
+    } else if (grew) {
+      // universe grew ⇒ N and C0 changed ⇒ warm full re-rank of the grown
+      // graph: Naive-dynamic, every universe vertex a fixed seed
+      val y = EdgeOps.withSelfLoops(EdgeOps.applyBatch(edges, ins, del),
+        universe).ckpt()
+      val g = new CsrPageRank(spark, opts).build(y)
+      val st0 = dyn.stateFromRanks(g, ranks)
+      val (run, st) = dyn.runFromSeeds(g, st0, universe, prune = false,
+        fixedFrontier = true)
+      st0.unpersist(false)
+      carry(g, st)
+      ranks = run.ranks
       edges = y
+    } else {
+      if (csrG == null) bootstrapCsr(edges)
+      // splice contract: insertions absent from x, deletions present
+      // (self-loop deletions were already dropped in split()). A deletion
+      // the same batch re-inserts leaves the edge in place
+      // (EdgeOps.applyBatch deletes first), so it is no deletion here.
+      val insT = EdgeOps.tidyInsertions(ins, edges)
+      val delT = EdgeOps.tidyDeletions(del, edges)
+        .join(ins, Seq("src", "dst"), "left_anti")
+      val (g2, run, st2) = dyn.applyBatch(csrG, csrSt, insT, delT,
+        prune = false)
+      carry(g2, st2)
+      ranks = run.ranks
+      edges = EdgeOps.applyBatch(edges, ins, del).ckpt()
     }
     batchesApplied += 1
     persistCompletedBatch(batch)
   }
 
-  private def dropCsr(): Unit = {
+  /** Install the next carried (graph, state) pair and release the old one. */
+  private def carry(g: CsrGraph, st: org.apache.spark.rdd.RDD[CsrState]): Unit = {
     if (csrG != null) csrG.blocks.unpersist(false)
     if (csrSt != null) csrSt.unpersist(false)
-    csrG = null; csrSt = null
+    csrG = g; csrSt = st
   }
 
-  /** Freeze the current edge set and align the current ranks — the carried
-    * CSR engine's (re)entry point after bootstrap, resume, or growth. */
+  /** Freeze the restored edge set and align the restored ranks — the
+    * carried CSR engine's re-entry point after [[restore]]. */
   private def bootstrapCsr(x: DataFrame): Unit = {
-    val dyn = new CsrDynamic(spark, opts)
-    csrG = new CsrPageRank(spark, opts).build(x)
-    csrSt = dyn.stateFromRanks(csrG, ranks)
+    val g = new CsrPageRank(spark, opts).build(x)
+    carry(g, new CsrDynamic(spark, opts).stateFromRanks(g, ranks))
   }
 
   /** Durable per-batch log: normalized batch rows + converged ranks +

@@ -4,12 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.EdgeOps
 import graft.ingest.WebGraphFixture
-import graft.model.PagerankOptions
 import graft.pagerank.{CsrDynamic, CsrPageRank, PageRank}
 
 /** CSR dynamic-frontier engine (push-based delta propagation over
-  * partition-local CSR blocks) vs the DataFrame DF/DF-P variants and the
-  * in-memory oracle. */
+  * partition-local CSR blocks) vs the sequential dynamic reference
+  * (`Oracle.dynamic`) and the converged in-memory oracle. */
 class CsrDynamicSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -50,13 +49,11 @@ class CsrDynamicSpec extends AnyFunSuite {
     assert(got.size === want.size)
     assert(Oracle.allclose(got, want, 1e-6), s"maxDiff=${Oracle.maxDiff(got, want)}")
 
-    // vs DataFrame DF (same variant, same tolerances)
-    val pr = new PageRank(spark)
-    val prev = pr.static(xDf).ranks
-    val dfDataframe = TestSpark.collectRanks(
-      pr.dynamicFrontier(xDf, TestSpark.edgesDf(spark, y), insDf, none, prev).ranks)
-    assert(Oracle.allclose(got, dfDataframe, 1e-9),
-      s"maxDiff=${Oracle.maxDiff(got, dfDataframe)}")
+    // vs the sequential DF reference from the same warm ranks (same
+    // variant, same tolerances)
+    val (ref, _) = Oracle.dynamic(base, y, TestSpark.collectRanks(staticRun.ranks),
+      ins, Nil, Oracle.DF)
+    assert(Oracle.allclose(got, ref, 1e-9), s"maxDiff=${Oracle.maxDiff(got, ref)}")
   }
 
   test("deleting a vertex's only edge (its self-loop) breaks the self-loop contract") {
@@ -140,7 +137,7 @@ class CsrDynamicSpec extends AnyFunSuite {
     }
   }
 
-  test("PagerankOptions.useCsr routes dynamicFrontier/Prune through the CSR engine, identical results") {
+  test("PageRank's dynamic variants on the CSR engine: oracle + reference") {
     val (base, ins) = fixture(200L)
     val y = (base ++ ins).distinct
     val xDf = TestSpark.edgesDf(spark, base)
@@ -149,31 +146,19 @@ class CsrDynamicSpec extends AnyFunSuite {
     val none = insDf.limit(0)
     val want = Oracle.pagerank(new Oracle.G(y), tol = 1e-100)
 
-    val prCsr = new PageRank(spark, PagerankOptions(useCsr = true))
-    val prevCsr = prCsr.static(xDf).ranks
-    val gotDf = TestSpark.collectRanks(
-      prCsr.dynamicFrontier(xDf, yDf, insDf, none, prevCsr).ranks)
-    assert(gotDf.size === want.size)
-    assert(Oracle.allclose(gotDf, want, 1e-6),
-      s"maxDiff=${Oracle.maxDiff(gotDf, want)}")
-    val gotDfp = TestSpark.collectRanks(
-      prCsr.dynamicFrontierPrune(xDf, yDf, insDf, none, prevCsr).ranks)
-    assert(Oracle.allclose(gotDfp, want, 2e-6),
-      s"maxDiff=${Oracle.maxDiff(gotDfp, want)}")
-
-    // and value-identical (within residual tolerance) to the DataFrame path
-    val prDf = new PageRank(spark)
-    val prevDf = prDf.static(xDf).ranks
-    val dfPath = TestSpark.collectRanks(
-      prDf.dynamicFrontier(xDf, yDf, insDf, none, prevDf).ranks)
-    assert(Oracle.allclose(gotDf, dfPath, 1e-9),
-      s"maxDiff=${Oracle.maxDiff(gotDf, dfPath)}")
-
-    // Dynamic Traversal through the CSR route (fixed-frontier mode)
-    val gotDt = TestSpark.collectRanks(
-      prCsr.dynamicTraversal(xDf, yDf, insDf, none, prevCsr).ranks)
-    assert(Oracle.allclose(gotDt, want, 1e-6),
-      s"maxDiff=${Oracle.maxDiff(gotDt, want)}")
+    val pr = new PageRank(spark)
+    val prev = pr.static(xDf).ranks.cache()
+    val prevMap = TestSpark.collectRanks(prev)
+    for (v <- Oracle.Variants) {
+      val got = TestSpark.collectRanks(
+        TestSpark.dynamicRun(pr, v, xDf, yDf, insDf, none, prev).ranks)
+      assert(got.size === want.size)
+      assert(Oracle.allclose(got, want, if (v == Oracle.DFP) 2e-6 else 1e-6),
+        s"$v maxDiff=${Oracle.maxDiff(got, want)}")
+      // and value-identical (within residual tolerance) to the reference
+      val (ref, _) = Oracle.dynamic(base, y, prevMap, ins, Nil, v)
+      assert(Oracle.allclose(got, ref, 1e-9), s"$v maxDiff=${Oracle.maxDiff(got, ref)}")
+    }
   }
 
   test("one-shot runFromSeeds equals carried-state applyBatch (same batch, same fixpoint)") {
@@ -189,9 +174,8 @@ class CsrDynamicSpec extends AnyFunSuite {
     val (_, st0) = dyn.staticWithState(g0)
     val (_, carried, _) = dyn.applyBatch(g0, st0, insDf, none, prune = false)
 
-    val oneShot = new PageRank(spark, PagerankOptions(useCsr = true))
-      .dynamicFrontier(xDf, yDf, insDf, none,
-        new PageRank(spark, PagerankOptions(useCsr = true)).static(xDf).ranks)
+    val oneShot = new PageRank(spark).dynamicFrontier(xDf, yDf, insDf, none,
+      new CsrPageRank(spark).static(xDf).ranks)
     val a = TestSpark.collectRanks(carried.ranks)
     val b = TestSpark.collectRanks(oneShot.ranks)
     assert(Oracle.allclose(a, b, 1e-9), s"maxDiff=${Oracle.maxDiff(a, b)}")

@@ -97,9 +97,9 @@ class CsrPageRankSpec extends AnyFunSuite {
     assert(Oracle.allclose(a, b, 1e-12))
   }
 
-  test("useCsr option dispatches PageRank.static through the CSR path") {
+  test("CsrPageRank.static converges to the oracle on line4") {
     val edges = TestSpark.edgesDf(spark, line4)
-    val run = new PageRank(spark, PagerankOptions(useCsr = true)).static(edges)
+    val run = new CsrPageRank(spark).static(edges)
     val want = Oracle.pagerank(new Oracle.G(line4), tol = 1e-100)
     assert(Oracle.allclose(TestSpark.collectRanks(run.ranks), want, 1e-6))
   }

@@ -2,6 +2,8 @@ package graft
 
 import scala.collection.mutable
 
+import graft.model.PagerankOptions
+
 /** Test-only in-memory oracles — direct transliteration of the reference
   * kernels (FIXTURES.md §4), executable on graphs up to ~10^4 edges.
   *
@@ -48,9 +50,81 @@ object Oracle {
     r
   }
 
-  /** DF-P closed-form kernel over affected set (pagerankPrune.hxx:29-41) with
-    * the reference's prune/frontier rules — used to pin the tiny-graph
-    * frontier behavior; converged values equal plain pagerank's. */
+  /** The four dynamic variants of `PageRank` (ND, DT, DF, DF-P). */
+  sealed trait Variant
+  case object ND extends Variant
+  case object DT extends Variant
+  case object DF extends Variant
+  case object DFP extends Variant
+  val Variants: Seq[Variant] = Seq(ND, DT, DF, DFP)
+
+  /** Sequential Jacobi reference for the dynamic variants, with the
+    * semantics of the reference's pagerankInvoke
+    * (/root/reference/inc/pagerank.hxx:335-373, inc/pagerankPrune.hxx):
+    *  - ranks start from `prev` (0.0 for vertices absent from it);
+    *  - seeds = out-neighbours in x of deletion sources ∪ out-neighbours in
+    *    y of insertion sources (the DF marking, pagerank.hxx:631-637);
+    *  - ND sweeps every vertex, DT the BFS closure of the seeds in y; both
+    *    frontiers stay fixed;
+    *  - DF grows the frontier by the out-neighbours (in y) of every swept
+    *    vertex whose relΔ exceeds frontierTolerance;
+    *  - DF-P uses the closed-form self-loop removal, keeps a swept vertex
+    *    only while relΔ > pruneTolerance, and expands past the self edge;
+    *  - stop when L∞(a − r) < tolerance or the frontier is empty.
+    * `x` and `y` must carry a self-loop on every vertex.
+    * @return (ranks over y's vertices, supersteps run) */
+  def dynamic(x: Seq[(Long, Long)], y: Seq[(Long, Long)],
+      prev: Map[Long, Double], ins: Seq[(Long, Long)],
+      del: Seq[(Long, Long)], variant: Variant,
+      opts: PagerankOptions = PagerankOptions()): (Map[Long, Double], Int) = {
+    val gx = new G(x)
+    val gy = new G(y)
+    val p = opts.damping
+    val c0 = (1 - p) / gy.verts.size
+    def outY(u: Long): Seq[Long] = gy.outNbrs.getOrElse(u, Nil)
+    val seeds = del.map(_._1).distinct.flatMap(gx.outNbrs.getOrElse(_, Nil)) ++
+      ins.map(_._1).distinct.flatMap(outY)
+    var frontier: Set[Long] = variant match {
+      case ND => gy.verts.toSet
+      case DT =>
+        var seen = seeds.toSet
+        var hop = seen
+        while (hop.nonEmpty) {
+          hop = hop.flatMap(outY) -- seen
+          seen ++= hop
+        }
+        seen
+      case DF | DFP => seeds.toSet
+    }
+    var r = gy.verts.map(v => v -> prev.getOrElse(v, 0.0)).toMap
+    var iter = 0
+    var residual = Double.MaxValue
+    while (iter < opts.maxIterations && residual >= opts.tolerance &&
+        frontier.nonEmpty) {
+      val a = frontier.iterator.map { v =>
+        val s = gy.inNbrs(v).map(u => r(u) / gy.outDeg(u)).sum
+        val d = gy.outDeg(v).toDouble
+        v -> (if (variant == DFP) (c0 + p * (s - r(v) / d)) / (1 - p / d)
+          else c0 + p * s)
+      }.toMap
+      def relDelta(v: Long): Double = {
+        val d = math.abs(a(v) - r(v))
+        if (d == 0.0) 0.0 else d / math.max(a(v), r(v))
+      }
+      residual = a.keys.map(v => math.abs(a(v) - r(v))).max
+      val changed = a.keys.filter(relDelta(_) > opts.frontierTolerance)
+      frontier = variant match {
+        case ND | DT => frontier
+        case DF => frontier ++ changed.flatMap(outY)
+        case DFP => a.keys.filter(relDelta(_) > opts.pruneTolerance).toSet ++
+          changed.flatMap(u => outY(u).filter(_ != u))
+      }
+      r = r ++ a
+      iter += 1
+    }
+    (r, iter)
+  }
+
   def connectedComponents(g: G): Map[Long, Long] = {
     val parent = mutable.Map[Long, Long](g.verts.map(v => v -> v): _*)
     def find(x: Long): Long = {

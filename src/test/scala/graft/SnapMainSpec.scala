@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.model.PagerankOptions
 import graft.tools.SnapMain
 
 /** End-to-end reference-experiment replay (SnapMain.run) on a generated
@@ -24,9 +23,14 @@ class SnapMainSpec extends AnyFunSuite {
     val f = dir.resolve("g.txt")
     Files.writeString(f, "# header\n" + lines.mkString("\n") + "\n")
 
+    // the carried-CSR loop performs EXACTLY ONE CSR freeze for the whole
+    // run (base graph); every batch advances by splice
     val emitted = Seq.newBuilder[String]
+    val buildsBefore = graft.pagerank.CsrPageRank.buildCount.get()
     val results = SnapMain.run(spark, f.toString, rows, 400L,
       batchFraction = 0.01, nBatches = 3, emit = emitted += _)
+    assert(graft.pagerank.CsrPageRank.buildCount.get() - buildsBefore === 1L,
+      "carried-CSR SnapMain must freeze exactly once")
     assert(results.size === 3)
     // DF-P's pruning truncates refinement at relΔ ≤ pruneTolerance=1e-6, so
     // its L1 error is bounded by (affected rank mass)·pTol/(1−P) ≈ 6.7e-6
@@ -47,22 +51,26 @@ class SnapMainSpec extends AnyFunSuite {
     assert(emitted.result().size === 3)
     assert(emitted.result().head.startsWith("""{"batch":0,"""))
 
-    // CSR-routed engines produce the same quality — and the carried-state
-    // loop performs EXACTLY ONE CSR freeze for the whole run (base graph);
-    // every batch advances by splice (r3 re-froze per technique per batch)
-    val buildsBefore = graft.pagerank.CsrPageRank.buildCount.get()
-    val csr = SnapMain.run(spark, f.toString, rows, 400L,
-      batchFraction = 0.01, nBatches = 2,
-      opts = PagerankOptions(useCsr = true), emit = _ => ())
-    assert(graft.pagerank.CsrPageRank.buildCount.get() - buildsBefore === 1L,
-      "carried-CSR SnapMain must freeze exactly once")
-    csr.foreach(_.foreach { case (k, r) =>
-      assert(r.l1 < bar(k), s"csr $k l1=${r.l1}")
-    })
-    // iteration counts match the DataFrame engine per technique per batch
-    results.take(2).zip(csr).foreach { case (a, b) =>
-      for (k <- Seq("naiveDynamic", "dynamicFrontier", "dynamicFrontierPrune"))
-        assert(a(k).iters === b(k).iters, s"$k iters differ: ${a(k).iters} vs ${b(k).iters}")
+    // iteration counts match the sequential reference per technique per
+    // batch, each technique carrying its own rank register from the
+    // base-graph oracle (same protocol as SnapMain: base = first 90% of the
+    // lines + self-loops over 1..rows, batches of 4 tidied insertions)
+    val body = lines.map(_.split(" ")).map(a => (a(0).toLong, a(1).toLong))
+    val loops = (1L to rows).map(v => (v, v))
+    var x = (body.take(360) ++ loops).distinct
+    val r0 = Oracle.pagerank(new Oracle.G(x), tol = 1e-15)
+    val techs = Seq("naiveDynamic" -> Oracle.ND,
+      "dynamicTraversal" -> Oracle.DT, "dynamicFrontier" -> Oracle.DF, "dynamicFrontierPrune" -> Oracle.DFP)
+    val reg = scala.collection.mutable.Map(techs.map(_._2 -> r0): _*)
+    results.zipWithIndex.foreach { case (m, b) =>
+      val ins = body.slice(360 + 4 * b, 364 + 4 * b).distinct.filterNot(x.toSet)
+      val y = x ++ ins
+      for ((k, v) <- techs) {
+        val (r, iters) = Oracle.dynamic(x, y, reg(v), ins, Nil, v)
+        assert(m(k).iters === iters, s"batch $b $k iters ${m(k).iters} vs reference $iters")
+        reg(v) = r
+      }
+      x = y
     }
   }
 }

@@ -80,33 +80,28 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("self-loop deletions are ignored consistently (edges and CSR never diverge)") {
-    import graft.model.PagerankOptions
-    for (useCsr <- Seq(false, true)) {
-      val P = 90L
-      val staged = WebGraphFixture.edgesOnly(spark, P).toDF()
-        .select("src", "dst").dropDuplicates("src", "dst").cache()
-      val universe = EdgeOps.vertices(staged)
-      val inc = new IncrementalPageRank(spark, universe,
-        PagerankOptions(useCsr = useCsr))
-      inc.applyBatch(staged)
-      // batch tries to delete vertex 5's self-loop plus one real edge
-      val del = Seq((5L, 5L)).toDF("src", "dst")
-        .union(staged.where($"src" =!= $"dst").limit(1))
-        .withColumn("op", lit("del"))
-      inc.applyBatch(del)
-      // the self-loop survives in the carried edge DataFrame…
-      assert(inc.currentEdges.where($"src" === 5 && $"dst" === 5).count() === 1,
-        s"useCsr=$useCsr: self-loop must survive a deletion batch")
-      // …and the ranks equal static over the graph WITHOUT the self-loop
-      // removal (only the real edge deleted)
-      val realDel = del.select("src", "dst").where($"src" =!= $"dst")
-      val y = EdgeOps.withSelfLoops(
-        EdgeOps.applyBatch(staged, staged.limit(0), realDel), universe)
-      val want = TestSpark.collectRanks(new PageRank(spark).static(y).ranks)
-      val got = TestSpark.collectRanks(inc.currentRanks)
-      assert(Oracle.allclose(got, want, 2e-6),
-        s"useCsr=$useCsr maxDiff=${Oracle.maxDiff(got, want)}")
-    }
+    val P = 90L
+    val staged = WebGraphFixture.edgesOnly(spark, P).toDF()
+      .select("src", "dst").dropDuplicates("src", "dst").cache()
+    val universe = EdgeOps.vertices(staged)
+    val inc = new IncrementalPageRank(spark, universe)
+    inc.applyBatch(staged)
+    // batch tries to delete vertex 5's self-loop plus one real edge
+    val del = Seq((5L, 5L)).toDF("src", "dst")
+      .union(staged.where($"src" =!= $"dst").limit(1))
+      .withColumn("op", lit("del"))
+    inc.applyBatch(del)
+    // the self-loop survives in the carried edge DataFrame…
+    assert(inc.currentEdges.where($"src" === 5 && $"dst" === 5).count() === 1,
+      "self-loop must survive a deletion batch")
+    // …and the ranks equal static over the graph WITHOUT the self-loop
+    // removal (only the real edge deleted)
+    val realDel = del.select("src", "dst").where($"src" =!= $"dst")
+    val y = EdgeOps.withSelfLoops(
+      EdgeOps.applyBatch(staged, staged.limit(0), realDel), universe)
+    val want = TestSpark.collectRanks(new PageRank(spark).static(y).ranks)
+    val got = TestSpark.collectRanks(inc.currentRanks)
+    assert(Oracle.allclose(got, want, 2e-6), s"maxDiff=${Oracle.maxDiff(got, want)}")
   }
 
   test("mid-stream novel vertex: universe grows and ranks converge on the grown graph") {
@@ -147,18 +142,17 @@ class StreamingSpec extends AnyFunSuite {
       s"maxDiff=${Oracle.maxDiff(got2, want2)}")
   }
 
-  test("useCsr streaming: carried CSR engine across mixed/growth batches matches static") {
-    import graft.model.PagerankOptions
+  test("carried CSR streaming across mixed/growth batches matches static") {
     val P = 110L
     val staged = WebGraphFixture.edgesOnly(spark, P).toDF()
       .select("src", "dst").dropDuplicates("src", "dst").cache()
     val universe = EdgeOps.vertices(staged).cache()
-    val inc = new IncrementalPageRank(spark, universe,
-      PagerankOptions(useCsr = true))
+    val inc = new IncrementalPageRank(spark, universe)
 
     // batch 0: bootstrap (CSR static); batch 1: insertions+deletions
-    // (carried CSR splice); batch 2: novel vertex (growth → warm full
-    // re-rank + CSR refreeze); batch 3: normal batch (CSR resumed).
+    // (carried CSR splice); batch 2: novel vertex (growth → CSR refreeze +
+    // warm full re-rank); batch 3: normal batch (splice of the carried
+    // grown graph).
     inc.applyBatch(staged)
     val del = staged.where($"src" % 9 === 0 && $"src" =!= $"dst")
       .withColumn("op", lit("del"))
