@@ -7,7 +7,7 @@ import graft.graph.EdgeOps
 import graft.util.Ckpt._
 import graft.ingest.WebGraphFixture
 import graft.model.PagerankOptions
-import graft.pagerank.{CsrDynamic, CsrPageRank, PageRank}
+import graft.pagerank.{CsrDynamic, CsrPageRank, PageRank, PagerankRun}
 import graft.pagerank.CsrPageRank.CsrGraph
 import graft.pagerank.CsrDynamic.CsrState
 
@@ -123,6 +123,10 @@ object Bench {
     val r = f
     (r, (System.nanoTime() - t0) / 1e9)
   }
+
+  /** Summed critical-path kernel seconds of a frontier run's supersteps. */
+  private def kernelSecs(run: PagerankRun): Double =
+    run.stats.supersteps.map(_.kernelCritMs).sum / 1e3
 
   private def median(xs: Seq[Double]): Double = {
     val s = xs.filterNot(_.isNaN).sorted
@@ -635,12 +639,16 @@ object Bench {
     val l1Df = new scala.collection.mutable.ArrayBuffer[Double]
     val l1Dfp = new scala.collection.mutable.ArrayBuffer[Double]
     var csrDfIters, csrDfpIters, statIters = 0
-    // fixed-cost decomposition (VERDICT r3 item 6): distributed supersteps
-    // and their critical-path kernel time, per variant, on the oracled track
-    var dfSteps, dfpSteps = 0L
-    var dfKernelNs, dfpKernelNs = 0L
-    CsrDynamic.peakActive.set(0L)
-    CsrDynamic.peakActiveEdges.set(0L)
+    // fixed-cost decomposition (VERDICT r3 item 6): critical-path kernel
+    // time per variant on the oracled track (its supersteps are the iters)
+    var dfKernelSecs, dfpKernelSecs = 0.0
+    // exact flagged-vertex count, and its out-edges, at the superstep where
+    // the affected set peaked over every dynamic run of the track
+    var peakVerts, peakEdges = 0L
+    def notePeak(run: PagerankRun): Unit =
+      run.stats.supersteps.foreach { r =>
+        if (r.flagged > peakVerts) { peakVerts = r.flagged; peakEdges = r.flaggedEdges }
+      }
 
     def tagOf(f: Double): String =
       if (f >= 1e-3) "1e3" else if (f >= 1e-4) "1e4" else "1e5"
@@ -675,13 +683,13 @@ object Bench {
         put(s"frac_${tag}_dfp_secs", arr(acc2.dfp.toSeq), compact = false)
       }
       val dfStepWall =
-        if (dfSteps > 0) csrDfComputeSecs.sum / dfSteps else Double.NaN
+        if (csrDfIters > 0) csrDfComputeSecs.sum / csrDfIters else Double.NaN
       val dfStepKernel =
-        if (dfSteps > 0) dfKernelNs / 1e9 / dfSteps else Double.NaN
+        if (csrDfIters > 0) dfKernelSecs / csrDfIters else Double.NaN
       val dfpStepWall =
-        if (dfpSteps > 0) csrDfpComputeSecs.sum / dfpSteps else Double.NaN
+        if (csrDfpIters > 0) csrDfpComputeSecs.sum / csrDfpIters else Double.NaN
       val dfpStepKernel =
-        if (dfpSteps > 0) dfpKernelNs / 1e9 / dfpSteps else Double.NaN
+        if (csrDfpIters > 0) dfpKernelSecs / csrDfpIters else Double.NaN
       put("dfp_step_wall_secs", f"$dfpStepWall%.3f")
       put("dfp_step_kernel_secs", f"$dfpStepKernel%.3f")
       put("all_query_secs", qTimes.map { case (k, v) =>
@@ -704,12 +712,10 @@ object Bench {
       put("csr_dfp_speedup_per_batch", arr(dfpSpeedups.toSeq, "%.2f"), compact = false)
       put("df_step_wall_secs", f"$dfStepWall%.3f", compact = false)
       put("df_step_kernel_secs", f"$dfStepKernel%.3f", compact = false)
-      put("df_supersteps", dfSteps.toString, compact = false)
-      put("dfp_supersteps", dfpSteps.toString, compact = false)
-      put("peak_affected_verts", CsrDynamic.peakActive.get().toString,
-        compact = false)
-      put("peak_affected_edges", CsrDynamic.peakActiveEdges.get().toString,
-        compact = false)
+      put("df_supersteps", csrDfIters.toString, compact = false)
+      put("dfp_supersteps", csrDfpIters.toString, compact = false)
+      put("peak_affected_verts", peakVerts.toString, compact = false)
+      put("peak_affected_edges", peakEdges.toString, compact = false)
     }
 
     var xEdges = x0
@@ -734,20 +740,16 @@ object Bench {
           ins.count()
           val none = ins.limit(0)
           // techniques first (same minutes-window as their baseline below)
-          val ss0 = CsrDynamic.superstepRuns.get()
-          val kn0 = CsrDynamic.kernelCritNanos.get()
           val ((gDf2, csrDfRun, stDf2), tD) =
             time(dyn.applyBatch(gDf, stDf, ins, none, prune = false))
-          val ss1 = CsrDynamic.superstepRuns.get()
-          val kn1 = CsrDynamic.kernelCritNanos.get()
           val ((gDfp2, csrDfpRun, stDfp2), tP) =
             time(dyn.applyBatch(gDfp, stDfp, ins, none, prune = true))
           acc.df += tD
           acc.dfp += tP
+          notePeak(csrDfRun); notePeak(csrDfpRun)
           if (withOracle) {
-            dfSteps += ss1 - ss0; dfKernelNs += kn1 - kn0
-            dfpSteps += CsrDynamic.superstepRuns.get() - ss1
-            dfpKernelNs += CsrDynamic.kernelCritNanos.get() - kn1
+            dfKernelSecs += kernelSecs(csrDfRun)
+            dfpKernelSecs += kernelSecs(csrDfpRun)
             csrDfSecs += tD; csrDfIters += csrDfRun.stats.iterations
             csrDfComputeSecs += csrDfRun.stats.computeTimeMs / 1e3
             csrDfpSecs += tP; csrDfpIters += csrDfpRun.stats.iterations
@@ -874,16 +876,14 @@ object Bench {
         .cache()
       probeDel.count()
       val probeNone = probeDel.limit(0)
-      val pss0 = CsrDynamic.superstepRuns.get()
-      val pkn0 = CsrDynamic.kernelCritNanos.get()
       s.sparkContext.addSparkListener(probeListener)
       val ((gProbe, probeRun, stProbe), tProbeWall) =
         time(dyn.applyBatch(gDfp, stDfp, probeNone, probeDel, prune = true))
       // listener bus is async — drain it before reading the counters
       org.apache.spark.GraftSparkBridge.waitUntilEmpty(s.sparkContext, 10000L)
       s.sparkContext.removeSparkListener(probeListener)
-      val probeSteps = math.max(1L, CsrDynamic.superstepRuns.get() - pss0)
-      val probeKernelSecs = (CsrDynamic.kernelCritNanos.get() - pkn0) / 1e9
+      val probeSteps = math.max(1, probeRun.stats.supersteps.size)
+      val probeKernelSecs = kernelSecs(probeRun)
       val probeLoopSecs = probeRun.stats.computeTimeMs / 1e3
       gProbe.blocks.unpersist(false)
       stProbe.unpersist(false)
@@ -965,8 +965,6 @@ object Bench {
     val gcMs = new scala.collection.mutable.ArrayBuffer[Double]
     val shufStages = new scala.collection.mutable.ArrayBuffer[Long]
     val diskShuf = new scala.collection.mutable.ArrayBuffer[Long]
-    val gcEvery = sys.env.getOrElse("GRAFT_BENCH_GC_EVERY", "0").toInt
-    if (gcEvery > 0) CsrDynamic.trackDeps = true
     def gcTimeMs: Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -1008,7 +1006,6 @@ object Bench {
         ("df_kernel_secs", arr(dfKern.toSeq), false),
         ("dfp_kernel_secs", arr(dfpKern.toSeq), false),
         ("gc_ms_per_batch", arr(gcMs.toSeq, "%.0f"), false),
-        ("gc_every", gcEvery.toString, false),
         ("shuffle_stages_per_batch", shufStages.mkString("[", ",", "]"), false),
         ("disk_shuffle_blocks_per_batch", diskShuf.mkString("[", ",", "]"), false))
       // endurance is a supplementary artifact — never clobber the round
@@ -1022,26 +1019,22 @@ object Bench {
         .join(xEdges, Seq("src", "dst"), "left_anti").cache()
       ins.count()
       val none = ins.limit(0)
-      CsrDynamic.batchTag = s"b${b + 1}-"
       val gc0 = gcTimeMs
-      val kc0 = CsrDynamic.kernelCritNanos.get()
       val ((gDf2, runD, stDf2), tD) =
         time(dyn.applyBatch(gDf, stDf, ins, none, prune = false))
-      val kcD = CsrDynamic.kernelCritNanos.get()
       val ((gDfp2, runP, stDfp2), tP) =
         time(dyn.applyBatch(gDfp, stDfp, ins, none, prune = true))
-      val kcP = CsrDynamic.kernelCritNanos.get()
       dfSecs += tD; dfpSecs += tP
       dfIters += runD.stats.iterations; dfpIters += runP.stats.iterations
-      dfKern += (kcD - kc0) / 1e9; dfpKern += (kcP - kcD) / 1e9
+      dfKern += kernelSecs(runD); dfpKern += kernelSecs(runP)
       gcMs += (gcTimeMs - gc0).toDouble
       val reg = org.apache.spark.scheduler.GraftSchedulerDiag
         .registrySizes(s.sparkContext)
       shufStages += reg("shuffle_map_stages")
       diskShuf += reg("disk_shuffle_blocks")
       System.err.println(f"[endurance] batch ${b + 1}/$nBatches " +
-        f"df $tD%.2fs/${runD.stats.iterations}it/${(kcD - kc0) / 1e9}%.2fk " +
-        f"dfp $tP%.2fs/${runP.stats.iterations}it/${(kcP - kcD) / 1e9}%.2fk " +
+        f"df $tD%.2fs/${runD.stats.iterations}it/${dfKern.last}%.2fk " +
+        f"dfp $tP%.2fs/${runP.stats.iterations}it/${dfpKern.last}%.2fk " +
         f"gc ${gcTimeMs - gc0}ms " +
         f"reg ${reg("shuffle_map_stages")}st/${reg("shuffle_statuses")}ss/" +
         f"${reg("disk_shuffle_blocks")}sf/${reg("disk_broadcast_blocks")}bb/" +
@@ -1072,17 +1065,8 @@ object Bench {
       // how the stream leaked every batch's shuffle registrations. The
       // engine now truncates each carried structure AT its materializing
       // job (CsrDynamic.applyBatchImpl/runLoop), so carried state arrives
-      // here already lineage-free.
-      // hypothesis knob: ContextCleaner's shuffle/accumulator/broadcast
-      // reclamation is weak-reference-driven — on a large pre-touched heap
-      // GC can be rare enough that driver-global registries grow for the
-      // whole stream. Forcing a GC every K batches tests that directly.
-      if (gcEvery > 0 && (b + 1) % gcEvery == 0) {
-        System.gc()
-        val (live, total, labels) = CsrDynamic.liveDeps
-        System.err.println(s"[endurance] post-gc shuffle deps live $live/$total" +
-          s" labels=${labels.take(60).mkString(",")}")
-      }
+      // here already lineage-free; a regression shows as growth in
+      // disk_shuffle_blocks_per_batch (and the stderr `ss` count).
     }
     val fields = Seq(
       ("metric", "\"endurance_l1_drift\"", true),
@@ -1105,7 +1089,6 @@ object Bench {
       ("df_kernel_secs", arr(dfKern.toSeq), false),
       ("dfp_kernel_secs", arr(dfpKern.toSeq), false),
       ("gc_ms_per_batch", arr(gcMs.toSeq, "%.0f"), false),
-      ("gc_every", gcEvery.toString, false),
       ("shuffle_stages_per_batch", shufStages.mkString("[", ",", "]"), false),
       ("disk_shuffle_blocks_per_batch", diskShuf.mkString("[", ",", "]"), false))
     // endurance is a supplementary artifact — never clobber the round

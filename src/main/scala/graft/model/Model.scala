@@ -71,11 +71,29 @@ final case class PagerankOptions(
   * (tightest uninterfered-rate bound; interference is strictly additive)
   * and the MEDIAN-superstep rate (robust to the min's asymmetric stall
   * exposure across core counts), and the headline scaling efficiency is
-  * the more conservative of the two. */
+  * the more conservative of the two. Static engines fill it.
+  *
+  * `supersteps` holds one [[Superstep]] record per iteration of a frontier
+  * run ([[graft.pagerank.CsrDynamic]]: every dynamic variant, the carried
+  * batch paths and the streaming front end), so `supersteps.size ==
+  * iterations` there; static engines leave it empty. */
 final case class PagerankStats(
     iterations: Int,
     initTimeMs: Double,
     markTimeMs: Double,
     computeTimeMs: Double,
     finalResidual: Double,
-    stepTimesMs: Seq[Double] = Nil)
+    stepTimesMs: Seq[Double] = Nil,
+    supersteps: Seq[Superstep] = Nil)
+
+/** What one frontier superstep measured; its iteration is its index in
+  * [[PagerankStats.supersteps]].
+  *  - `residual`: max |Δrank| over the swept vertices
+  *  - `flagged`: vertices still flagged after the sweep (marks in flight
+  *    to the next round not counted), `flaggedEdges` their out-edges
+  *  - `kernelCritMs`: the slowest task's in-kernel time — the part of the
+  *    superstep's wall that is sweep work on the critical path. Supersteps
+  *    fused into one job share that job's wall, so there is no per-step
+  *    wall: divide `computeTimeMs` by the record count. */
+final case class Superstep(residual: Double, flagged: Long,
+    flaggedEdges: Long, kernelCritMs: Double)

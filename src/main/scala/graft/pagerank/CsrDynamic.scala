@@ -5,7 +5,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-import graft.model.{PagerankOptions, PagerankStats}
+import graft.model.{PagerankOptions, PagerankStats, Superstep}
 import CsrPageRank.{contributionSums, pack, CsrBlock, CsrGraph, IdxPartitioner,
   Msg, PartitionAcc, PushAcc, SparsePush}
 import CsrDynamic._
@@ -34,6 +34,11 @@ import CsrDynamic._
   * ([[runLoop]]'s block fusion), with
   * work O(Σ outdeg(changed)) instead of O(|E|) — this is what makes a
   * 1e-4·|E| batch converge in milliseconds-per-superstep at web scale.
+  * Every run returns what it measured in its own stats: one
+  * [[graft.model.Superstep]] per superstep (residual, flagged vertices and
+  * their out-edges, critical-path kernel time), gathered from the
+  * superstep's per-partition accumulator. The engine keeps no
+  * process-global counters, so concurrent runs never mix their figures.
   *
   * A batch is applied by SPLICING the CSR blocks in place of a rebuild
   * ([[applyBatch]]): batch edges are routed to their src partitions with
@@ -339,13 +344,10 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
       * merges once — per-partition OVERWRITE-idempotent, which also makes
       * the kernel safe to run inside a ShuffleMapStage (block fusion
       * below), where Spark may re-count updates on stage retry. */
-    def defineStep(prev: RDD[(CsrState, Array[(Int, Msg)])], iterNo: Int)
+    def defineStep(prev: RDD[(CsrState, Array[(Int, Msg)])])
         : (RDD[(CsrState, Array[(Int, Msg)])], PartitionAcc[Array[Double]]) = {
       val statAcc = new PartitionAcc[Array[Double]]
       sc.register(statAcc)
-      if (CsrDynamic.trackDeps)
-        CsrDynamic.trackLabel =
-          s"${CsrDynamic.batchTag}${if (prune) "dfp" else "df"}-i$iterNo"
       val msgs = msgShuffle(prev.flatMap(_._2.iterator), ip(parts))
       val nxt = prev.map(_._1).zipPartitions(msgs, g.blocks,
         preservesPartitioning = true) { (stIt, mIt, bIt) =>
@@ -493,6 +495,7 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
     // < opts.tolerance, preserving the converged contract.
     var rhoMin = 1.0 // fastest observed per-superstep residual decay
     var prevResidual = Double.NaN
+    val records = Vector.newBuilder[Superstep]
     while (iter < opts.maxIterations && residual >= opts.tolerance &&
         active > 0) {
       val block =
@@ -512,7 +515,7 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
       var chain = cur
       var k = 0
       while (k < block) {
-        val s = defineStep(chain, iter + k)
+        val s = defineStep(chain)
         steps += s
         chain = s._1
         k += 1
@@ -525,20 +528,12 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
         val stats = steps(si)._2.value.values
         residual = if (stats.isEmpty) 0.0 else stats.map(_(0)).max
         active = stats.map(_(1).toLong).sum
-        val markCnt = stats.map(_(3)).sum
-        val flagCnt = active.toDouble - markCnt
-        val flagEdgeCnt = stats.map(_(2)).sum
-        CsrDynamic.superstepRuns.incrementAndGet()
-        if (stats.nonEmpty)
-          CsrDynamic.kernelCritNanos.addAndGet(stats.map(_(4)).max.toLong)
-        // diagnostic: exact flagged-vertex count (not the flag+in-flight-
-        // marks upper estimate) at the superstep where the affected set
-        // peaked — evidences how wide the DF/DF-P wavefront gets on this
-        // workload (Bench ships it as peak_affected_verts/_edges)
-        if (flagCnt.toLong > CsrDynamic.peakActive.get()) {
-          CsrDynamic.peakActive.set(flagCnt.toLong)
-          CsrDynamic.peakActiveEdges.set(flagEdgeCnt.toLong)
-        }
+        // flagged = still-active minus the in-flight marks: the exact
+        // flagged-vertex count, not the loop's flag+marks upper estimate
+        records += Superstep(residual,
+          flagged = (active.toDouble - stats.map(_(3)).sum).toLong,
+          flaggedEdges = stats.map(_(2)).sum.toLong,
+          kernelCritMs = if (stats.isEmpty) 0.0 else stats.map(_(4)).max / 1e6)
         if (!prevResidual.isNaN && prevResidual > 0.0 && residual > 0.0 &&
             residual < prevResidual) {
           val rho = residual / prevResidual
@@ -560,9 +555,6 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
     // dropping them would let the "exact S" invariant drift by up to
     // |final frontier|·tolerance per batch, compounding across long streams.
     // One cheap extra job; flags/ranks are shared (not mutated).
-    if (CsrDynamic.trackDeps)
-      CsrDynamic.trackLabel =
-        s"${CsrDynamic.batchTag}${if (prune) "dfp" else "df"}-term"
     val termMsgs = msgShuffle(cur.flatMap(_._2.iterator), ip(parts))
     val finalState = cur.map(_._1).zipPartitions(termMsgs,
       preservesPartitioning = true) { (stIt, mIt) =>
@@ -586,7 +578,8 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
     }.toDF("id", "rank")
     cur.unpersist(false)
     val run = PagerankRun(out,
-      PagerankStats(iter, 0.0, (t1 - t0) / 1e6, (t3 - t1) / 1e6, residual))
+      PagerankStats(iter, 0.0, (t1 - t0) / 1e6, (t3 - t1) / 1e6, residual,
+        supersteps = records.result()))
     (run, finalState)
   }
 
@@ -612,24 +605,6 @@ object CsrDynamic {
   val fuseMax: Int = math.max(1, sys.env.get("GRAFT_DYN_FUSE")
     .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(8))
 
-  /** Fixed-cost decomposition diagnostics (delta'd by Bench): distributed
-    * supersteps executed, and the summed per-superstep critical-path kernel
-    * time — max in-task nanos over partitions, i.e. the part of each
-    * superstep's wall that is actual sweep work on the slowest task. Wall
-    * minus this is the scheduling + shuffle-management floor that VERDICT r3
-    * item 6 asked to evidence (vs the reference's shared-memory loop). */
-  val superstepRuns = new java.util.concurrent.atomic.AtomicLong
-  val kernelCritNanos = new java.util.concurrent.atomic.AtomicLong
-
-  /** Exact flagged-vertex count and its out-edge count at the superstep
-    * where each run's affected set was LARGEST — evidences how wide the
-    * DF/DF-P wavefront gets (at web-graph batch closures it approaches |V|:
-    * the relative-change marking rule keeps expanding below the stop
-    * tolerance, which is why a driver-local tail cannot engage under
-    * reference parameters — see BASELINE.md protocol step 9). */
-  val peakActive = new java.util.concurrent.atomic.AtomicLong
-  val peakActiveEdges = new java.util.concurrent.atomic.AtomicLong
-
   /** Thrown when a batch/seed touches a vertex outside the frozen universe.
     * The CSR engine's universe is fixed at freeze time (the reference's
     * eager-universe contract, /root/reference/inc/snap.hxx:133); the
@@ -647,7 +622,8 @@ object CsrDynamic {
       flag: Array[Boolean])
 
   /** Shuffle a superstep's packed message batches to their target
-    * partitions on the SORT-path writer, scoped to this one shuffle. With
+    * partitions on the SORT-path writer, scoped to this one shuffle. A pure
+    * function of its input: it defines the shuffle and records nothing. With
     * ≤ bypassMergeThreshold (200) reduce partitions Spark's bypass writer
     * opens one compressed stream per reduce partition per MAP task — on the
     * dynamic loop's near-empty message data that per-file setup was 46.7 s
@@ -666,37 +642,7 @@ object CsrDynamic {
       p: org.apache.spark.Partitioner): RDD[(Int, Msg)] = {
     val merge = (a: Msg, b: Msg) =>
       (a._1 ++ b._1, a._2 ++ b._2, a._3 ++ b._3)
-    val out = msgs.combineByKeyWithClassTag[Msg]((m: Msg) => m, merge, merge, p)
-    if (trackDeps)
-      depRefs.add((trackLabel,
-        new java.lang.ref.WeakReference[AnyRef](out.dependencies.head)))
-    out
-  }
-
-  /** Leak probe (off by default): when enabled, every message shuffle's
-    * ShuffleDependency is tracked through a WeakReference. After a forced
-    * GC, `liveDeps` counts the dependencies still strongly reachable — the
-    * ContextCleaner can only unregister a shuffle (freeing its map-output
-    * registration and on-disk files) once its dependency is collected, so a
-    * count that grows with the stream directly indicates a driver-side
-    * strong-reference retention. */
-  @volatile var trackDeps = false
-  @volatile var trackLabel = ""
-  @volatile var batchTag = ""
-  val depRefs = new java.util.concurrent.ConcurrentLinkedQueue[
-    (String, java.lang.ref.WeakReference[AnyRef])]
-  def liveDeps: (Int, Int, Seq[String]) = {
-    var live = 0; var total = 0
-    val labels = scala.collection.mutable.ArrayBuffer.empty[String]
-    depRefs.forEach { case (l, r) =>
-      total += 1
-      if (r.get() != null) { live += 1; labels += l }
-    }
-    // purge entries whose referent is gone — a long probed stream would
-    // otherwise accumulate dead tuples without bound (ADVICE r5); `total`
-    // above still reports the lifetime count for this probe pass
-    depRefs.removeIf(e => e._2.get() == null)
-    (live, total, labels.toSeq)
+    msgs.combineByKeyWithClassTag[Msg]((m: Msg) => m, merge, merge, p)
   }
 
   /** Home partition of a vertex id under Spark's HashPartitioner(parts). */

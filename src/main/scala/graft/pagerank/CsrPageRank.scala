@@ -70,7 +70,6 @@ class CsrPageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()
     * 1e-10 run takes — the reference builds its CSR once per snapshot too,
     * /root/reference/inc/csr.hxx:388-415). */
   def build(yEdges: DataFrame): CsrGraph = {
-    CsrPageRank.buildCount.incrementAndGet()
     val sc = spark.sparkContext
     val parts = sc.defaultParallelism
     val hp = new HashPartitioner(parts)
@@ -308,10 +307,6 @@ class CsrPageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()
 
 
 object CsrPageRank {
-
-  /** Diagnostics: number of full CSR freezes performed — batch loops that
-    * carry state should NOT advance this per batch (SnapMainSpec asserts). */
-  val buildCount = new java.util.concurrent.atomic.AtomicLong
 
   /** One partition's frozen graph block. `srcs` is the sorted vertex-id set
     * of the partition (self-loops ⇒ every vertex is a src); edges store the

@@ -79,17 +79,31 @@ class CsrDynamicSpec extends AnyFunSuite {
     val dyn = new CsrDynamic(spark)
     val g0 = new CsrPageRank(spark).build(xDf)
     val (_, st0) = dyn.staticWithState(g0)
-    val ss0 = CsrDynamic.superstepRuns.get()
-    val kn0 = CsrDynamic.kernelCritNanos.get()
-    CsrDynamic.peakActive.set(0L)
-    val (_, run, _) = dyn.applyBatch(g0, st0, insDf, none, prune = false)
-    val steps = CsrDynamic.superstepRuns.get() - ss0
-    assert(steps === run.stats.iterations.toLong)
-    assert(CsrDynamic.kernelCritNanos.get() - kn0 > 0L)
-    assert(CsrDynamic.peakActive.get() > 0L)
-    // kernel critical path can never exceed the loop's wall time
-    assert((CsrDynamic.kernelCritNanos.get() - kn0) / 1e6 <=
-      run.stats.computeTimeMs)
+    val tol = graft.model.PagerankOptions().tolerance
+    for (prune <- Seq(false, true)) {
+      val (_, run, _) = dyn.applyBatch(g0, st0, insDf, none, prune)
+      val recs = run.stats.supersteps
+      val kernelMs = recs.map(_.kernelCritMs).sum
+      assert(recs.size === run.stats.iterations, s"prune=$prune")
+      assert(kernelMs > 0.0, s"prune=$prune")
+      // kernel critical path can never exceed the loop's wall time
+      assert(kernelMs <= run.stats.computeTimeMs, s"prune=$prune")
+      assert(recs.map(_.flagged).max > 0L, s"prune=$prune")
+      assert(recs.last.residual === run.stats.finalResidual, s"prune=$prune")
+
+      // Fused-block stop rule (CsrDynamic.fuseMax scaladoc): a block may run
+      // past the first sub-tolerance superstep, but every superstep it runs
+      // there stays under the tolerance, and the block that crossed is the
+      // last one — so at most fuseMax − 1 records follow the crossing. The
+      // run is long enough for blocks to fuse.
+      assert(run.stats.iterations > CsrDynamic.fuseMax, s"prune=$prune")
+      val cross = recs.indexWhere(_.residual < tol)
+      assert(cross >= 0, s"prune=$prune never crossed the tolerance")
+      assert(recs.drop(cross).forall(_.residual < tol),
+        s"prune=$prune residuals past the crossing: ${recs.drop(cross).map(_.residual)}")
+      assert(recs.size - 1 - cross <= CsrDynamic.fuseMax - 1,
+        s"prune=$prune ${recs.size - 1 - cross} supersteps after the crossing")
+    }
   }
 
   test("CSR DF-P (pruning) after a mixed insertion+deletion batch: allclose oracle") {

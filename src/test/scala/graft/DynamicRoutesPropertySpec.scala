@@ -46,6 +46,10 @@ class DynamicRoutesPropertySpec extends AnyFunSuite {
     assert(Oracle.allclose(got, want, 1e-9),
       s"$route maxDiff=${Oracle.maxDiff(got, want)}")
 
+  /** Every frontier run returns one superstep record per iteration. */
+  def recorded(route: String, run: graft.pagerank.PagerankRun): Unit =
+    assert(run.stats.supersteps.size === run.stats.iterations, route)
+
   def checkCase(c: Case): Unit = {
     val x = c.base
     // every vertex keeps its self-loop: self-loop deletions never apply
@@ -63,6 +67,7 @@ class DynamicRoutesPropertySpec extends AnyFunSuite {
     val pr = new PageRank(spark)
     for (v <- Oracle.Variants) {
       val run = TestSpark.dynamicRun(pr, v, xDf, yDf, insDf, delDf, prev)
+      recorded(s"PageRank $v", run)
       close(s"PageRank $v", TestSpark.collectRanks(run.ranks),
         Oracle.dynamic(x, y, prevMap, c.ins, del, v)._1)
     }
@@ -74,6 +79,7 @@ class DynamicRoutesPropertySpec extends AnyFunSuite {
     for ((prune, v) <- Seq(false -> Oracle.DF, true -> Oracle.DFP)) {
       val (_, run, _) = dyn.applyBatch(g0, st0, EdgeOps.tidyInsertions(insDf, xDf),
         EdgeOps.tidyDeletions(delDf, xDf), prune)
+      recorded(s"CsrDynamic.applyBatch $v", run)
       close(s"CsrDynamic.applyBatch $v", TestSpark.collectRanks(run.ranks),
         Oracle.dynamic(x, yT, prevMap, insT, delT, v)._1)
     }

@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.GraftSparkBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.pagerank.CsrPageRank
 import graft.tools.SnapMain
 
 /** End-to-end reference-experiment replay (SnapMain.run) on a generated
@@ -13,7 +16,35 @@ import graft.tools.SnapMain
 class SnapMainSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("five techniques over a SNAP file: per-batch L1 errors < 1e-6, both engines") {
+  /** `f`'s result, and the jobs it starts on this thread whose result
+    * stage was called from `CsrPageRank.build` (its long call site names
+    * the frame), counted after the listener bus drained. The result stage
+    * is the job's newest stage: older ids are shuffle stages reused from
+    * earlier jobs, whose call sites name the job that first ran them. */
+  def freezeJobs[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("graft.test.job") == tag &&
+            e.stageInfos.nonEmpty &&
+            e.stageInfos.maxBy(_.stageId).details.contains("CsrPageRank.build("))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setLocalProperty("graft.test.job", tag)
+    val out = try f
+    finally {
+      sc.setLocalProperty("graft.test.job", null)
+      GraftSparkBridge.waitUntilEmpty(sc, 10000L)
+      sc.removeSparkListener(l)
+    }
+    (out, n.get())
+  }
+
+  test("five techniques over a SNAP file: per-batch L1 errors < 1e-6") {
     val rnd = new graft.ingest.SplitMix64(21L)
     val rows = 30L
     val lines = (0 until 400).map { i =>
@@ -26,11 +57,14 @@ class SnapMainSpec extends AnyFunSuite {
     // the carried-CSR loop performs EXACTLY ONE CSR freeze for the whole
     // run (base graph); every batch advances by splice
     val emitted = Seq.newBuilder[String]
-    val buildsBefore = graft.pagerank.CsrPageRank.buildCount.get()
-    val results = SnapMain.run(spark, f.toString, rows, 400L,
-      batchFraction = 0.01, nBatches = 3, emit = emitted += _)
-    assert(graft.pagerank.CsrPageRank.buildCount.get() - buildsBefore === 1L,
-      "carried-CSR SnapMain must freeze exactly once")
+    val (_, oneFreeze) = freezeJobs(new CsrPageRank(spark)
+      .build(TestSpark.edgesDf(spark, Seq((1L, 1L), (1L, 2L), (2L, 2L)))))
+    assert(oneFreeze > 0)
+    val (results, runFreezes) = freezeJobs(SnapMain.run(spark, f.toString,
+      rows, 400L, batchFraction = 0.01, nBatches = 3, emit = emitted += _))
+    assert(runFreezes === oneFreeze,
+      s"carried-CSR SnapMain must freeze exactly once ($runFreezes freeze " +
+        s"jobs, one freeze runs $oneFreeze)")
     assert(results.size === 3)
     // DF-P's pruning truncates refinement at relΔ ≤ pruneTolerance=1e-6, so
     // its L1 error is bounded by (affected rank mass)·pTol/(1−P) ≈ 6.7e-6
