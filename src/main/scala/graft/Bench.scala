@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.GraftSparkBridge
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graph.EdgeOps
@@ -8,8 +9,7 @@ import graft.util.Ckpt._
 import graft.ingest.WebGraphFixture
 import graft.model.PagerankOptions
 import graft.pagerank.{CsrDynamic, CsrPageRank, PageRank, PagerankRun}
-import graft.pagerank.CsrPageRank.CsrGraph
-import graft.pagerank.CsrDynamic.CsrState
+import graft.tools.SnapMain
 
 /** Benchmark main — prints ONE JSON line.
   *
@@ -85,6 +85,22 @@ object Bench {
   @volatile private var finalEmitted = false
   @volatile private var snapshot: Seq[(String, String, Boolean)] = Nil
   private val hookArmed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  // (key -> (rendered value, compact?)) in insertion order; re-putting a
+  // key updates it in place so later phases can refine earlier fields.
+  private val fields =
+    scala.collection.mutable.LinkedHashMap[String, (String, Boolean)]()
+  private def put(k: String, v: String, compact: Boolean = true): Unit =
+    fields(k) = (v, compact)
+  private def currentFields: Seq[(String, String, Boolean)] =
+    fields.map { case (k, (v, c)) => (k, v, c) }.toSeq
+
+  /** Rewrite the mirror file with everything measured so far and arm the
+    * shutdown snapshot. Never prints — stdout carries ONE line per run. */
+  private def checkpoint(): Unit = {
+    val snap = currentFields
+    writeMirror(snap, "BENCH_LAST.json")
+    snapshot = snap
+  }
 
   /** On SIGTERM/normal exit without a final emit (the driver's timeout kill
     * lands as SIGTERM, which DOES run shutdown hooks), print the compact
@@ -162,11 +178,26 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    if (sys.env.get("GRAFT_BENCH_ENDURANCE").contains("1")) {
-      enduranceMain(cpus)
-      return
+    if (sys.env.get("GRAFT_BENCH_ENDURANCE").contains("1")) enduranceMain(cpus)
+    else {
+      armShutdownHook()
+      try run(cpus, sfDir)
+      catch {
+        case t: Throwable =>
+          // A failing phase leaves a trace: the error rides the compact line
+          // the shutdown hook prints, its stack head the mirror file, and
+          // `phases_completed` says how far the run got. Rethrown, so the
+          // exit code stays non-zero.
+          put("error", jsonStr(s"${t.getClass.getName}: ${t.getMessage}".take(300)))
+          put("error_stack", t.getStackTrace.take(8).map(f => jsonStr(f.toString))
+            .mkString("[", ",", "]"), compact = false)
+          checkpoint()
+          throw t
+      }
     }
-    armShutdownHook()
+  }
+
+  private def run(cpus: Int, sfDir: String): Unit = {
     // ---- wall-clock budget (VERDICT r4 item 1b) --------------------------
     val budgetSecs =
       sys.env.getOrElse("GRAFT_BENCH_BUDGET_SECS", "2400").toDouble
@@ -180,32 +211,19 @@ object Bench {
     val convergePages = sys.env.getOrElse("GRAFT_BENCH_CONVERGE_PAGES", "4000000").toLong
     val throughputSteps = sys.env.getOrElse("GRAFT_BENCH_STEPS", "6").toInt
     val pairs = sys.env.getOrElse("GRAFT_BENCH_PAIRS", "5").toInt
-    val weakPages = sys.env.getOrElse("GRAFT_BENCH_WEAK_PAGES",
-      (benchPages / 10).toString).toLong
+    val weakPages = benchPages / 10
     val probeEnabled = sys.env.get("GRAFT_BENCH_PROBE").contains("1")
 
     val qTimes = scala.collection.mutable.LinkedHashMap[String, Double]()
     val onlyScaling = sys.env.get("GRAFT_BENCH_ONLY_SCALING").contains("1")
 
-    // (key -> (rendered value, compact?)) in insertion order; re-putting a
-    // key updates it in place so later phases can refine earlier fields.
-    val fields =
-      scala.collection.mutable.LinkedHashMap[String, (String, Boolean)]()
-    def put(k: String, v: String, compact: Boolean = true): Unit =
-      fields(k) = (v, compact)
     val phasesDone = scala.collection.mutable.ArrayBuffer[String]()
-    def currentFields: Seq[(String, String, Boolean)] =
-      fields.map { case (k, (v, c)) => (k, v, c) }.toSeq
-    /** Phase checkpoint: record the phase, rewrite the mirror file with
-      * everything measured so far, and arm the shutdown snapshot. Never
-      * prints — the driver contract is ONE stdout line. */
+    /** Phase checkpoint: record the phase, then [[checkpoint]]. */
     def phaseDone(name: String): Unit = {
       phasesDone += name
       put("phases_completed",
         phasesDone.map("\"" + _ + "\"").mkString("[", ",", "]"))
-      val snap = currentFields
-      writeMirror(snap, "BENCH_LAST.json")
-      snapshot = snap
+      checkpoint()
       System.err.println(f"[bench] phase '$name' done, elapsed ${
         (System.nanoTime() - tStart) / 1e9}%.0f s, remaining $remainingSecs%.0f s")
     }
@@ -328,8 +346,8 @@ object Bench {
         busyCores, stepSecs, stealFrac)
     }
 
-    val coresN = sys.env.getOrElse("GRAFT_BENCH_CORES_N", "4").toInt
-    val cores4N = sys.env.getOrElse("GRAFT_BENCH_CORES_4N", (coresN * 4).toString).toInt
+    val coresN = 4
+    val cores4N = 16
 
     val stepTraces = scala.collection.mutable.ArrayBuffer[(String, Seq[Double])]()
 
@@ -340,24 +358,16 @@ object Bench {
       *          stealFracN, stealFrac4N) */
     def measurePair(nFirst: Boolean, steps: Int = throughputSteps)
         : (Double, Double, Long, Double, Double, Double, Double, Double,
-           Double, Double) =
-      if (nFirst) {
-        val (thrN, thrNMed, _, _, busyN, stN, sfN) =
-          throughputRun(coresN, csr = false, fixtureDir, steps)
-        val (thr4N, thr4NMed, _, nE, busy4N, st4N, sf4N) =
-          throughputRun(cores4N, csr = false, fixtureDir, steps)
-        stepTraces += (("n", stN)); stepTraces += (("4n", st4N))
-        (thrN, thr4N, nE, busyN, busy4N, thr4NMed / (4.0 * thrNMed),
-          thrNMed, thr4NMed, sfN, sf4N)
-      } else {
-        val (thr4N, thr4NMed, _, nE, busy4N, st4N, sf4N) =
-          throughputRun(cores4N, csr = false, fixtureDir, steps)
-        val (thrN, thrNMed, _, _, busyN, stN, sfN) =
-          throughputRun(coresN, csr = false, fixtureDir, steps)
-        stepTraces += (("4n", st4N)); stepTraces += (("n", stN))
-        (thrN, thr4N, nE, busyN, busy4N, thr4NMed / (4.0 * thrNMed),
-          thrNMed, thr4NMed, sfN, sf4N)
-      }
+           Double, Double) = {
+      val order = if (nFirst) Seq(coresN, cores4N) else Seq(cores4N, coresN)
+      val runs = order.map(c => c -> throughputRun(c, csr = false, fixtureDir, steps))
+      runs.foreach { case (c, r) =>
+        stepTraces += ((if (c == coresN) "n" else "4n", r._6)) }
+      val (thrN, thrNMed, _, _, busyN, _, sfN) = runs.toMap.apply(coresN)
+      val (thr4N, thr4NMed, _, nE, busy4N, _, sf4N) = runs.toMap.apply(cores4N)
+      (thrN, thr4N, nE, busyN, busy4N, thr4NMed / (4.0 * thrNMed),
+        thrNMed, thr4NMed, sfN, sf4N)
+    }
 
     // ---- Phase 3: scaling pairs ------------------------------------------
     // warmup pair: measured and shipped, EXCLUDED from the median; runs
@@ -548,8 +558,6 @@ object Bench {
     val sweepBatches = sys.env.getOrElse("GRAFT_BENCH_SWEEP_BATCHES", "3").toInt
     val oracleTol = 1e-15 // per-vertex error ≤ tol/(1−P) ⇒ L1 ≤ |V|·6.7e-15
     val s = session(cpus, forPagerank = true)
-    val staged = WebGraphFixture.edgesOnly(s, convergePages).toDF().cache()
-    val m = staged.count()
 
     // batch schedule: the oracled 1e-4 track, then the reference's fraction
     // sweep (1e-5 smallest-batch regime first — it is the most
@@ -559,68 +567,26 @@ object Bench {
         (if (sweepBatches > 0) Seq((1e-5, sweepBatches, false),
           (1e-3, sweepBatches, false))
         else Seq.empty)
-    val sliceLens: Seq[Long] = schedule.flatMap { case (f, n, _) =>
-      Seq.fill(n)(math.max(1L, (m * f).toLong))
-    }
-    val totalTail = sliceLens.sum
-    val cut0 = m - totalTail
-    // seq is sparse (k*64+pos): translate row-count cuts into seq cuts with
-    // per-cut quantiles over the ordered stream (exact enough, one pass).
-    val cuts: IndexedSeq[Long] = {
-      val cumRows = sliceLens.scanLeft(cut0)(_ + _)
-      val fracs = cumRows.map(_.toDouble / m)
-      val row = staged.agg(expr(
-        s"approx_percentile(seq, array(${fracs.mkString(",")}), 1000000)"))
-        .collect()(0).getSeq[Long](0)
-      row.toIndexedSeq.init :+ Long.MaxValue
-    }
-    val verts = s.range(convergePages).select(col("id"))
-    val x0 = EdgeOps.withSelfLoops(
-      staged.where(col("seq") < cuts(0)).select("src", "dst"), verts).cache()
+    val loop = new BatchLoop(s, convergePages, m => schedule.flatMap {
+      case (f, n, _) => Seq.fill(n)(math.max(1L, (m * f).toLong)) })
+    qTimes("pagerank_csr_static_converge") = loop.baseSecs
+    put("csr_static_base_secs", f"${loop.baseSecs}%.3f", compact = false)
+    put("csr_static_converge_iters",
+      loop.baseRun.stats.iterations.toString, compact = false)
 
     // One DataFrame-superstep static converge on the base graph: the r1/r2-
     // comparable wall number and the cross-engine speedup denominator.
     val pr = new PageRank(s)
-    val ls0 = pr.buildLinks(x0)
-    val (dfStaticRun, tDfStatic) = time { pr.static(x0, Some(ls0)) }
+    val ls0 = pr.buildLinks(loop.x0)
+    val (dfStaticRun, tDfStatic) = time { pr.static(loop.x0, Some(ls0)) }
     qTimes("pagerank_static_converge_1e10") = tDfStatic
     put("dataframe_static_converge_secs", f"$tDfStatic%.1f")
     put("static_converge_iters", dfStaticRun.stats.iterations.toString)
 
-    val dyn = new CsrDynamic(s)
     val csr = new CsrPageRank(s)
     val oracleCsr = new CsrPageRank(s, PagerankOptions(tolerance = oracleTol))
-    val ((g0, csrStaticRun, st0), tCsrStatic) = time {
-      val g = csr.build(x0)
-      val (run, st) = dyn.staticWithState(g)
-      (g, run, st)
-    }
-    qTimes("pagerank_csr_static_converge") = tCsrStatic
-    put("csr_static_base_secs", f"$tCsrStatic%.3f", compact = false)
-    put("csr_static_converge_iters",
-      csrStaticRun.stats.iterations.toString, compact = false)
     phaseDone("dynamic_setup")
 
-    def batchIns(b: Int, existing: DataFrame): DataFrame = staged
-      .where(col("seq") >= cuts(b) && col("seq") < cuts(b + 1))
-      .select("src", "dst").dropDuplicates("src", "dst")
-      .join(existing, Seq("src", "dst"), "left_anti")
-
-    /** L1 distance between a carried state's ranks and aligned oracle rank
-      * blocks (same partitioner, same sorted srcs — one tiny job). */
-    def l1Err(st: org.apache.spark.rdd.RDD[CsrState],
-        oracle: org.apache.spark.rdd.RDD[Array[Double]]): Double =
-      st.zipPartitions(oracle) { (aIt, bIt) =>
-        val a = aIt.next().rank
-        val b = bIt.next()
-        var sum = 0.0
-        var i = 0
-        while (i < a.length) { sum += math.abs(a(i) - b(i)); i += 1 }
-        Iterator.single(sum)
-      }.sum()
-
-    var gDf = g0; var stDf = st0
-    var gDfp = g0; var stDfp = st0
     // per-fraction accumulators: fraction -> (stat, df, dfp)
     final case class FracAcc(
         stat: scala.collection.mutable.ArrayBuffer[Double] =
@@ -630,10 +596,10 @@ object Bench {
         dfp: scala.collection.mutable.ArrayBuffer[Double] =
           scala.collection.mutable.ArrayBuffer.empty)
     val fracAcc = scala.collection.mutable.LinkedHashMap[Double, FracAcc]()
-    val statSecs = new scala.collection.mutable.ArrayBuffer[Double]
+    // the oracled track's per-batch walls are its fraction's accumulator
+    val FracAcc(statSecs, csrDfSecs, csrDfpSecs) =
+      fracAcc.getOrElseUpdate(schedule.head._1, FracAcc())
     val oracleSecs = new scala.collection.mutable.ArrayBuffer[Double]
-    val csrDfSecs = new scala.collection.mutable.ArrayBuffer[Double]
-    val csrDfpSecs = new scala.collection.mutable.ArrayBuffer[Double]
     val csrDfComputeSecs = new scala.collection.mutable.ArrayBuffer[Double]
     val csrDfpComputeSecs = new scala.collection.mutable.ArrayBuffer[Double]
     val l1Df = new scala.collection.mutable.ArrayBuffer[Double]
@@ -663,7 +629,7 @@ object Bench {
       qTimes("pagerank_csr_dfp_per_batch") = median(csrDfpSecs.toSeq)
       qTimes("pagerank_csr_static_per_batch") = median(statSecs.toSeq)
       put("n_batches", statSecs.size.toString)
-      put("batch_edges", sliceLens.head.toString)
+      put("batch_edges", loop.lens.head.toString)
       put("csr_df_speedup_vs_csr_static", f"${median(dfSpeedups.toSeq)}%.2f")
       put("csr_dfp_speedup_vs_csr_static", f"${median(dfpSpeedups.toSeq)}%.2f")
       put("csr_df_speedup_vs_df_static",
@@ -718,9 +684,6 @@ object Bench {
       put("peak_affected_edges", peakEdges.toString, compact = false)
     }
 
-    var xEdges = x0
-    var b = 0
-    var firstBatch = true
     var outOfTime = false
     var lastBatchSecs = 90.0 // prior until the first batch is measured
     schedule.foreach { case (fraction, count, withOracle) =>
@@ -736,72 +699,42 @@ object Bench {
             s"fraction $fraction after ${acc.stat.size} batches")
         } else {
           val tBatch0 = System.nanoTime()
-          val ins = batchIns(b, xEdges).cache()
-          ins.count()
-          val none = ins.limit(0)
           // techniques first (same minutes-window as their baseline below)
-          val ((gDf2, csrDfRun, stDf2), tD) =
-            time(dyn.applyBatch(gDf, stDf, ins, none, prune = false))
-          val ((gDfp2, csrDfpRun, stDfp2), tP) =
-            time(dyn.applyBatch(gDfp, stDfp, ins, none, prune = true))
+          val ((csrDfRun, tD), (csrDfpRun, tP)) = loop.step()
           acc.df += tD
           acc.dfp += tP
           notePeak(csrDfRun); notePeak(csrDfpRun)
           if (withOracle) {
             dfKernelSecs += kernelSecs(csrDfRun)
             dfpKernelSecs += kernelSecs(csrDfpRun)
-            csrDfSecs += tD; csrDfIters += csrDfRun.stats.iterations
+            csrDfIters += csrDfRun.stats.iterations
             csrDfComputeSecs += csrDfRun.stats.computeTimeMs / 1e3
-            csrDfpSecs += tP; csrDfpIters += csrDfpRun.stats.iterations
+            csrDfpIters += csrDfpRun.stats.iterations
             csrDfpComputeSecs += csrDfpRun.stats.computeTimeMs / 1e3
             // fresh static baseline + oracle on the updated graph (one run:
             // the 1e-10 crossing is the baseline, the 1e-15 tail the oracle)
             val ((_, oracleRanks, crossSecs, crossIts), tOracle) =
-              time(oracleCsr.staticDetailed(gDf2, crossTol = 1e-10))
+              time(oracleCsr.staticDetailed(loop.df.g, crossTol = 1e-10))
             if (crossIts >= 0) {
-              statSecs += crossSecs
               statIters += crossIts
               acc.stat += crossSecs
             } else {
               // never crossed 1e-10 before maxIterations — do NOT fold -1
               // into the aggregates (ADVICE r3); record the hole as NaN
-              System.err.println(s"[bench] batch $b: oracle run never crossed 1e-10")
-              statSecs += Double.NaN
+              System.err.println(s"[bench] batch ${loop.batches}: oracle run never crossed 1e-10")
               acc.stat += Double.NaN
             }
             oracleSecs += tOracle
-            l1Df += l1Err(stDf2, oracleRanks)
-            l1Dfp += l1Err(stDfp2, oracleRanks)
+            l1Df += SnapMain.l1(loop.df.st.map(_.rank), oracleRanks)
+            l1Dfp += SnapMain.l1(loop.dfp.st.map(_.rank), oracleRanks)
             oracleRanks.unpersist(false)
           } else {
             // timing-only baseline at the engine's own 1e-10 tolerance
             val ((_, baseRanks, _, _), tBase) =
-              time(csr.staticDetailed(gDf2, crossTol = 0.0))
+              time(csr.staticDetailed(loop.df.g, crossTol = 0.0))
             baseRanks.unpersist(false)
             acc.stat += tBase
           }
-          if (!firstBatch) { // the first batch's inputs are the shared g0/st0
-            gDf.blocks.unpersist(false); stDf.unpersist(false)
-            gDfp.blocks.unpersist(false); stDfp.unpersist(false)
-          }
-          gDf = gDf2; stDf = stDf2
-          gDfp = gDfp2; stDfp = stDfp2
-          // ckpt (not cache): the carried plan/lineage would otherwise deepen
-          // by one batch per batch — quadratic analysis cost over long streams.
-          // The SUPERSEDED generation's checkpoint blocks are freed explicitly
-          // (GraftBridge.freeCkpt) — the CacheManager doesn't track them, so
-          // they'd otherwise strand ~|E| rows per batch until a periodic GC.
-          val prevX = xEdges
-          val nextX = EdgeOps.applyBatch(xEdges, ins, none).ckpt()
-          xEdges = nextX
-          if (prevX ne x0) org.apache.spark.sql.GraftBridge.freeCkpt(prevX)
-          ins.unpersist()
-          // carried structures arrive lineage-free from applyBatch (in-engine
-          // pre-materialization truncation); the old every-10-batches
-          // localCheckpoint().count() here was a silent no-op — see the
-          // endurance loop's note.
-          firstBatch = false
-          b += 1
           done += 1
           lastBatchSecs = (System.nanoTime() - tBatch0) / 1e9
         }
@@ -870,7 +803,7 @@ object Bench {
           }
         }
       }
-      val probeDel = xEdges
+      val probeDel = loop.edges
         .where(col("src") =!= col("dst"))
         .where(pmod(xxhash64(col("src"), col("dst")), lit(10000L)) === 0L)
         .cache()
@@ -878,9 +811,10 @@ object Bench {
       val probeNone = probeDel.limit(0)
       s.sparkContext.addSparkListener(probeListener)
       val ((gProbe, probeRun, stProbe), tProbeWall) =
-        time(dyn.applyBatch(gDfp, stDfp, probeNone, probeDel, prune = true))
+        time(loop.dyn.applyBatch(loop.dfp.g, loop.dfp.st, probeNone, probeDel,
+          prune = true))
       // listener bus is async — drain it before reading the counters
-      org.apache.spark.GraftSparkBridge.waitUntilEmpty(s.sparkContext, 10000L)
+      GraftSparkBridge.waitUntilEmpty(s.sparkContext, 10000L)
       s.sparkContext.removeSparkListener(probeListener)
       val probeSteps = math.max(1, probeRun.stats.supersteps.size)
       val probeKernelSecs = kernelSecs(probeRun)
@@ -902,8 +836,8 @@ object Bench {
         val byName = stagesByName.asScala.toSeq
           .sortBy { case (_, bkt) => -bkt(1) }
           .map { case (name, bkt) =>
-            val safe = name.replace("\\", "\\\\").replace("\"", "\\\"")
-            s""""$safe":{"n":${bkt(0)},"wall_ms":${bkt(1)},"exec_run_ms":${bkt(2)}}"""
+            jsonStr(name) +
+              s""":{"n":${bkt(0)},"wall_ms":${bkt(1)},"exec_run_ms":${bkt(2)}}"""
           }.mkString("{", ",", "}")
         put("probe_stage_breakdown", byName, compact = false)
       }
@@ -914,40 +848,83 @@ object Bench {
     s.stop()
   }
 
+  /** The reference batch loop (the reference's main.cxx:47-107) over the
+    * staged fixture stream of `pages` pages, shared by the oracled track,
+    * the fraction sweep and endurance. The stream's tail is cut into
+    * insertion slices of the lengths `sliceLens(|stream|)`; the rest, with
+    * self-loops, is the base graph `x0`, frozen once into `g0` with a warm
+    * carried state (the freeze and warm start timed together as
+    * `baseSecs`). DF and DF-P each advance their own [[SnapMain.Track]]
+    * from that shared base, one slice per [[step]]. */
+  private final class BatchLoop(s: SparkSession, pages: Long,
+      sliceLens: Long => Seq[Long]) {
+    private val staged = WebGraphFixture.edgesOnly(s, pages).toDF().cache()
+    private val m = staged.count()
+    val lens: Seq[Long] = sliceLens(m)
+    // seq is sparse (k*64+pos): translate row-count cuts into seq cuts with
+    // per-cut quantiles over the ordered stream (exact enough, one pass).
+    private val cuts: IndexedSeq[Long] = {
+      val fracs = lens.scanLeft(m - lens.sum)(_ + _).map(_.toDouble / m)
+      staged.agg(expr(
+        s"approx_percentile(seq, array(${fracs.mkString(",")}), 1000000)"))
+        .collect()(0).getSeq[Long](0).toIndexedSeq.init :+ Long.MaxValue
+    }
+    val x0: DataFrame = EdgeOps.withSelfLoops(
+      staged.where(col("seq") < cuts(0)).select("src", "dst"),
+      s.range(pages).select(col("id"))).cache()
+    val dyn = new CsrDynamic(s)
+    val ((baseRun, df, dfp), baseSecs) = time {
+      val g0 = new CsrPageRank(s).build(x0)
+      val (run, st0) = dyn.staticWithState(g0)
+      (run, new SnapMain.Track(g0, st0), new SnapMain.Track(g0, st0))
+    }
+    /** The edge table after the batches applied so far. */
+    var edges: DataFrame = x0
+    var batches = 0
+
+    /** Apply the next slice's tidied insertions: DF, then DF-P advance
+      * (each engine call timed alone), then the edge table. */
+    def step(): ((PagerankRun, Double), (PagerankRun, Double)) = {
+      val ins = staged
+        .where(col("seq") >= cuts(batches) && col("seq") < cuts(batches + 1))
+        .select("src", "dst").dropDuplicates("src", "dst")
+        .join(edges, Seq("src", "dst"), "left_anti").cache()
+      ins.count()
+      val none = ins.limit(0)
+      val d = df.advance((g, st) => dyn.applyBatch(g, st, ins, none, prune = false))
+      val p = dfp.advance((g, st) => dyn.applyBatch(g, st, ins, none, prune = true))
+      // ckpt (not cache): the carried plan/lineage would otherwise deepen by
+      // one batch per batch — quadratic analysis cost over long streams. The
+      // SUPERSEDED generation's checkpoint blocks are freed explicitly — the
+      // CacheManager doesn't track them, so they'd otherwise strand ~|E| rows
+      // per batch until a periodic GC. The carried CSR structures arrive
+      // lineage-free from applyBatch (the engine truncates each at its
+      // materializing job); a regression shows as growth in endurance's
+      // shuffle_statuses_per_batch and disk_shuffle_blocks_per_batch.
+      val prev = edges
+      edges = EdgeOps.applyBatch(edges, ins, none).ckpt()
+      if (prev ne x0) GraftBridge.freeCkpt(prev)
+      ins.unpersist()
+      batches += 1
+      (d, p)
+    }
+  }
+
   /** Endurance mode (GRAFT_BENCH_ENDURANCE=1): the reference's
-    * BATCH_LENGTH=100 regime (/root/reference/main.sh:21) on the carried
-    * CSR engine — 100 batches of 1e-5·|E| insertions, L1 error vs a fresh
-    * 1e-15 oracle every `sampleEvery` batches. The claim under test: the
-    * terminal S-delta fold keeps the carried "exact S" invariant from
-    * drifting, so the sampled L1 stays FLAT across the stream. */
+    * BATCH_LENGTH=100 regime (the reference's main.sh:21) as a second
+    * schedule of the dynamic track's [[BatchLoop]] — 100 batches of
+    * 1e-5·|E| insertions, L1 error vs a fresh 1e-15 oracle every 10th
+    * batch. The claim under test: the terminal S-delta fold keeps the
+    * carried "exact S" invariant from drifting, so the sampled L1 stays
+    * FLAT across the stream. */
   private def enduranceMain(cpus: Int): Unit = {
     val pages = sys.env.getOrElse("GRAFT_BENCH_CONVERGE_PAGES", "1000000").toLong
     val nBatches = sys.env.getOrElse("GRAFT_BENCH_BATCHES", "100").toInt
-    val sampleEvery = sys.env.getOrElse("GRAFT_BENCH_SAMPLE_EVERY", "10").toInt
-    val fraction = 1e-5
+    val sampleEvery = 10
     val s = session(cpus, forPagerank = true)
-    val staged = WebGraphFixture.edgesOnly(s, pages).toDF().cache()
-    val m = staged.count()
-    val batchLen = math.max(1L, (m * fraction).toLong)
-    val cut0 = m - nBatches.toLong * batchLen
-    val cuts: IndexedSeq[Long] = {
-      val fracs = (0 to nBatches).map(i => (cut0 + i.toLong * batchLen).toDouble / m)
-      val row = staged.agg(expr(
-        s"approx_percentile(seq, array(${fracs.mkString(",")}), 1000000)"))
-        .collect()(0).getSeq[Long](0)
-      row.toIndexedSeq.init :+ Long.MaxValue
-    }
-    val verts = s.range(pages).select(col("id"))
-    val x0 = EdgeOps.withSelfLoops(
-      staged.where(col("seq") < cuts(0)).select("src", "dst"), verts).cache()
-    val dyn = new CsrDynamic(s)
-    val csr = new CsrPageRank(s)
+    val loop = new BatchLoop(s, pages,
+      m => Seq.fill(nBatches)(math.max(1L, (m * 1e-5).toLong)))
     val oracleCsr = new CsrPageRank(s, PagerankOptions(tolerance = 1e-15))
-    val g0 = csr.build(x0)
-    val (_, st0) = dyn.staticWithState(g0)
-    var gDf = g0; var stDf = st0
-    var gDfp = g0; var stDfp = st0
-    var xEdges = x0
     val dfSecs = new scala.collection.mutable.ArrayBuffer[Double]
     val dfpSecs = new scala.collection.mutable.ArrayBuffer[Double]
     val sampleBatch = new scala.collection.mutable.ArrayBuffer[Int]
@@ -963,120 +940,25 @@ object Bench {
     val dfKern = new scala.collection.mutable.ArrayBuffer[Double]
     val dfpKern = new scala.collection.mutable.ArrayBuffer[Double]
     val gcMs = new scala.collection.mutable.ArrayBuffer[Double]
-    val shufStages = new scala.collection.mutable.ArrayBuffer[Long]
+    val shufStatuses = new scala.collection.mutable.ArrayBuffer[Long]
     val diskShuf = new scala.collection.mutable.ArrayBuffer[Long]
     def gcTimeMs: Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(_.getCollectionTime).sum
     }
-    def l1(st: org.apache.spark.rdd.RDD[CsrState],
-        oracle: org.apache.spark.rdd.RDD[Array[Double]]): Double =
-      st.zipPartitions(oracle) { (aIt, bIt) =>
-        val a = aIt.next().rank
-        val o = bIt.next()
-        var sum = 0.0
-        var i = 0
-        while (i < a.length) { sum += math.abs(a(i) - o(i)); i += 1 }
-        Iterator.single(sum)
-      }.sum()
-    // Incremental emit (r5 protocol step 0 applied here too): rounds 4-5 lost
-    // two full ~60-min endurance runs to silent kills because the artifact was
-    // written ONCE at the end. Rewrite ENDURANCE.json after every oracle
-    // sample so a kill at any point still ships every sample measured so far.
-    def emitPartial(batchesCompleted: Int, done: Boolean): Unit = {
-      val fields = Seq(
-        ("metric", "\"endurance_l1_drift\"", true),
-        ("value", f"${if (l1Df.isEmpty) Double.NaN else l1Df.max}%.3e", true),
-        ("unit", "\"l1_error\"", true),
-        ("pages", pages.toString, true),
-        ("n_batches", nBatches.toString, true),
-        ("batches_completed", batchesCompleted.toString, true),
-        ("complete", done.toString, true),
-        ("batch_edges", batchLen.toString, true),
-        ("sample_batches", sampleBatch.mkString("[", ",", "]"), true),
-        ("l1_err_df", arr(l1Df.toSeq, "%.3e"), true),
-        ("l1_err_dfp", arr(l1Dfp.toSeq, "%.3e"), true),
-        ("df_secs_first10", arr(dfSecs.take(10).toSeq), true),
-        ("df_secs_last10", arr(dfSecs.takeRight(10).toSeq), true),
-        ("df_batch_secs", arr(dfSecs.toSeq), false),
-        ("dfp_batch_secs", arr(dfpSecs.toSeq), false),
-        ("df_iters", dfIters.mkString("[", ",", "]"), false),
-        ("dfp_iters", dfpIters.mkString("[", ",", "]"), false),
-        ("df_kernel_secs", arr(dfKern.toSeq), false),
-        ("dfp_kernel_secs", arr(dfpKern.toSeq), false),
-        ("gc_ms_per_batch", arr(gcMs.toSeq, "%.0f"), false),
-        ("shuffle_stages_per_batch", shufStages.mkString("[", ",", "]"), false),
-        ("disk_shuffle_blocks_per_batch", diskShuf.mkString("[", ",", "]"), false))
-      // endurance is a supplementary artifact — never clobber the round
-      // driver's BENCH_LAST.json mirror
-      writeMirror(fields, "ENDURANCE.json")
-    }
-    for (b <- 0 until nBatches) {
-      val ins = staged
-        .where(col("seq") >= cuts(b) && col("seq") < cuts(b + 1))
-        .select("src", "dst").dropDuplicates("src", "dst")
-        .join(xEdges, Seq("src", "dst"), "left_anti").cache()
-      ins.count()
-      val none = ins.limit(0)
-      val gc0 = gcTimeMs
-      val ((gDf2, runD, stDf2), tD) =
-        time(dyn.applyBatch(gDf, stDf, ins, none, prune = false))
-      val ((gDfp2, runP, stDfp2), tP) =
-        time(dyn.applyBatch(gDfp, stDfp, ins, none, prune = true))
-      dfSecs += tD; dfpSecs += tP
-      dfIters += runD.stats.iterations; dfpIters += runP.stats.iterations
-      dfKern += kernelSecs(runD); dfpKern += kernelSecs(runP)
-      gcMs += (gcTimeMs - gc0).toDouble
-      val reg = org.apache.spark.scheduler.GraftSchedulerDiag
-        .registrySizes(s.sparkContext)
-      shufStages += reg("shuffle_map_stages")
-      diskShuf += reg("disk_shuffle_blocks")
-      System.err.println(f"[endurance] batch ${b + 1}/$nBatches " +
-        f"df $tD%.2fs/${runD.stats.iterations}it/${dfKern.last}%.2fk " +
-        f"dfp $tP%.2fs/${runP.stats.iterations}it/${dfpKern.last}%.2fk " +
-        f"gc ${gcTimeMs - gc0}ms " +
-        f"reg ${reg("shuffle_map_stages")}st/${reg("shuffle_statuses")}ss/" +
-        f"${reg("disk_shuffle_blocks")}sf/${reg("disk_broadcast_blocks")}bb/" +
-        f"${reg("persistent_rdds")}pr")
-      if ((b + 1) % sampleEvery == 0 || b == nBatches - 1) {
-        val (_, oracleRanks, _, _) = oracleCsr.staticDetailed(gDf2, crossTol = 0.0)
-        sampleBatch += b
-        l1Df += l1(stDf2, oracleRanks)
-        l1Dfp += l1(stDfp2, oracleRanks)
-        oracleRanks.unpersist(false)
-        emitPartial(b + 1, done = false)
-        System.err.println(f"[endurance] sample at batch ${b + 1}: " +
-          f"l1_df ${l1Df.last}%.3e l1_dfp ${l1Dfp.last}%.3e")
-      }
-      if (b > 0) {
-        gDf.blocks.unpersist(false); stDf.unpersist(false)
-        gDfp.blocks.unpersist(false); stDfp.unpersist(false)
-      }
-      gDf = gDf2; stDf = stDf2; gDfp = gDfp2; stDfp = stDfp2
-      val prevX = xEdges
-      xEdges = EdgeOps.applyBatch(xEdges, ins, none).ckpt()
-      if (prevX ne x0) org.apache.spark.sql.GraftBridge.freeCkpt(prevX)
-      ins.unpersist()
-      // NOTE: no end-of-batch `rdd.localCheckpoint().count()` truncation
-      // here anymore — that idiom on an already-materialized RDD is
-      // silently a NO-OP (RDD.doCheckpoint is one-shot per RDD; it already
-      // ran, checkpoint-less, at first materialization), which is exactly
-      // how the stream leaked every batch's shuffle registrations. The
-      // engine now truncates each carried structure AT its materializing
-      // job (CsrDynamic.applyBatchImpl/runLoop), so carried state arrives
-      // here already lineage-free; a regression shows as growth in
-      // disk_shuffle_blocks_per_batch (and the stderr `ss` count).
-    }
-    val fields = Seq(
+    // ENDURANCE.json is rewritten after every oracle sample (rounds 4-5 lost
+    // two full ~60-min runs to silent kills when it was written once at the
+    // end) and once more at the end; both emits share this field list.
+    def fields(batchesCompleted: Int, done: Boolean) = Seq(
       ("metric", "\"endurance_l1_drift\"", true),
       ("value", f"${if (l1Df.isEmpty) Double.NaN else l1Df.max}%.3e", true),
       ("unit", "\"l1_error\"", true),
       ("pages", pages.toString, true),
       ("n_batches", nBatches.toString, true),
-      ("batches_completed", nBatches.toString, true),
-      ("complete", "true", true),
-      ("batch_edges", batchLen.toString, true),
+      ("batches_completed", batchesCompleted.toString, true),
+      ("complete", done.toString, true),
+      ("batch_edges", loop.lens.head.toString, true),
       ("sample_batches", sampleBatch.mkString("[", ",", "]"), true),
       ("l1_err_df", arr(l1Df.toSeq, "%.3e"), true),
       ("l1_err_dfp", arr(l1Dfp.toSeq, "%.3e"), true),
@@ -1089,13 +971,49 @@ object Bench {
       ("df_kernel_secs", arr(dfKern.toSeq), false),
       ("dfp_kernel_secs", arr(dfpKern.toSeq), false),
       ("gc_ms_per_batch", arr(gcMs.toSeq, "%.0f"), false),
-      ("shuffle_stages_per_batch", shufStages.mkString("[", ",", "]"), false),
+      ("shuffle_statuses_per_batch", shufStatuses.mkString("[", ",", "]"), false),
       ("disk_shuffle_blocks_per_batch", diskShuf.mkString("[", ",", "]"), false))
-    // endurance is a supplementary artifact — never clobber the round
-    // driver's BENCH_LAST.json mirror
-    emit(fields, mirror = "ENDURANCE.json")
+    for (b <- 0 until nBatches) {
+      val gc0 = gcTimeMs
+      val ((runD, tD), (runP, tP)) = loop.step()
+      dfSecs += tD; dfpSecs += tP
+      dfIters += runD.stats.iterations; dfpIters += runP.stats.iterations
+      dfKern += kernelSecs(runD); dfpKern += kernelSecs(runP)
+      gcMs += (gcTimeMs - gc0).toDouble
+      val reg = GraftSparkBridge.registrySizes(s.sparkContext)
+      shufStatuses += reg("shuffle_statuses")
+      diskShuf += reg("disk_shuffle_blocks")
+      System.err.println(f"[endurance] batch ${b + 1}/$nBatches " +
+        f"df $tD%.2fs/${runD.stats.iterations}it/${dfKern.last}%.2fk " +
+        f"dfp $tP%.2fs/${runP.stats.iterations}it/${dfpKern.last}%.2fk " +
+        f"gc ${gcMs.last}%.0fms " +
+        f"reg ${reg("shuffle_statuses")}ss/${reg("disk_shuffle_blocks")}sf/" +
+        f"${reg("disk_broadcast_blocks")}bb/${reg("persistent_rdds")}pr")
+      if ((b + 1) % sampleEvery == 0 || b == nBatches - 1) {
+        val (_, oracleRanks, _, _) =
+          oracleCsr.staticDetailed(loop.df.g, crossTol = 0.0)
+        sampleBatch += b
+        l1Df += SnapMain.l1(loop.df.st.map(_.rank), oracleRanks)
+        l1Dfp += SnapMain.l1(loop.dfp.st.map(_.rank), oracleRanks)
+        oracleRanks.unpersist(false)
+        // endurance is a supplementary artifact — never clobber the main
+        // run's BENCH_LAST.json mirror
+        writeMirror(fields(b + 1, done = false), "ENDURANCE.json")
+        System.err.println(f"[endurance] sample at batch ${b + 1}: " +
+          f"l1_df ${l1Df.last}%.3e l1_dfp ${l1Dfp.last}%.3e")
+      }
+    }
+    emit(fields(nBatches, done = true), mirror = "ENDURANCE.json")
     s.stop()
   }
+
+  /** `v` as a JSON string literal. */
+  private def jsonStr(v: String): String = "\"" + v.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** The driver contract: ONE bare JSON line on stdout — compact fields
     * only, runtime-guarded under the driver's 2,000-char tail capture — and

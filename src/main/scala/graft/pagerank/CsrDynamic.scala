@@ -30,7 +30,7 @@ import CsrDynamic._
   * exceeded frontierTolerance (DF expansion, pagerank.hxx:688-692; DF-P
   * additionally unflags swept vertices at rest and skips the self edge,
   * pagerankPrune.hxx:62-67). One shuffle per superstep and one job per
-  * fused BLOCK of up to [[CsrDynamic.fuseMax]] (default 8) supersteps
+  * fused BLOCK of up to [[CsrDynamic.fuseMax]] (8) supersteps
   * ([[runLoop]]'s block fusion), with
   * work O(Σ outdeg(changed)) instead of O(|E|) — this is what makes a
   * 1e-4·|E| batch converge in milliseconds-per-superstep at web scale.
@@ -167,8 +167,9 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
         val st = CsrState(st0.rank, st0.s, new Array[Boolean](st0.rank.length))
         Iterator.single((st, mIt.toArray))
     }
-    cur0.persist(StorageLevel.MEMORY_AND_DISK).count()
-    runLoop(g, cur0, prune, t0, System.nanoTime(), fixedFrontier)
+    cur0.persist(StorageLevel.MEMORY_AND_DISK)
+    val marks0 = cur0.mapPartitions(c => Iterator.single(markCount(c))).fold(0L)(_ + _)
+    runLoop(g, cur0, marks0, prune, t0, System.nanoTime(), fixedFrontier)
   }
 
   /** Splice a tidied batch into the CSR graph and run DF / DF-P from the
@@ -300,12 +301,12 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
     // same pre-materialization truncation as newBlocks above: releases the
     // splice's two batch shuffles (and seed marking) once this job runs
     cur.localCheckpoint()
-    newBlocks.zipPartitions(cur, preservesPartitioning = true) {
-      (bIt, cIt) => bIt.foreach(_ => ()); cIt.foreach(_ => ()); Iterator.single(0)
-    }.count()
+    val marks0 = newBlocks.zipPartitions(cur, preservesPartitioning = true) {
+      (bIt, cIt) => bIt.foreach(_ => ()); Iterator.single(markCount(cIt))
+    }.fold(0L)(_ + _)
     spliced.unpersist(false)
     val (run, finalState) =
-      runLoop(newG, cur, prune, t0, System.nanoTime(), fixedFrontier)
+      runLoop(newG, cur, marks0, prune, t0, System.nanoTime(), fixedFrontier)
     (newG, run, finalState)
   }
 
@@ -314,9 +315,11 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
     * partition's state (flags CLEARED — fresh frontier per invocation,
     * matching the reference's per-call affected vector,
     * /root/reference/inc/pagerank.hxx:683) with the first round's outgoing
-    * messages (S corrections + initial DF marking). */
+    * messages (S corrections + initial DF marking), which carry `marks0`
+    * marks. With no marks the frontier is empty from the start: the loop
+    * runs no superstep, and the terminal fold applies the S corrections. */
   private def runLoop(g: CsrGraph,
-      cur0: RDD[(CsrState, Array[(Int, Msg)])], prune: Boolean,
+      cur0: RDD[(CsrState, Array[(Int, Msg)])], marks0: Long, prune: Boolean,
       t0: Long, t1: Long, fixedFrontier: Boolean = false)
       : (PagerankRun, RDD[CsrState]) = {
     val sc = spark.sparkContext
@@ -331,8 +334,8 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
     val nGlob = g.n // primitive capture — never close over `g` (holds RDDs)
     val fixedF = fixedFrontier
     var iter = 0
-    var residual = Double.MaxValue
-    var active = 1L
+    var active = marks0
+    var residual = if (active > 0) Double.MaxValue else 0.0
 
     /** Define ONE superstep lazily — no action here. The accumulator is
       * registered UNNAMED: named accumulators pin an entry in the context
@@ -487,19 +490,21 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
     // 4M pages: ~38 ms of a ~165 ms small-frontier superstep wall). The
     // fused supersteps' states persist as a side effect of those map
     // stages, so the narrow zip consumer of each state reads it from
-    // cache. The block size is chosen so the fixpoint cannot be LEFT
-    // SHORT: fuse only while the fastest residual decay observed so far
-    // still leaves more supersteps than the block. A rare overshoot past
-    // convergence (decay accelerating beyond anything yet observed) only
-    // runs extra sub-tolerance supersteps — each moves every rank by
-    // < opts.tolerance, preserving the converged contract.
+    // cache. The block size is chosen so the fixpoint is rarely overshot:
+    // fuse only while the fastest residual decay observed so far still
+    // leaves more supersteps than the block. The per-step records are then
+    // read in order and the loop keeps the FIRST superstep whose residual
+    // fell under the tolerance or whose frontier emptied, as the static
+    // sweep does, so iterations, ranks and records equal the
+    // one-job-per-superstep loop's; supersteps a block ran past that point
+    // are discarded.
     var rhoMin = 1.0 // fastest observed per-superstep residual decay
     var prevResidual = Double.NaN
     val records = Vector.newBuilder[Superstep]
     while (iter < opts.maxIterations && residual >= opts.tolerance &&
         active > 0) {
       val block =
-        if (fuseMax <= 1 || prevResidual.isNaN || rhoMin >= 1.0 ||
+        if (prevResidual.isNaN || rhoMin >= 1.0 ||
             residual <= 0.0 || residual == Double.MaxValue) 1
         else {
           // underestimate of supersteps to convergence at the fastest
@@ -524,7 +529,8 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
       if ((iter + block) / 15 > iter / 15) chain.localCheckpoint()
       chain.count()
       var si = 0
-      while (si < steps.length) {
+      var stop = false
+      while (!stop) {
         val stats = steps(si)._2.value.values
         residual = if (stats.isEmpty) 0.0 else stats.map(_(0)).max
         active = stats.map(_(1).toLong).sum
@@ -541,12 +547,12 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
         }
         prevResidual = residual
         si += 1
+        stop = si == steps.length || residual < opts.tolerance || active == 0
       }
       cur.unpersist(false)
-      var ui = 0
-      while (ui < steps.length - 1) { steps(ui)._1.unpersist(false); ui += 1 }
-      cur = chain
-      iter += steps.length
+      steps.indices.foreach(j => if (j != si - 1) steps(j)._1.unpersist(false))
+      cur = steps(si - 1)._1
+      iter += si
     }
     val t3 = System.nanoTime()
 
@@ -587,23 +593,12 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
 
 object CsrDynamic {
 
-  /** Max supersteps fused into one Spark job (GRAFT_DYN_FUSE, default 8;
-    * 1 restores one-job-per-superstep), for this loop's block fusion (see
-    * [[CsrDynamic.runLoop]]) and the static sweep's
-    * ([[CsrPageRank.staticDetailed]]). The default was raised 4 → 8 — the
-    * decay-bound block sizing already prevents overshooting the fixpoint,
-    * and halving the remaining job boundaries attacks the per-job
-    * scheduling floor. Malformed values fall back to the default instead of
-    * aborting the run.
-    *
-    * A/B caveat: a fused dynamic block may run a few extra SUB-TOLERANCE
-    * supersteps past the unfused loop's exit point when the residual is
-    * non-monotone, so a dynamic run's `PagerankRun.stats.iterations` is not
-    * comparable across GRAFT_DYN_FUSE settings — compare WALL time (and
-    * ranks, which are tolerance-identical), not iteration counts. The static
-    * sweep keeps its iteration count: it discards the steps past the stop. */
-  val fuseMax: Int = math.max(1, sys.env.get("GRAFT_DYN_FUSE")
-    .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(8))
+  /** Max supersteps fused into one Spark job, for this loop's block fusion
+    * (see [[CsrDynamic.runLoop]]) and the static sweep's
+    * ([[CsrPageRank.staticDetailed]]). Both keep the first superstep that
+    * meets the stop rule and discard the rest of its block, so fusion
+    * changes job counts, never iterations or ranks. */
+  val fuseMax: Int = 8
 
   /** Thrown when a batch/seed touches a vertex outside the frozen universe.
     * The CSR engine's universe is fixed at freeze time (the reference's
@@ -616,6 +611,10 @@ object CsrDynamic {
     * fallback for mid-stream novel vertices. */
   final class UniverseGrowthRequired(msg: String)
       extends RuntimeException(msg)
+
+  /** Marks in flight in one partition's loop-state records. */
+  private def markCount(cur: Iterator[(CsrState, Array[(Int, Msg)])]): Long =
+    cur.map(_._2.iterator.map(_._2._3.length.toLong).sum).sum
 
   /** Per-partition loop state, aligned to the CSR block's vertex array. */
   final case class CsrState(rank: Array[Double], s: Array[Double],

@@ -1,13 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
 import graft.graph.EdgeOps
 import graft.ingest.SnapReader
 import graft.model.PagerankOptions
-import graft.pagerank.{CsrDynamic, CsrPageRank, PageRank}
+import graft.pagerank.{CsrDynamic, CsrPageRank, PageRank, PagerankRun}
+import graft.pagerank.CsrDynamic.CsrState
+import graft.pagerank.CsrPageRank.CsrGraph
 import graft.util.Ckpt._
 
 /** spark-submit main replaying the reference experiment on a real SNAP
@@ -30,10 +33,35 @@ object SnapMain {
 
   final case class TechResult(secs: Double, iters: Int, l1: Double)
 
-  def l1Err(a: DataFrame, oracle: DataFrame): Double =
-    a.select(col("id"), col("rank"))
-      .join(oracle.select(col("id"), col("rank").as("o")), "id")
-      .agg(sum(abs(col("rank") - col("o")))).collect()(0).getDouble(0)
+  /** L1 distance between two aligned rank-block RDDs (same partitioner,
+    * same sorted vertex array per block — any state or static run over
+    * graphs spliced from one freeze) in one narrow job. */
+  def l1(a: RDD[Array[Double]], b: RDD[Array[Double]]): Double =
+    a.zipPartitions(b) { (aIt, bIt) =>
+      val x = aIt.next()
+      val y = bIt.next()
+      var sum = 0.0
+      var i = 0
+      while (i < x.length) { sum += math.abs(x(i) - y(i)); i += 1 }
+      Iterator.single(sum)
+    }.sum()
+
+  /** One technique's carried (graph, state) in a batch loop. `advance`
+    * times only the engine call `f`, installs the generation it returns and
+    * frees the one it replaced — unless that is the generation the track
+    * started from, which the caller shares between tracks. */
+  final class Track(g0: CsrGraph, st0: RDD[CsrState]) {
+    var g: CsrGraph = g0
+    var st: RDD[CsrState] = st0
+
+    def advance(f: (CsrGraph, RDD[CsrState]) => (CsrGraph, PagerankRun,
+        RDD[CsrState])): (PagerankRun, Double) = {
+      val ((g2, run, st2), secs) = time(f(g, st))
+      if (g ne g0) { g.blocks.unpersist(false); st.unpersist(false) }
+      g = g2; st = st2
+      (run, secs)
+    }
+  }
 
   private def time[T](f: => T): (T, Double) = {
     val t0 = System.nanoTime()
@@ -68,27 +96,12 @@ object SnapMain {
 
     val g0 = new CsrPageRank(spark, opts).build(x0) // the ONE freeze
     val (r0run, r0blocks, _, _) = csrOracle.staticDetailed(g0, crossTol = 0.0)
-    val r0 = r0run.ranks.ckpt()
+    // every technique starts from g0 and the oracle register r0
+    // (main.cxx:68-72); the engine never writes carried arrays in place, so
+    // the four tracks share one state
+    val st0 = dyn.stateFromRanks(g0, r0run.ranks)
     r0blocks.unpersist(false)
-    // per-technique carried (graph, state); all start from the shared g0 +
-    // oracle register r0 (main.cxx:68-72)
-    final case class Track(var g: CsrPageRank.CsrGraph,
-        var st: org.apache.spark.rdd.RDD[CsrDynamic.CsrState],
-        var shared: Boolean = true)
-    def freshTrack() = Track(g0, dyn.stateFromRanks(g0, r0))
-    val nd = freshTrack(); val dt = freshTrack()
-    val df = freshTrack(); val dfp = freshTrack()
-    def advance(t: Track,
-        f: (CsrPageRank.CsrGraph, org.apache.spark.rdd.RDD[CsrDynamic.CsrState]) =>
-          (CsrPageRank.CsrGraph, graft.pagerank.PagerankRun,
-            org.apache.spark.rdd.RDD[CsrDynamic.CsrState]))
-        : (graft.pagerank.PagerankRun, Double) = {
-      val ((g2, run, st2), secs) = time(f(t.g, t.st))
-      if (!t.shared) t.g.blocks.unpersist(false)
-      t.st.unpersist(false)
-      t.g = g2; t.st = st2; t.shared = false
-      (run, secs)
-    }
+    val nd, dt, df, dfp = new Track(g0, st0)
 
     var x = x0
     val out = Seq.newBuilder[Map[String, TechResult]]
@@ -104,28 +117,30 @@ object SnapMain {
       val allIds = y.select(col("src").as("id")).distinct()
       val dtSeeds = pr.bfsClosure(y, pr.frontierSeeds(x, y, ins, none))
 
-      val (dfR, tDf) = advance(df,
+      val (dfR, tDf) = df.advance(
         (g, st) => dyn.applyBatch(g, st, ins, none, prune = false))
-      val (dfpR, tDfp) = advance(dfp,
+      val (dfpR, tDfp) = dfp.advance(
         (g, st) => dyn.applyBatch(g, st, ins, none, prune = true))
-      val (dtR, tDt) = advance(dt,
+      val (dtR, tDt) = dt.advance(
         (g, st) => dyn.applyBatchSeeded(g, st, ins, none, dtSeeds, prune = false))
       // naive-dynamic = warm full sweep: seeds = every vertex, fixed frontier
-      val (ndR, tNd) = advance(nd,
+      val (ndR, tNd) = nd.advance(
         (g, st) => dyn.applyBatchSeeded(g, st, ins, none, allIds, prune = false))
       // static baseline + 1e-15 oracle on the updated graph, reusing the DF
-      // track's spliced blocks (same adjacency) — zero re-freezes
+      // track's spliced blocks (same adjacency) — zero re-freezes; every
+      // technique is scored against the oracle's aligned rank blocks
       val ((stR, stBlocks, _, _), tSt) =
         time(csrStatic.staticDetailed(df.g, crossTol = 0.0))
-      val (oRun, oBlocks, _, _) = csrOracle.staticDetailed(df.g, crossTol = 0.0)
-      val oracle = oRun.ranks.ckpt()
+      val (_, oBlocks, _, _) = csrOracle.staticDetailed(df.g, crossTol = 0.0)
+      def score(t: Track, run: PagerankRun, secs: Double) =
+        TechResult(secs, run.stats.iterations, l1(t.st.map(_.rank), oBlocks))
 
       val m = Map(
-        "static" -> TechResult(tSt, stR.stats.iterations, l1Err(stR.ranks, oracle)),
-        "naiveDynamic" -> TechResult(tNd, ndR.stats.iterations, l1Err(ndR.ranks, oracle)),
-        "dynamicTraversal" -> TechResult(tDt, dtR.stats.iterations, l1Err(dtR.ranks, oracle)),
-        "dynamicFrontier" -> TechResult(tDf, dfR.stats.iterations, l1Err(dfR.ranks, oracle)),
-        "dynamicFrontierPrune" -> TechResult(tDfp, dfpR.stats.iterations, l1Err(dfpR.ranks, oracle)))
+        "static" -> TechResult(tSt, stR.stats.iterations, l1(stBlocks, oBlocks)),
+        "naiveDynamic" -> score(nd, ndR, tNd),
+        "dynamicTraversal" -> score(dt, dtR, tDt),
+        "dynamicFrontier" -> score(df, dfR, tDf),
+        "dynamicFrontierPrune" -> score(dfp, dfpR, tDfp))
       stBlocks.unpersist(false)
       oBlocks.unpersist(false)
       out += m

@@ -78,9 +78,11 @@ class CsrDynamicSpec extends AnyFunSuite {
     val none = insDf.limit(0)
     val dyn = new CsrDynamic(spark)
     val g0 = new CsrPageRank(spark).build(xDf)
-    val (_, st0) = dyn.staticWithState(g0)
+    val (staticRun, st0) = dyn.staticWithState(g0)
+    val prev = TestSpark.collectRanks(staticRun.ranks)
+    val y = (base ++ ins).distinct
     val tol = graft.model.PagerankOptions().tolerance
-    for (prune <- Seq(false, true)) {
+    for ((prune, v) <- Seq(false -> Oracle.DF, true -> Oracle.DFP)) {
       val (_, run, _) = dyn.applyBatch(g0, st0, insDf, none, prune)
       val recs = run.stats.supersteps
       val kernelMs = recs.map(_.kernelCritMs).sum
@@ -91,18 +93,17 @@ class CsrDynamicSpec extends AnyFunSuite {
       assert(recs.map(_.flagged).max > 0L, s"prune=$prune")
       assert(recs.last.residual === run.stats.finalResidual, s"prune=$prune")
 
-      // Fused-block stop rule (CsrDynamic.fuseMax scaladoc): a block may run
-      // past the first sub-tolerance superstep, but every superstep it runs
-      // there stays under the tolerance, and the block that crossed is the
-      // last one — so at most fuseMax − 1 records follow the crossing. The
-      // run is long enough for blocks to fuse.
+      // Fused-block stop rule: a block keeps the first superstep under the
+      // tolerance or with an empty frontier and discards the rest, so the
+      // run stops where the one-job-per-superstep loop stops. The run is
+      // long enough for blocks to fuse.
       assert(run.stats.iterations > CsrDynamic.fuseMax, s"prune=$prune")
-      val cross = recs.indexWhere(_.residual < tol)
-      assert(cross >= 0, s"prune=$prune never crossed the tolerance")
-      assert(recs.drop(cross).forall(_.residual < tol),
-        s"prune=$prune residuals past the crossing: ${recs.drop(cross).map(_.residual)}")
-      assert(recs.size - 1 - cross <= CsrDynamic.fuseMax - 1,
-        s"prune=$prune ${recs.size - 1 - cross} supersteps after the crossing")
+      assert(recs.init.forall(_.residual >= tol),
+        s"prune=$prune residuals: ${recs.map(_.residual)}")
+      assert(recs.last.residual < tol || recs.last.flagged == 0L,
+        s"prune=$prune last record ${recs.last}")
+      val (_, refIters) = Oracle.dynamic(base, y, prev, ins, Nil, v)
+      assert(run.stats.iterations === refIters, s"prune=$prune")
     }
   }
 
@@ -233,14 +234,14 @@ class CsrDynamicSpec extends AnyFunSuite {
     }
   }
 
-  test("empty batch is a fixpoint no-op (1 superstep, ranks unchanged)") {
+  test("empty batch is a fixpoint no-op (no superstep, ranks unchanged)") {
     val base = selfLooped(Seq((1L, 2L), (2L, 3L), (3L, 1L)))
     val dyn = new CsrDynamic(spark)
     val g0 = new CsrPageRank(spark).build(TestSpark.edgesDf(spark, base))
     val (staticRun, st0) = dyn.staticWithState(g0)
     val none = TestSpark.edgesDf(spark, Seq.empty[(Long, Long)])
     val (_, run, _) = dyn.applyBatch(g0, st0, none, none, prune = false)
-    assert(run.stats.iterations <= 1)
+    assert(run.stats.iterations === 0)
     val a = TestSpark.collectRanks(run.ranks)
     val b = TestSpark.collectRanks(staticRun.ranks)
     assert(Oracle.allclose(a, b, 0.0))

@@ -46,9 +46,13 @@ class DynamicRoutesPropertySpec extends AnyFunSuite {
     assert(Oracle.allclose(got, want, 1e-9),
       s"$route maxDiff=${Oracle.maxDiff(got, want)}")
 
-  /** Every frontier run returns one superstep record per iteration. */
-  def recorded(route: String, run: graft.pagerank.PagerankRun): Unit =
+  /** Every frontier run returns one superstep record per iteration, and
+    * takes as many iterations as the sequential reference. */
+  def recorded(route: String, run: graft.pagerank.PagerankRun,
+      refIters: Int): Unit = {
     assert(run.stats.supersteps.size === run.stats.iterations, route)
+    assert(run.stats.iterations === refIters, s"$route iterations")
+  }
 
   def checkCase(c: Case): Unit = {
     val x = c.base
@@ -67,9 +71,9 @@ class DynamicRoutesPropertySpec extends AnyFunSuite {
     val pr = new PageRank(spark)
     for (v <- Oracle.Variants) {
       val run = TestSpark.dynamicRun(pr, v, xDf, yDf, insDf, delDf, prev)
-      recorded(s"PageRank $v", run)
-      close(s"PageRank $v", TestSpark.collectRanks(run.ranks),
-        Oracle.dynamic(x, y, prevMap, c.ins, del, v)._1)
+      val (ref, refIters) = Oracle.dynamic(x, y, prevMap, c.ins, del, v)
+      recorded(s"PageRank $v", run, refIters)
+      close(s"PageRank $v", TestSpark.collectRanks(run.ranks), ref)
     }
 
     // carried splice: its contract wants a tidy batch
@@ -79,9 +83,9 @@ class DynamicRoutesPropertySpec extends AnyFunSuite {
     for ((prune, v) <- Seq(false -> Oracle.DF, true -> Oracle.DFP)) {
       val (_, run, _) = dyn.applyBatch(g0, st0, EdgeOps.tidyInsertions(insDf, xDf),
         EdgeOps.tidyDeletions(delDf, xDf), prune)
-      recorded(s"CsrDynamic.applyBatch $v", run)
-      close(s"CsrDynamic.applyBatch $v", TestSpark.collectRanks(run.ranks),
-        Oracle.dynamic(x, yT, prevMap, insT, delT, v)._1)
+      val (ref, refIters) = Oracle.dynamic(x, yT, prevMap, insT, delT, v)
+      recorded(s"CsrDynamic.applyBatch $v", run, refIters)
+      close(s"CsrDynamic.applyBatch $v", TestSpark.collectRanks(run.ranks), ref)
     }
 
     // streaming front end: the raw batch (incl. self-loop deletion

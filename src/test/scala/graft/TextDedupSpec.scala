@@ -114,6 +114,43 @@ class TextDedupSpec extends AnyFunSuite {
     assert(pairs.exists(r => r.getLong(0) === 100L && r.getLong(1) === 101L))
   }
 
+  test("minhash and minhash-LSH equal their reference formulations on the sf documents") {
+    val (n, k, bands) = (5, 32, 8)
+    val rows = k / bands
+    for (dir <- Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
+      val d = spark.read.parquet(s"$dir/documents.parquet")
+      // reference signature: explode the shingles, one min-aggregate per seed
+      val mins = (0 until k).map(i => min(xxhash64(lit(i), $"shingle")).as(s"m$i"))
+      val refSig = Dedup.shingles(d, n).groupBy("doc_id").agg(mins.head, mins.tail: _*)
+        .select($"doc_id", array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
+        .cache()
+      def sigs(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1).toSeq
+      val want = sigs(refSig)
+      assert(want.nonEmpty, dir)
+      assert(sigs(Dedup.minhash(d, n, k)) === want, dir)
+
+      // reference LSH: band the reference signature, dedupe the candidate
+      // pairs with the signatures riding along, then score
+      val banded = refSig.select($"doc_id", $"sig",
+        posexplode(transform(sequence(lit(0), lit(bands - 1)),
+          bnd => aggregate(slice($"sig", bnd * rows + 1, lit(rows)),
+            xxhash64(bnd), (acc, x) => xxhash64(acc, x)))).as(Seq("band", "bucket")))
+      val l = banded.select($"doc_id".as("a"), $"sig".as("siga"), $"band", $"bucket")
+      val r = banded.select($"doc_id".as("b"), $"sig".as("sigb"), $"band", $"bucket")
+      val refLsh = l.join(r, Seq("band", "bucket")).where($"a" < $"b")
+        .dropDuplicates("a", "b")
+        .select($"a", $"b", (size(filter(zip_with($"siga", $"sigb", (x, y) => x === y),
+          eq => eq)).cast("double") / k).as("sim"))
+        .where($"sim" >= 0.5)
+      def pairs(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+          .sortBy(p => (p._1, p._2)).toSeq
+      assert(pairs(Dedup.minhashLsh(d, n, k, bands, threshold = 0.5)) === pairs(refLsh), dir)
+      refSig.unpersist()
+    }
+  }
+
   test("simhash: identical texts collide; near/far texts ordered by hamming") {
     // With few distinct tokens, per-bit vote sums sit near zero and one
     // extra token can flip ~25% of the zero-sum bits — so "near" means
