@@ -137,6 +137,10 @@ object SparkEntry {
         round(col("rank"), 6).as("rank3")).orderBy("id")
     }),
 
+    // The insertions (orders with o_orderkey % 7 = 0) and deletions (~9% of
+    // the base) are sized to the table, not to a stream batch: they go to
+    // the driver (EdgeOps' batch-fits-on-the-driver contract), which holds
+    // at the sf0.01 scale this query is exercised at.
     "q_batch_apply" -> ((s, dir) => {
       val base = derivedEdges(s, dir)
       val ins = s.read.parquet(s"$dir/orders.parquet")
@@ -152,7 +156,9 @@ object SparkEntry {
 
     // Batch tidying B4-B7 (filter by existence + dedupe + sort,
     // /root/reference/inc/batch.hxx:153-208): tidied insertions are the
-    // batch rows NOT in the base, tidied deletions those that ARE.
+    // batch rows NOT in the base, tidied deletions those that ARE. The
+    // batch (every order) goes to the driver, as q_batch_apply's does;
+    // exercised at sf0.01 only.
     "q_tidy_batch" -> ((s, dir) => {
       val base = derivedEdges(s, dir)
       val batch = s.read.parquet(s"$dir/orders.parquet")

@@ -1,7 +1,7 @@
 package graft.pagerank
 
-import org.apache.spark.{HashPartitioner, TaskContext}
-import org.apache.spark.rdd.RDD
+import org.apache.spark.{Aggregator, HashPartitioner, TaskContext}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
@@ -30,8 +30,9 @@ import CsrDynamic._
   * exceeded frontierTolerance (DF expansion, pagerank.hxx:688-692; DF-P
   * additionally unflags swept vertices at rest and skips the self edge,
   * pagerankPrune.hxx:62-67). One shuffle per superstep and one job per
-  * fused BLOCK of up to [[CsrDynamic.fuseMax]] (8) supersteps
-  * ([[runLoop]]'s block fusion), with
+  * fused BLOCK of up to [[CsrDynamic.fuseMax]] (8) supersteps, fewer
+  * when a block's cached supersteps could outgrow a quarter of the
+  * storage memory ([[runLoop]]'s block fusion), with
   * work O(Σ outdeg(changed)) instead of O(|E|) — this is what makes a
   * 1e-4·|E| batch converge in milliseconds-per-superstep at web scale.
   * Every run returns what it measured in its own stats: one
@@ -49,7 +50,10 @@ import CsrDynamic._
   * retracted, new-degree terms added) and the DF initial marking
   * (out-neighbors in x of deletion srcs, in y of insertion srcs,
   * pagerank.hxx:631-637) into a sparse [[CsrPageRank.PushAcc]], whose
-  * messages are the first round's traffic.
+  * messages are the first round's traffic. The splice, its edge count and
+  * the initial mark count share one Spark job, so a one-edge batch of ~10
+  * supersteps is four jobs: that one, two fused loop blocks and the
+  * terminal S fold (an empty batch is two).
   *
   * This is the one engine of [[PageRank]]'s dynamic variants (ND, DT, DF,
   * DF-P) and of the streaming front end; CsrDynamicSpec asserts allclose
@@ -121,12 +125,12 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
 
   /** Resolve a seed-id DataFrame to packed per-partition mark messages —
     * the DF initial marking (fm) delivered as the first round's traffic. */
-  private def marksFromIds(g: CsrGraph, ids: org.apache.spark.sql.DataFrame)
-      : RDD[(Int, Msg)] = {
-    val parts = g.vCounts.length
+  private def marksFromIds(blocks: RDD[CsrBlock],
+      ids: org.apache.spark.sql.DataFrame): RDD[(Int, Msg)] = {
+    val parts = blocks.getNumPartitions
     ids.select("id").rdd.map(r => (r.getLong(0), ()))
       .partitionBy(new HashPartitioner(parts))
-      .zipPartitions(g.blocks, preservesPartitioning = false) { (iIt, bIt) =>
+      .zipPartitions(blocks, preservesPartitioning = false) { (iIt, bIt) =>
         val b = bIt.next()
         val p = TaskContext.getPartitionId()
         val buf = new scala.collection.mutable.ArrayBuilder.ofInt
@@ -158,7 +162,7 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
       : (PagerankRun, RDD[CsrState]) = {
     val t0 = System.nanoTime()
     val parts = g.vCounts.length
-    val marks = marksFromIds(g, seeds).partitionBy(ip(parts))
+    val marks = marksFromIds(g.blocks, seeds).partitionBy(ip(parts))
     val cur0 = state.zipPartitions(marks, preservesPartitioning = true) {
       (stIt, mIt) =>
         val st0 = stIt.next()
@@ -238,10 +242,9 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
       .partitionBy(ip(parts))
 
     // Splice blocks; emit S-corrections + DF initial marking as messages.
-    // The spliced edge total rides the SAME job as a retry-idempotent
-    // per-partition accumulator — counting it afterwards cost a full extra
-    // pass over the block cache per batch (a measurable slice of a
-    // small-fraction batch's wall, VERDICT r4 item 4).
+    // Nothing runs here: the splice is materialized by the one job below
+    // that also counts the initial marks, and the spliced edge total rides
+    // that job as a retry-idempotent per-partition accumulator.
     val vc = sc.broadcast(g.vCounts)
     val nEdgesAcc = new PartitionAcc[Long]
     sc.register(nEdgesAcc)
@@ -253,7 +256,6 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
       nEdgesAcc.add((TaskContext.getPartitionId(), out._1.offsets.last.toLong))
       Iterator.single(out)
     }.persist(StorageLevel.MEMORY_AND_DISK)
-    spliced.count()
 
     val newBlocks = spliced.map(_._1)
     newBlocks.persist(StorageLevel.MEMORY_AND_DISK)
@@ -269,8 +271,6 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
     // permanently-live deps per batch, 76k tmpfs files and per-superstep
     // driver overhead growing 74→450 ms across 45 endurance batches).
     newBlocks.localCheckpoint()
-    val nEdges = nEdgesAcc.value.values.sum
-    val newG = CsrGraph(newBlocks, g.vCounts, g.n, nEdges)
 
     // Loop state: (state with patches NOT yet applied, patch messages as the
     // first round's incoming traffic). The input g.blocks/state stay
@@ -282,7 +282,7 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
         // explicit-frontier mode: keep the splice's S corrections, drop its
         // DF marking, deliver the seed marking instead (targets stay home:
         // a (p, msg) emitted AT partition p routes back to p)
-        val seedMarks = marksFromIds(newG, sd).partitionBy(ip(parts))
+        val seedMarks = marksFromIds(newBlocks, sd).partitionBy(ip(parts))
         spliced.map { case (_, st, patches) =>
           (st, patches.map { case (q, m) =>
             (q, (m._1, m._2, Array.empty[Int]): Msg)
@@ -293,10 +293,9 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
             Iterator.single((st, pat ++ mIt.toArray))
         }
     }
-    // ONE job materializes BOTH long-lived caches (blocks + loop state):
-    // each zipped partition pulls its newBlocks and cur partitions out of
-    // the spliced cache, so nothing is computed twice and the second
-    // count-job the pre-r5 code paid per batch is gone.
+    // ONE job splices and materializes BOTH long-lived caches (blocks +
+    // loop state): each zipped partition pulls its newBlocks and cur
+    // partitions out of the spliced cache, so nothing is computed twice.
     cur.persist(StorageLevel.MEMORY_AND_DISK)
     // same pre-materialization truncation as newBlocks above: releases the
     // splice's two batch shuffles (and seed marking) once this job runs
@@ -305,6 +304,7 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
       (bIt, cIt) => bIt.foreach(_ => ()); Iterator.single(markCount(cIt))
     }.fold(0L)(_ + _)
     spliced.unpersist(false)
+    val newG = CsrGraph(newBlocks, g.vCounts, g.n, nEdgesAcc.value.values.sum)
     val (run, finalState) =
       runLoop(newG, cur, marks0, prune, t0, System.nanoTime(), fixedFrontier)
     (newG, run, finalState)
@@ -352,10 +352,10 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
       val statAcc = new PartitionAcc[Array[Double]]
       sc.register(statAcc)
       val msgs = msgShuffle(prev.flatMap(_._2.iterator), ip(parts))
-      val nxt = prev.map(_._1).zipPartitions(msgs, g.blocks,
-        preservesPartitioning = true) { (stIt, mIt, bIt) =>
+      val nxt = prev.zipPartitions(msgs, g.blocks,
+        preservesPartitioning = false) { (stIt, mIt, bIt) =>
         val tTask0 = System.nanoTime()
-        val st0 = stIt.next()
+        val st0 = stIt.next()._1
         val b = bIt.next()
         val p = TaskContext.getPartitionId()
         // Drain the (few, packed) incoming message batches first so the
@@ -490,31 +490,44 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
     // 4M pages: ~38 ms of a ~165 ms small-frontier superstep wall). The
     // fused supersteps' states persist as a side effect of those map
     // stages, so the narrow zip consumer of each state reads it from
-    // cache. The block size is chosen so the fixpoint is rarely overshot:
-    // fuse only while the fastest residual decay observed so far still
-    // leaves more supersteps than the block. The per-step records are then
-    // read in order and the loop keeps the FIRST superstep whose residual
-    // fell under the tolerance or whose frontier emptied, as the static
-    // sweep does, so iterations, ranks and records equal the
-    // one-job-per-superstep loop's; supersteps a block ran past that point
-    // are discarded.
-    var rhoMin = 1.0 // fastest observed per-superstep residual decay
-    var prevResidual = Double.NaN
+    // cache. The per-step records are read in order and the loop keeps
+    // the FIRST superstep whose residual fell under the tolerance or whose
+    // frontier emptied, as the static sweep does, so iterations, ranks and
+    // records equal the one-job-per-superstep loop's; supersteps a block
+    // ran past that point are discarded. Overshoot therefore costs only
+    // discarded work, never results: the run opens with a full block, and
+    // each later block covers the supersteps still expected at the run's
+    // mean residual decay so far (a small-batch run of ~10 supersteps takes
+    // two loop jobs). The mean, not the fastest single-step decay: DF-P
+    // residuals zig-zag, and one steep step (0.09 on the fixture of
+    // BatchJobsSpec, against a mean of 0.5) would cut every later block to
+    // two or three supersteps. DF's residual decay slows as it converges,
+    // so the mean over-states its speed and later blocks come out short,
+    // not long (at 4M pages no block ran past its stop point).
+    //
+    // A block holds every one of its supersteps' states and outgoing
+    // messages in the cache until its job ends. `fuseCap` bounds that: at
+    // worst a superstep clones every vertex's state (rank, S, flag: 17 B)
+    // and sends one (index, delta) message per edge (12 B), and a block's
+    // supersteps must fit in a quarter of the cluster's storage memory.
+    // Without the cap, dense DF supersteps at 4M pages on a 6 GB heap ran
+    // ~3× slower fused than one per job, with the disk busy (up to 65%
+    // iowait).
+    val genBytes = 17.0 * g.n + 12.0 * g.nEdges
+    val storageBytes =
+      sc.getExecutorMemoryStatus.values.map(_._1.toDouble).sum
+    val fuseCap =
+      math.max(1, math.min(fuseMax.toDouble, storageBytes / 4 / genBytes).toInt)
+    var firstResidual = Double.NaN
     val records = Vector.newBuilder[Superstep]
     while (iter < opts.maxIterations && residual >= opts.tolerance &&
         active > 0) {
-      val block =
-        if (prevResidual.isNaN || rhoMin >= 1.0 ||
-            residual <= 0.0 || residual == Double.MaxValue) 1
-        else {
-          // underestimate of supersteps to convergence at the fastest
-          // observed decay; fusing one fewer than that cannot overshoot
-          val remainMin =
-            math.log(opts.tolerance / residual) / math.log(rhoMin)
-          math.max(1, math.min(fuseMax.toDouble,
-            math.min(remainMin - 1.0,
-              (opts.maxIterations - iter).toDouble)).toInt)
-        }
+      val remain =
+        if (iter < 2 || residual >= firstResidual) fuseCap.toDouble
+        else math.ceil(math.log(opts.tolerance / residual) * (iter - 1) /
+          math.log(residual / firstResidual))
+      val block = math.max(1.0, math.min(remain,
+        math.min(fuseCap, opts.maxIterations - iter).toDouble)).toInt
       val steps = new scala.collection.mutable.ArrayBuffer[
         (RDD[(CsrState, Array[(Int, Msg)])], PartitionAcc[Array[Double]])](block)
       var chain = cur
@@ -540,12 +553,7 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
           flagged = (active.toDouble - stats.map(_(3)).sum).toLong,
           flaggedEdges = stats.map(_(2)).sum.toLong,
           kernelCritMs = if (stats.isEmpty) 0.0 else stats.map(_(4)).max / 1e6)
-        if (!prevResidual.isNaN && prevResidual > 0.0 && residual > 0.0 &&
-            residual < prevResidual) {
-          val rho = residual / prevResidual
-          if (rho < rhoMin) rhoMin = rho
-        }
-        prevResidual = residual
+        if (firstResidual.isNaN) firstResidual = residual
         si += 1
         stop = si == steps.length || residual < opts.tolerance || active == 0
       }
@@ -562,9 +570,9 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
     // |final frontier|·tolerance per batch, compounding across long streams.
     // One cheap extra job; flags/ranks are shared (not mutated).
     val termMsgs = msgShuffle(cur.flatMap(_._2.iterator), ip(parts))
-    val finalState = cur.map(_._1).zipPartitions(termMsgs,
-      preservesPartitioning = true) { (stIt, mIt) =>
-      val st0 = stIt.next()
+    val finalState = cur.zipPartitions(termMsgs,
+      preservesPartitioning = false) { (stIt, mIt) =>
+      val st0 = stIt.next()._1
       val st = CsrState(st0.rank, st0.s.clone(), st0.flag)
       mIt.foreach { case (_, (idxs, deltas, _)) =>
         var j = 0
@@ -636,12 +644,22 @@ object CsrDynamic {
     * Deliberately NOT done via spark.shuffle.sort.bypassMergeThreshold=0:
     * session-wide that moved the DataFrame engine's large SQL exchanges
     * onto UnsafeShuffleWriter's 64 MB humongous pages and degraded them
-    * ~15× on a 48 GB G1 heap (see GraftSession). */
+    * ~15× on a 48 GB G1 heap (see GraftSession). The ShuffledRDD is built
+    * directly rather than through `combineByKey`, which would run Spark's
+    * closure cleaner on its three functions every superstep: each cleaning
+    * reads and parses the declaring class file, and a JFR profile of
+    * perfbench stream-small on a 4-core host put this loop's closure
+    * cleaning at ~9 ms of driver CPU per batch. */
   def msgShuffle(msgs: RDD[(Int, Msg)],
-      p: org.apache.spark.Partitioner): RDD[(Int, Msg)] = {
+      p: org.apache.spark.Partitioner): RDD[(Int, Msg)] =
+    new ShuffledRDD[Int, Msg, Msg](msgs, p)
+      .setAggregator(mergeMsgs)
+      .setMapSideCombine(true)
+
+  private val mergeMsgs: Aggregator[Int, Msg, Msg] = {
     val merge = (a: Msg, b: Msg) =>
       (a._1 ++ b._1, a._2 ++ b._2, a._3 ++ b._3)
-    msgs.combineByKeyWithClassTag[Msg]((m: Msg) => m, merge, merge, p)
+    Aggregator[Int, Msg, Msg]((m: Msg) => m, merge, merge)
   }
 
   /** Home partition of a vertex id under Spark's HashPartitioner(parts). */
@@ -695,6 +713,8 @@ object CsrDynamic {
     val newOffsets = new Array[Int](n + 1)
     val outP = new scala.collection.mutable.ArrayBuilder.ofInt
     val outI = new scala.collection.mutable.ArrayBuilder.ofInt
+    outP.sizeHint(b.dstPart.length)
+    outI.sizeHint(b.dstIdx.length)
     val newInv = new Array[Double](n)
     // starts at its minimum capacity and grows with the touched targets
     val patch = new SparsePush(parts, edgeBound = 0)
@@ -707,8 +727,8 @@ object CsrDynamic {
       val ins = insBy.get(i)
       val del = delBy.get(i)
       if (ins == null && del == null) {
-        var e = from
-        while (e < until) { outP += b.dstPart(e); outI += b.dstIdx(e); e += 1 }
+        outP.addAll(b.dstPart, from, until - from)
+        outI.addAll(b.dstIdx, from, until - from)
         w += until - from
         newInv(i) = b.invDeg(i)
       } else {

@@ -163,14 +163,16 @@ class IncrementalPageRank(spark: SparkSession,
       // (self-loop deletions were already dropped in split()). A deletion
       // the same batch re-inserts leaves the edge in place
       // (EdgeOps.applyBatch deletes first), so it is no deletion here.
+      // Both tidies return local relations; the edge table advances by the
+      // same tidied pair, so the raw batch is collected once.
       val insT = EdgeOps.tidyInsertions(ins, edges)
-      val delT = EdgeOps.tidyDeletions(del, edges)
-        .join(ins, Seq("src", "dst"), "left_anti")
+      val delT = EdgeOps.tidyDeletions(
+        del.join(ins, Seq("src", "dst"), "left_anti"), edges)
       val (g2, run, st2) = dyn.applyBatch(csrG, csrSt, insT, delT,
         prune = false)
       carry(g2, st2)
       ranks = run.ranks
-      edges = EdgeOps.applyBatch(edges, ins, del).ckpt()
+      edges = EdgeOps.applyBatch(edges, insT, delT).ckpt()
     }
     batchesApplied += 1
     persistCompletedBatch(batch)
