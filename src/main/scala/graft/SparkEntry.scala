@@ -8,7 +8,7 @@ import graft.ann.Ann
 import graft.dedup.Dedup
 import graft.graph.EdgeOps
 import graft.ingest.WebGraphFixture
-import graft.model.PagerankOptions
+import graft.model.{DynamicVariant, PagerankOptions}
 import graft.multimodal.Multimodal
 import graft.pagerank.{CsrDynamic, CsrPageRank, PageRank}
 import graft.streaming.IncrementalPageRank
@@ -72,6 +72,19 @@ object SparkEntry {
 
   private def tightDynOpts: PagerankOptions =
     PagerankOptions(frontierTolerance = 1e-12, pruneTolerance = 1e-12)
+
+  /** `variant` on the [[dynamicSplit]] batch under [[tightDynOpts]], warm
+    * from the DataFrame static ranks of x, or the CSR ones with `csrPrev`. */
+  private def dynamicRow(variant: DynamicVariant, csrPrev: Boolean)
+      : (SparkSession, String) => DataFrame = (s, dir) => {
+    val (x, y, ins) = dynamicSplit(s, dir)
+    val pr = new PageRank(s, tightDynOpts)
+    val prev =
+      if (csrPrev) new CsrPageRank(s, tightDynOpts).static(x).ranks
+      else pr.static(x).ranks
+    pr.dynamic(variant, x, y, ins, ins.limit(0), prev).ranks
+      .select(col("id"), round(col("rank"), 6).as("rank")).orderBy("id")
+  }
 
   /** Web fixture graph (pages → links → ids), small scale for Verify. */
   private def webGraph(s: SparkSession, pageCount: Long): (DataFrame, DataFrame) = {
@@ -226,55 +239,15 @@ object SparkEntry {
     // SAME fixpoint as the 200-round power-iteration oracle. These three rows
     // run the same CsrDynamic engine as the csr_* rows below, through the
     // public PageRank API.
-    "q_pagerank_dynamic_frontier" -> ((s, dir) => {
-      val (x, y, ins) = dynamicSplit(s, dir)
-      val pr = new PageRank(s, tightDynOpts)
-      val prev = pr.static(x).ranks
-      pr.dynamicFrontier(x, y, ins, ins.limit(0), prev).ranks
-        .select(col("id"), round(col("rank"), 6).as("rank")).orderBy("id")
-    }),
-
-    "q_pagerank_dynamic_traversal" -> ((s, dir) => {
-      val (x, y, ins) = dynamicSplit(s, dir)
-      val pr = new PageRank(s, tightDynOpts)
-      val prev = pr.static(x).ranks
-      pr.dynamicTraversal(x, y, ins, ins.limit(0), prev).ranks
-        .select(col("id"), round(col("rank"), 6).as("rank")).orderBy("id")
-    }),
-
-    "q_pagerank_dfp" -> ((s, dir) => {
-      val (x, y, ins) = dynamicSplit(s, dir)
-      val pr = new PageRank(s, tightDynOpts)
-      val prev = pr.static(x).ranks
-      pr.dynamicFrontierPrune(x, y, ins, ins.limit(0), prev).ranks
-        .select(col("id"), round(col("rank"), 6).as("rank")).orderBy("id")
-    }),
+    "q_pagerank_dynamic_frontier" -> dynamicRow(DynamicVariant.DF, csrPrev = false),
+    "q_pagerank_dynamic_traversal" -> dynamicRow(DynamicVariant.DT, csrPrev = false),
+    "q_pagerank_dfp" -> dynamicRow(DynamicVariant.DFP, csrPrev = false),
 
     // The same dynamic runs warm-started from the CSR static ranks instead
     // of the DataFrame ones — the all-CSR pipeline under the hard signal.
-    "q_pagerank_csr_frontier" -> ((s, dir) => {
-      val (x, y, ins) = dynamicSplit(s, dir)
-      val pr = new PageRank(s, tightDynOpts)
-      val prev = new CsrPageRank(s, tightDynOpts).static(x).ranks
-      pr.dynamicFrontier(x, y, ins, ins.limit(0), prev).ranks
-        .select(col("id"), round(col("rank"), 6).as("rank")).orderBy("id")
-    }),
-
-    "q_pagerank_csr_traversal" -> ((s, dir) => {
-      val (x, y, ins) = dynamicSplit(s, dir)
-      val pr = new PageRank(s, tightDynOpts)
-      val prev = new CsrPageRank(s, tightDynOpts).static(x).ranks
-      pr.dynamicTraversal(x, y, ins, ins.limit(0), prev).ranks
-        .select(col("id"), round(col("rank"), 6).as("rank")).orderBy("id")
-    }),
-
-    "q_pagerank_csr_dfp" -> ((s, dir) => {
-      val (x, y, ins) = dynamicSplit(s, dir)
-      val pr = new PageRank(s, tightDynOpts)
-      val prev = new CsrPageRank(s, tightDynOpts).static(x).ranks
-      pr.dynamicFrontierPrune(x, y, ins, ins.limit(0), prev).ranks
-        .select(col("id"), round(col("rank"), 6).as("rank")).orderBy("id")
-    }),
+    "q_pagerank_csr_frontier" -> dynamicRow(DynamicVariant.DF, csrPrev = true),
+    "q_pagerank_csr_traversal" -> dynamicRow(DynamicVariant.DT, csrPrev = true),
+    "q_pagerank_csr_dfp" -> dynamicRow(DynamicVariant.DFP, csrPrev = true),
 
     // The carried-state form of the CSR engine: the batch is applied via
     // CsrDynamic.applyBatch's in-place CSR SPLICE (no re-freeze of y) and

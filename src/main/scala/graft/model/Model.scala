@@ -97,3 +97,25 @@ final case class PagerankStats(
   *    wall: divide `computeTimeMs` by the record count. */
 final case class Superstep(residual: Double, flagged: Long,
     flaggedEdges: Long, kernelCritMs: Double)
+
+/** The four dynamic PageRank variants of the reference's pagerankInvoke
+  * (reference inc/pagerank.hxx:482-729, inc/pagerankPrune.hxx). Each
+  * seeds its frontier from the batch's DF marking (out-neighbours in x of
+  * deletion sources, in y of insertion sources, pagerank.hxx:631-637):
+  *  - ND: every vertex, fixed frontier (warm full sweep)
+  *  - DT: the marking's closure in y, fixed frontier
+  *  - DF: the marking, grown by every vertex whose relΔ > frontierTolerance
+  *  - DFP: DF with closed-form self-loop removal and a frontier that drops
+  *    vertices at rest (relΔ ≤ pruneTolerance) */
+sealed trait DynamicVariant {
+  /** The frontier never grows during iteration. */
+  def fixedFrontier: Boolean = this == DynamicVariant.ND || this == DynamicVariant.DT
+  def prune: Boolean = this == DynamicVariant.DFP
+}
+object DynamicVariant {
+  case object ND extends DynamicVariant
+  case object DT extends DynamicVariant
+  case object DF extends DynamicVariant
+  case object DFP extends DynamicVariant
+  val all: Seq[DynamicVariant] = Seq(ND, DT, DF, DFP)
+}

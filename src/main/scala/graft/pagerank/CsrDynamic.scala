@@ -5,7 +5,7 @@ import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-import graft.model.{PagerankOptions, PagerankStats, Superstep}
+import graft.model.{DynamicVariant, PagerankOptions, PagerankStats, Superstep}
 import CsrPageRank.{contributionSums, pack, CsrBlock, CsrGraph, IdxPartitioner,
   Msg, PartitionAcc, PushAcc, SparsePush}
 import CsrDynamic._
@@ -51,14 +51,16 @@ import CsrDynamic._
   * (out-neighbors in x of deletion srcs, in y of insertion srcs,
   * pagerank.hxx:631-637) into a sparse [[CsrPageRank.PushAcc]], whose
   * messages are the first round's traffic. The splice, its edge count and
-  * the initial mark count share one Spark job, so a one-edge batch of ~10
-  * supersteps is four jobs: that one, two fused loop blocks and the
+  * the initial mark count share one Spark job, so a one-edge DF-P batch of
+  * ~10 supersteps is four jobs: that one, two fused loop blocks and the
   * terminal S fold (an empty batch is two).
   *
   * This is the one engine of [[PageRank]]'s dynamic variants (ND, DT, DF,
-  * DF-P) and of the streaming front end; CsrDynamicSpec asserts allclose
-  * vs the sequential Jacobi reference (test `Oracle.dynamic`) and the
-  * converged in-memory oracle.
+  * DF-P) and of the streaming front end, and [[applyBatch]] is the one way
+  * in: every variant splices its batch, then seeds its frontier from the
+  * splice's marking (DT from their closure, one more job per hop; ND from
+  * every vertex). CsrDynamicSpec asserts allclose vs the sequential Jacobi
+  * reference (test `Oracle.dynamic`) and the converged in-memory oracle.
   * Semantics requirement: the vertex universe is FIXED (every batch endpoint
   * already has its self-loop in the base graph) — the same eager-universe
   * contract the reference's temporal loader establishes
@@ -115,7 +117,7 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
       CsrState(r, s, new Array[Boolean](r.length))
     }
     state.persist(StorageLevel.MEMORY_AND_DISK)
-    // pre-materialization truncation (see applyBatchImpl): carried state
+    // pre-materialization truncation (see applyBatch): carried state
     // must not retain the full static-run superstep chain behind prevRanks
     state.localCheckpoint()
     state.count()
@@ -123,98 +125,33 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
     state
   }
 
-  /** Resolve a seed-id DataFrame to packed per-partition mark messages —
-    * the DF initial marking (fm) delivered as the first round's traffic. */
-  private def marksFromIds(blocks: RDD[CsrBlock],
-      ids: org.apache.spark.sql.DataFrame): RDD[(Int, Msg)] = {
-    val parts = blocks.getNumPartitions
-    ids.select("id").rdd.map(r => (r.getLong(0), ()))
-      .partitionBy(new HashPartitioner(parts))
-      .zipPartitions(blocks, preservesPartitioning = false) { (iIt, bIt) =>
-        val b = bIt.next()
-        val p = TaskContext.getPartitionId()
-        val buf = new scala.collection.mutable.ArrayBuilder.ofInt
-        iIt.foreach { case (id, _) =>
-          val i = java.util.Arrays.binarySearch(b.srcs, id)
-          if (i < 0) throw new CsrDynamic.UniverseGrowthRequired(
-            s"seed vertex $id outside the frozen vertex universe — rebuild " +
-              "the CSR graph over the grown edge set (see scaladoc)")
-          buf += i
-        }
-        val arr = buf.result()
-        if (arr.isEmpty) Iterator.empty
-        else Iterator.single(
-          (p, (Array.empty[Int], Array.empty[Double], arr): Msg))
-      }
-  }
-
-  /** One dynamic run over an already-updated graph: warm state + explicit
-    * seed marking (the one-shot form of [[applyBatch]], used by
-    * [[PageRank]]'s dynamic variants where the batch is already merged into
-    * `g` by the caller). Flags start CLEARED — the reference allocates a
-    * fresh affected vector per invocation (inc/pagerank.hxx:683).
-    * `fixedFrontier` = Dynamic Traversal semantics (V3,
-    * inc/pagerank.hxx:577-615): the affected set is the seed marking
-    * (caller passes the BFS closure) and never grows during iteration. */
-  def runFromSeeds(g: CsrGraph, state: RDD[CsrState],
-      seeds: org.apache.spark.sql.DataFrame, prune: Boolean,
-      fixedFrontier: Boolean = false)
-      : (PagerankRun, RDD[CsrState]) = {
-    val t0 = System.nanoTime()
-    val parts = g.vCounts.length
-    val marks = marksFromIds(g.blocks, seeds).partitionBy(ip(parts))
-    val cur0 = state.zipPartitions(marks, preservesPartitioning = true) {
-      (stIt, mIt) =>
-        val st0 = stIt.next()
-        // fresh frontier per invocation; rank/S arrays are shared (the
-        // superstep's copy-on-write clone protects the cached originals)
-        val st = CsrState(st0.rank, st0.s, new Array[Boolean](st0.rank.length))
-        Iterator.single((st, mIt.toArray))
-    }
-    cur0.persist(StorageLevel.MEMORY_AND_DISK)
-    val marks0 = cur0.mapPartitions(c => Iterator.single(markCount(c))).fold(0L)(_ + _)
-    runLoop(g, cur0, marks0, prune, t0, System.nanoTime(), fixedFrontier)
-  }
-
-  /** Splice a tidied batch into the CSR graph and run DF / DF-P from the
-    * carried state. Returns (updated graph, run result, carried state for
-    * the next batch).
+  /** Splice a batch into the CSR graph and run `variant` from the carried
+    * state. Returns (updated graph, run result, carried state for the next
+    * batch). This is the one entry of every dynamic variant: the one-shot
+    * [[PageRank]] variants freeze x and call it with the raw batch.
     *
-    * `insertions` must be tidy (not already present, endpoints in the
-    * universe); `deletions` must exist. Use EdgeOps.tidy* upstream.
-    */
-  /** Stream-safety invariant: the returned graph blocks and carried state
+    * Batch contract: `insertions` and `deletions` are (src, dst) relations
+    * whose endpoints lie in the frozen universe (else
+    * [[UniverseGrowthRequired]]); they need no tidying. The splice deletes,
+    * then inserts, as [[graft.graph.EdgeOps.applyBatch]] does: deleting an
+    * absent edge, inserting a present one and duplicate rows are no-ops,
+    * and an edge the batch both deletes and inserts stays. No batch may
+    * delete a vertex's last edge (its self-loop).
+    *
+    * The splice marks the DF frontier (out-neighbours in x of every source
+    * that lost an edge, in y of every source that gained one,
+    * pagerank.hxx:631-637), and the variant seeds its frontier from it:
+    * DF and DF-P take the marks as they are, DT their closure over the
+    * spliced blocks ([[closure]]: one job per hop), ND every vertex. The
+    * splice's S corrections ride the first round's messages in all four.
+    *
+    * Stream-safety invariant: the returned graph blocks and carried state
     * are lineage-truncated (local-checkpointed) at their materializing job,
     * so an indefinite batch loop retains NO per-superstep shuffle lineage
     * from past batches — carried structures are always O(1) deep. */
   def applyBatch(g: CsrGraph, state: RDD[CsrState],
       insertions: DataFrame, deletions: DataFrame,
-      prune: Boolean): (CsrGraph, PagerankRun, RDD[CsrState]) =
-    applyBatchImpl(g, state, insertions, deletions, prune,
-      seeds = None, fixedFrontier = false)
-
-  /** Carried-state splice with an EXPLICIT affected set instead of the DF
-    * marking: the batch is spliced exactly as [[applyBatch]] (S corrections
-    * kept), but the splice's own marks are discarded and `seeds` become the
-    * frontier. With `fixedFrontier = true` this is the carried form of
-    *  - Dynamic Traversal (seeds = the BFS closure of the batch in y,
-    *    /root/reference/inc/pagerank.hxx:577-615), and
-    *  - Naive-dynamic (seeds = ALL vertices ⇒ warm full Jacobi sweep,
-    *    pagerank.hxx:482-509) —
-    * so a reference-protocol batch loop can advance EVERY technique by
-    * splice, never re-freezing (/root/reference/main.cxx:87-103 keeps one
-    * evolving graph). */
-  def applyBatchSeeded(g: CsrGraph, state: RDD[CsrState],
-      insertions: DataFrame, deletions: DataFrame, seeds: DataFrame,
-      prune: Boolean, fixedFrontier: Boolean = true)
-      : (CsrGraph, PagerankRun, RDD[CsrState]) =
-    applyBatchImpl(g, state, insertions, deletions, prune,
-      seeds = Some(seeds), fixedFrontier = fixedFrontier)
-
-  private def applyBatchImpl(g: CsrGraph, state: RDD[CsrState],
-      insertions: DataFrame, deletions: DataFrame, prune: Boolean,
-      seeds: Option[DataFrame], fixedFrontier: Boolean)
-      : (CsrGraph, PagerankRun, RDD[CsrState]) = {
+      variant: DynamicVariant): (CsrGraph, PagerankRun, RDD[CsrState]) = {
     val t0 = System.nanoTime()
     val sc = spark.sparkContext
     val parts = g.vCounts.length
@@ -276,51 +213,116 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
     // first round's incoming traffic). The input g.blocks/state stay
     // persisted — the CALLER owns them (it may advance several technique
     // tracks from the same snapshot, reference main.cxx:87-99).
-    val cur: RDD[(CsrState, Array[(Int, Msg)])] = seeds match {
-      case None => spliced.map { case (_, st, patches) => (st, patches) }
-      case Some(sd) =>
-        // explicit-frontier mode: keep the splice's S corrections, drop its
-        // DF marking, deliver the seed marking instead (targets stay home:
-        // a (p, msg) emitted AT partition p routes back to p)
-        val seedMarks = marksFromIds(newBlocks, sd).partitionBy(ip(parts))
-        spliced.map { case (_, st, patches) =>
-          (st, patches.map { case (q, m) =>
-            (q, (m._1, m._2, Array.empty[Int]): Msg)
-          })
-        }.zipPartitions(seedMarks, preservesPartitioning = true) {
-          (cIt, mIt) =>
-            val (st, pat) = cIt.next()
-            Iterator.single((st, pat ++ mIt.toArray))
-        }
-    }
+    val cur = spliced.map { case (_, st, patches) => (st, patches) }
     // ONE job splices and materializes BOTH long-lived caches (blocks +
     // loop state): each zipped partition pulls its newBlocks and cur
     // partitions out of the spliced cache, so nothing is computed twice.
     cur.persist(StorageLevel.MEMORY_AND_DISK)
     // same pre-materialization truncation as newBlocks above: releases the
-    // splice's two batch shuffles (and seed marking) once this job runs
+    // splice's two batch shuffles once this job runs
     cur.localCheckpoint()
     val marks0 = newBlocks.zipPartitions(cur, preservesPartitioning = true) {
       (bIt, cIt) => bIt.foreach(_ => ()); Iterator.single(markCount(cIt))
     }.fold(0L)(_ + _)
     spliced.unpersist(false)
     val newG = CsrGraph(newBlocks, g.vCounts, g.n, nEdgesAcc.value.values.sum)
-    val (run, finalState) =
-      runLoop(newG, cur, marks0, prune, t0, System.nanoTime(), fixedFrontier)
+
+    // DT and ND run a fixed frontier: its vertices start flagged, in place
+    // of the splice's marks; the splice's S corrections stay
+    def fixed(flags: RDD[Array[Boolean]]): RDD[(CsrState, Array[(Int, Msg)])] =
+      cur.zipPartitions(flags, preservesPartitioning = true) { (cIt, fIt) =>
+        val (st, patches) = cIt.next()
+        Iterator.single((CsrState(st.rank, st.s, fIt.next()), patches.map {
+          case (q, m) => (q, (m._1, m._2, Array.emptyIntArray): Msg)
+        }))
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+    val (cur0, reach) = variant match {
+      case DynamicVariant.ND =>
+        (fixed(newBlocks.map(b => Array.fill(b.srcs.length)(true))), None)
+      case DynamicVariant.DT =>
+        val r = closure(newBlocks, cur, marks0)
+        (fixed(r.map(_._1)), Some(r))
+      case _ => (cur, None)
+    }
+    val (run, finalState) = runLoop(newG, cur0,
+      if (variant == DynamicVariant.ND) newG.n else marks0, variant, t0,
+      System.nanoTime())
+    if (cur0 ne cur) cur.unpersist(false)
+    reach.foreach(_.unpersist(false))
     (newG, run, finalState)
+  }
+
+  /** [[applyBatch]] running DF, or DF-P when `prune`. */
+  def applyBatch(g: CsrGraph, state: RDD[CsrState],
+      insertions: DataFrame, deletions: DataFrame,
+      prune: Boolean): (CsrGraph, PagerankRun, RDD[CsrState]) =
+    applyBatch(g, state, insertions, deletions,
+      if (prune) DynamicVariant.DFP else DynamicVariant.DF)
+
+  /** DT's affected set (reference inc/pagerank.hxx:525-561): the
+    * closure over `blocks` of the `marks0` marks `cur` carries, as a push
+    * of marks only. One job per hop: each task closes its incoming marks
+    * inside its own partition and sends on the marks that cross to another
+    * partition; the hops stop after one that sends none. Returns the last
+    * hop (cached: each partition's closure as flags), which the caller
+    * unpersists. */
+  private def closure(blocks: RDD[CsrBlock],
+      cur: RDD[(CsrState, Array[(Int, Msg)])], marks0: Long)
+      : RDD[(Array[Boolean], Array[(Int, Msg)])] = {
+    val parts = blocks.getNumPartitions
+    // the splice's marks only: its S corrections stay behind in `cur`
+    var hop = cur.map { case (st, patches) =>
+      (new Array[Boolean](st.rank.length), patches.collect {
+        case (q, m) if m._3.nonEmpty =>
+          (q, (Array.emptyIntArray, Array.emptyDoubleArray, m._3): Msg)
+      })
+    }
+    var pending = marks0
+    while (pending > 0) {
+      val marks = msgShuffle(hop.flatMap(_._2.iterator), ip(parts))
+      val next = hop.zipPartitions(marks, blocks, preservesPartitioning = true) {
+        (hIt, mIt, bIt) =>
+          val seen = hIt.next()._1.clone()
+          val b = bIt.next()
+          val p = TaskContext.getPartitionId()
+          val out = Array.fill(parts)(new scala.collection.mutable.ArrayBuilder.ofInt)
+          val todo = new Array[Int](seen.length) // a vertex enters once
+          var n = 0
+          def visit(i: Int): Unit =
+            if (!seen(i)) { seen(i) = true; todo(n) = i; n += 1 }
+          mIt.foreach(_._2._3.foreach(visit))
+          while (n > 0) {
+            n -= 1
+            val u = todo(n)
+            for (e <- b.offsets(u) until b.offsets(u + 1))
+              if (b.dstPart(e) == p) visit(b.dstIdx(e))
+              else out(b.dstPart(e)) += b.dstIdx(e)
+          }
+          Iterator.single((seen, out.indices.filter(out(_).length > 0).map(q =>
+            (q, (Array.emptyIntArray, Array.emptyDoubleArray, out(q).result()): Msg)
+          ).toArray))
+      }
+      // truncate every hop, so a deep closure builds no deep lineage
+      next.localCheckpoint()
+      pending = next.map(_._2.iterator.map(_._2._3.length.toLong).sum).fold(0L)(_ + _)
+      hop.unpersist(false)
+      hop = next
+    }
+    hop
   }
 
   /** The superstep loop: ONE job per fused BLOCK of 1..fuseMax supersteps
     * (see the block-fusion comment inside). `cur0` pairs each
-    * partition's state (flags CLEARED — fresh frontier per invocation,
-    * matching the reference's per-call affected vector,
-    * /root/reference/inc/pagerank.hxx:683) with the first round's outgoing
-    * messages (S corrections + initial DF marking), which carry `marks0`
-    * marks. With no marks the frontier is empty from the start: the loop
-    * runs no superstep, and the terminal fold applies the S corrections. */
+    * partition's state with the first round's outgoing messages (S
+    * corrections + initial DF marking). Its flags are CLEARED — a fresh
+    * frontier per invocation, matching the reference's per-call affected
+    * vector (reference inc/pagerank.hxx:683) — or hold a fixed
+    * frontier (DT, ND). `active0` is 0 when the run has no frontier (no
+    * splice marks, or for ND no vertex): the loop then runs no superstep,
+    * and the terminal fold applies the S corrections. */
   private def runLoop(g: CsrGraph,
-      cur0: RDD[(CsrState, Array[(Int, Msg)])], marks0: Long, prune: Boolean,
-      t0: Long, t1: Long, fixedFrontier: Boolean = false)
+      cur0: RDD[(CsrState, Array[(Int, Msg)])], active0: Long,
+      variant: DynamicVariant, t0: Long, t1: Long)
       : (PagerankRun, RDD[CsrState]) = {
     val sc = spark.sparkContext
     val parts = g.vCounts.length
@@ -332,9 +334,10 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
     val pTol = opts.pruneTolerance
     val denseOk = g.n * 8L <= maxDenseBytes
     val nGlob = g.n // primitive capture — never close over `g` (holds RDDs)
-    val fixedF = fixedFrontier
+    val prune = variant.prune
+    val fixedF = variant.fixedFrontier
     var iter = 0
-    var active = marks0
+    var active = active0
     var residual = if (active > 0) Double.MaxValue else 0.0
 
     /** Define ONE superstep lazily — no action here. The accumulator is
@@ -581,7 +584,7 @@ class CsrDynamic(spark: SparkSession, opts: PagerankOptions = PagerankOptions(),
       Iterator.single(st)
     }
     finalState.persist(StorageLevel.MEMORY_AND_DISK)
-    // pre-materialization truncation (see applyBatchImpl): the carried
+    // pre-materialization truncation (see applyBatch): the carried
     // state must not retain this run's superstep chain, or an indefinite
     // stream leaks every superstep's shuffle registration
     finalState.localCheckpoint()
@@ -677,7 +680,8 @@ object CsrDynamic {
     *  - retract old terms: Δ −= rank(u)·invDegOld to every OLD neighbor
     *  - add new terms:     Δ += rank(u)·invDegNew to every NEW neighbor
     *  - mark OLD neighbors if u had an (existing) deletion; NEW neighbors if
-    *    u had a (novel) insertion — pagerank.hxx:631-637's fm rule.
+    *    u had an insertion absent after the deletions — pagerank.hxx:631-637's
+    *    fm rule.
     * Untouched srcs' segments are array-copied verbatim.
     */
   def spliceBlock(b: CsrBlock, st: CsrState,
@@ -736,24 +740,20 @@ object CsrDynamic {
         val oldKeys = new java.util.ArrayList[Long](until - from)
         var e = from
         while (e < until) { oldKeys.add(pack(b.dstPart(e), b.dstIdx(e))); e += 1 }
-        val present = new java.util.HashSet[java.lang.Long](oldKeys.size * 2)
-        oldKeys.forEach(k => present.add(k))
+        // delete, then insert (EdgeOps.applyBatch's order): an edge the
+        // batch deletes and re-inserts stays
         val newKeys = new java.util.ArrayList[Long](oldKeys.size + 4)
         oldKeys.forEach { k =>
           if (del == null || !del.contains(k)) newKeys.add(k)
         }
+        // effective deletion = any old key actually removed (deleting a
+        // non-existent edge is a no-op, inc/_bitset.hxx:297-301)
+        val removed = newKeys.size < oldKeys.size
+        val present = new java.util.HashSet[java.lang.Long](newKeys.size * 2)
+        newKeys.forEach(k => present.add(k))
         var hadIns = false
         if (ins != null) ins.forEach { k =>
           if (!present.contains(k)) { newKeys.add(k); present.add(k); hadIns = true }
-        }
-        // effective deletion = any old key actually removed (deleting a
-        // non-existent edge is a no-op, inc/_bitset.hxx:297-301)
-        var removed = false
-        if (del != null) {
-          val oit = oldKeys.iterator()
-          while (oit.hasNext && !removed) {
-            if (del.contains(oit.next())) removed = true
-          }
         }
         require(newKeys.size > 0,
           s"vertex ${b.srcs(i)} would lose its last edge (self-loop contract)")

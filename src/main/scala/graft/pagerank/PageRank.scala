@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.graph.EdgeOps
 import graft.util.Ckpt._
-import graft.model.{PagerankOptions, PagerankStats}
+import graft.model.{DynamicVariant, PagerankOptions, PagerankStats}
 
 /** Result of one PageRank run: converged per-vertex ranks + phase stats —
   * mirrors the reference's PagerankResult (/root/reference/inc/pagerank.hxx:64-113). */
@@ -51,10 +51,13 @@ final case class LinkState(links: DataFrame, degs: DataFrame, n: Long,
   * [[buildLinks]] (no reduce key ever receives more than ~a quarter-partition
   * of rows — the AQE-off PR session has no skew-join splitting to fall back
   * on). [[CsrPageRank.static]] is the partition-local CSR form of the same
-  * sweep. The dynamic variants freeze y into CSR blocks and run the
-  * O(frontier) push loop from the variant's seed marking — one engine, as
-  * the reference runs every variant through one pagerankInvoke
-  * (/root/reference/inc/pagerank.hxx:335-373).
+  * sweep. The dynamic variants freeze x (plus y's self-loops) into CSR
+  * blocks, splice the raw batch into them with [[CsrDynamic.applyBatch]]
+  * and run the O(frontier) push loop from the variant's seeding of the
+  * splice's marks — one engine and one entry, as the reference runs every
+  * variant through one pagerankInvoke (reference inc/pagerank.hxx:335-373).
+  * The batch may be raw: the splice deletes, then inserts, and skips
+  * duplicate rows, present insertions and absent deletions.
   *
   * All graphs passed in must already carry self-loops on every vertex
   * ([[EdgeOps.withSelfLoops]]) — the reference driver's invariant that
@@ -63,8 +66,6 @@ final case class LinkState(links: DataFrame, degs: DataFrame, n: Long,
 class PageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()) {
 
   private val P = opts.damping
-  /** Broadcast the frontier semi-join side below this many vertices. */
-  private val broadcastFrontierMax = 2000000L
 
   // ---------------------------------------------------------------- variants
 
@@ -179,23 +180,20 @@ class PageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()) {
   /** V2 — pagerankNaiveDynamic (/root/reference/inc/pagerank.hxx:482-509):
     * all vertices affected, warm init from previous ranks. New vertices
     * start at 0.0, NOT 1/N (/root/reference/inc/pagerank.hxx:287-295 copies
-    * q[v], which is 0 for previously-absent ids — SURVEY.md §7.4 R3). The
-    * seeds are every vertex of y (its self-loops) as a fixed frontier. */
+    * q[v], which is 0 for previously-absent ids — SURVEY.md §7.4 R3). Runs
+    * as ND over y with an empty batch. */
   def naiveDynamic(yEdges: DataFrame, prevRanks: DataFrame): PagerankRun =
-    runCsr(yEdges, prevRanks,
-      yEdges.where(col("src") === col("dst")).select(col("src").as("id")),
-      prune = false, fixedFrontier = true)
+    dynamic(DynamicVariant.ND, yEdges, yEdges, yEdges.limit(0), yEdges.limit(0),
+      prevRanks)
 
   /** V3 — pagerankDynamicTraversal (/root/reference/inc/pagerank.hxx:525-615):
-    * affected = BFS closure in y from the DF seed set; frontier fixed across
+    * affected = the closure in y of the DF marking; frontier fixed across
     * supersteps. The closure is out-edge-closed, so every push lands inside
     * the affected set. */
   def dynamicTraversal(xEdges: DataFrame, yEdges: DataFrame,
       insertions: DataFrame, deletions: DataFrame,
       prevRanks: DataFrame): PagerankRun =
-    runCsr(yEdges, prevRanks,
-      bfsClosure(yEdges, frontierSeeds(xEdges, yEdges, insertions, deletions)),
-      prune = false, fixedFrontier = true)
+    dynamic(DynamicVariant.DT, xEdges, yEdges, insertions, deletions, prevRanks)
 
   /** V4 — pagerankDynamicFrontier (/root/reference/inc/pagerank.hxx:631-729):
     * initial marking = out-neighbors (in x) of each deleted edge's source and
@@ -206,9 +204,7 @@ class PageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()) {
   def dynamicFrontier(xEdges: DataFrame, yEdges: DataFrame,
       insertions: DataFrame, deletions: DataFrame,
       prevRanks: DataFrame): PagerankRun =
-    runCsr(yEdges, prevRanks,
-      frontierSeeds(xEdges, yEdges, insertions, deletions),
-      prune = false, fixedFrontier = false)
+    dynamic(DynamicVariant.DF, xEdges, yEdges, insertions, deletions, prevRanks)
 
   /** V5 — pagerankPruneDynamicFrontier (/root/reference/inc/pagerankPrune.hxx:301-329):
     * DF marking + closed-form self-loop removal
@@ -222,19 +218,29 @@ class PageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()) {
   def dynamicFrontierPrune(xEdges: DataFrame, yEdges: DataFrame,
       insertions: DataFrame, deletions: DataFrame,
       prevRanks: DataFrame): PagerankRun =
-    runCsr(yEdges, prevRanks,
-      frontierSeeds(xEdges, yEdges, insertions, deletions),
-      prune = true, fixedFrontier = false)
+    dynamic(DynamicVariant.DFP, xEdges, yEdges, insertions, deletions, prevRanks)
 
-  /** The one-shot form of the [[CsrDynamic]] engine shared by the dynamic
-    * variants: freeze y, align the warm ranks (+ exact S), deliver `seeds`
-    * as the first round's marks, run the O(frontier) push loop. */
-  private def runCsr(yEdges: DataFrame, prevRanks: DataFrame,
-      seeds: DataFrame, prune: Boolean, fixedFrontier: Boolean): PagerankRun = {
-    val g = new CsrPageRank(spark, opts).build(yEdges)
+  /** Dynamic `variant` on the batch x → y from `prevRanks`: the one-shot
+    * form of the [[CsrDynamic]] engine. It freezes x plus y's self-loops (a
+    * vertex only y has joins with rank 0.0), aligns the warm ranks (+ exact
+    * S) and splices the raw batch in — the same [[CsrDynamic.applyBatch]]
+    * a carried batch loop runs. ND freezes y and splices an empty batch. */
+  def dynamic(variant: DynamicVariant, xEdges: DataFrame, yEdges: DataFrame,
+      insertions: DataFrame, deletions: DataFrame,
+      prevRanks: DataFrame): PagerankRun = {
+    val none = yEdges.select("src", "dst").limit(0)
+    val (frozen, ins, del) =
+      if (variant == DynamicVariant.ND) (yEdges, none, none)
+      else (EdgeOps.withSelfLoops(xEdges, yEdges.where(col("src") === col("dst"))
+        .select(col("src").as("id"))), insertions, deletions)
+    val g = new CsrPageRank(spark, opts).build(frozen)
     val dyn = new CsrDynamic(spark, opts)
-    dyn.runFromSeeds(g, dyn.stateFromRanks(g, prevRanks), seeds, prune,
-      fixedFrontier)._1
+    val st = dyn.stateFromRanks(g, prevRanks)
+    val (_, run, _) = dyn.applyBatch(g, st, ins, del, variant)
+    // the run's ranks read only the spliced, checkpointed generation
+    st.unpersist(false)
+    g.blocks.unpersist(false)
+    run
   }
 
   // ------------------------------------------------------------- link state
@@ -293,57 +299,4 @@ class PageRank(spark: SparkSession, opts: PagerankOptions = PagerankOptions()) {
       .ckpt()
     LinkState(links, degs, degs.count(), nEdges, hubsOpt)
   }
-
-  // ------------------------------------------------------------ frontier ops
-
-  /** DF initial marking (/root/reference/inc/pagerank.hxx:631-637): for each
-    * deleted edge (u,·) mark out-neighbors of u in x; for each inserted
-    * (u,·) mark out-neighbors of u in y. The sources themselves are NOT
-    * auto-marked. */
-  def frontierSeeds(xEdges: DataFrame, yEdges: DataFrame,
-      insertions: DataFrame, deletions: DataFrame): DataFrame = {
-    // The batch-src side is O(|batch|) by contract — ALWAYS broadcast it
-    // (the PR session runs AQE-off, so Catalyst would otherwise shuffle the
-    // |E|-row edge table for this semi-join on unknown stats; sizing the
-    // hint with a count() would cost two extra jobs per dynamic run).
-    def outNbrs(edges: DataFrame, srcs: DataFrame): DataFrame = {
-      val s = srcs.select(col("src")).distinct()
-      edges.join(broadcast(s), Seq("src"), "left_semi")
-        .select(col("dst").as("id"))
-    }
-    outNbrs(xEdges, deletions).union(outNbrs(yEdges, insertions)).distinct()
-  }
-
-  /** BFS closure in `edges` from `seeds` (seeds included) — the DT marking
-    * (/root/reference/inc/pagerank.hxx:525-561) as iterative semi-join
-    * frontier expansion. */
-  def bfsClosure(edges0: DataFrame, seeds: DataFrame): DataFrame = {
-    // localCheckpoint every hop: iterative plans reference their
-    // predecessor multiple times, so without eager truncation the logical
-    // plan grows exponentially with depth (SURVEY.md §7.4 R5). The edge
-    // table is materialized once so each hop's plan has shallow RDD leaves.
-    val edges = edges0.select("src", "dst").ckpt()
-    var visited = seeds.select(col("id")).distinct().ckpt()
-    var visitedN = visited.count()
-    var frontier = visited
-    var frontierN = visitedN
-    while (frontierN > 0) {
-      val hop = edges
-        .join(maybeBroadcast(frontier.withColumnRenamed("id", "src"), frontierN),
-          Seq("src"), "left_semi")
-        .select(col("dst").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .ckpt()
-      val nextVisited = visited.union(hop).ckpt()
-      val nextN = nextVisited.count()
-      frontier = hop
-      frontierN = nextN - visitedN
-      visited = nextVisited
-      visitedN = nextN
-    }
-    visited
-  }
-
-  private def maybeBroadcast(df: DataFrame, n: Long): DataFrame =
-    if (n <= broadcastFrontierMax) broadcast(df) else df
 }

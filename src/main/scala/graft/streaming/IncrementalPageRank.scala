@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.graph.EdgeOps
 import graft.util.Ckpt._
-import graft.model.PagerankOptions
+import graft.model.{DynamicVariant, PagerankOptions}
 import graft.pagerank.{CsrDynamic, CsrPageRank}
 import graft.pagerank.CsrPageRank.CsrGraph
 import graft.pagerank.CsrDynamic.CsrState
@@ -146,25 +146,26 @@ class IncrementalPageRank(spark: SparkSession,
       ranks = run.ranks
     } else if (grew) {
       // universe grew ⇒ N and C0 changed ⇒ warm full re-rank of the grown
-      // graph: Naive-dynamic, every universe vertex a fixed seed
+      // graph: Naive-dynamic, an empty batch with every vertex seeded
       val y = EdgeOps.withSelfLoops(EdgeOps.applyBatch(edges, ins, del),
         universe).ckpt()
       val g = new CsrPageRank(spark, opts).build(y)
       val st0 = dyn.stateFromRanks(g, ranks)
-      val (run, st) = dyn.runFromSeeds(g, st0, universe, prune = false,
-        fixedFrontier = true)
+      val none = ins.limit(0)
+      val (g2, run, st) = dyn.applyBatch(g, st0, none, none, DynamicVariant.ND)
       st0.unpersist(false)
-      carry(g, st)
+      g.blocks.unpersist(false)
+      carry(g2, st)
       ranks = run.ranks
       edges = y
     } else {
       if (csrG == null) bootstrapCsr(edges)
-      // splice contract: insertions absent from x, deletions present
-      // (self-loop deletions were already dropped in split()). A deletion
-      // the same batch re-inserts leaves the edge in place
-      // (EdgeOps.applyBatch deletes first), so it is no deletion here.
-      // Both tidies return local relations; the edge table advances by the
-      // same tidied pair, so the raw batch is collected once.
+      // The splice and the edge table advance by the same tidied pair, so
+      // the raw batch is collected once (self-loop deletions were already
+      // dropped in split()). tidyInsertions drops an insertion already in
+      // x, which includes the re-insert of an edge the batch also deletes,
+      // so that deletion is dropped too (del ▷ ins): alone it would remove
+      // the edge the raw batch keeps.
       val insT = EdgeOps.tidyInsertions(ins, edges)
       val delT = EdgeOps.tidyDeletions(
         del.join(ins, Seq("src", "dst"), "left_anti"), edges)

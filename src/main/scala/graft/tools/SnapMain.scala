@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.graph.EdgeOps
 import graft.ingest.SnapReader
-import graft.model.PagerankOptions
-import graft.pagerank.{CsrDynamic, CsrPageRank, PageRank, PagerankRun}
+import graft.model.{DynamicVariant, PagerankOptions}
+import graft.pagerank.{CsrDynamic, CsrPageRank, PagerankRun}
 import graft.pagerank.CsrDynamic.CsrState
 import graft.pagerank.CsrPageRank.CsrGraph
 import graft.util.Ckpt._
@@ -73,7 +73,7 @@ object SnapMain {
     * tests can assert on it. It runs over CARRIED CSR state: ONE freeze of
     * the base graph, then every technique advances its own (graph, state)
     * pair by in-place splice per batch
-    * ([[CsrDynamic.applyBatch]]/[[CsrDynamic.applyBatchSeeded]]). The
+    * ([[CsrDynamic.applyBatch]] with the technique's variant). The
     * per-batch static baseline and the 1e-15 oracle reuse the DF track's
     * spliced graph (identical adjacency; the reference likewise updates ONE
     * shared graph and never rebuilds its CSR per batch,
@@ -89,7 +89,6 @@ object SnapMain {
     val x0 = EdgeOps.withSelfLoops(
       EdgeOps.simple(snap.where(col("seq") < base90).select("src", "dst")),
       verts).ckpt()
-    val pr = new PageRank(spark, opts) // frontier seed/closure helpers
     val dyn = new CsrDynamic(spark, opts)
     val csrOracle = new CsrPageRank(spark, opts.copy(tolerance = 1e-15))
     val csrStatic = new CsrPageRank(spark, opts)
@@ -103,29 +102,21 @@ object SnapMain {
     r0blocks.unpersist(false)
     val nd, dt, df, dfp = new Track(g0, st0)
 
-    var x = x0
     val out = Seq.newBuilder[Map[String, TechResult]]
     var b = 0
     var lo = base90
     while (b < nBatches && lo < size) {
       val hi = math.min(lo + batchLen, size)
-      val ins = EdgeOps.tidyInsertions(
-        snap.where(col("seq") >= lo && col("seq") < hi).select("src", "dst"),
-        x).ckpt()
+      // the raw slice: the splice skips duplicate and present insertions
+      val ins = snap.where(col("seq") >= lo && col("seq") < hi)
+        .select("src", "dst").ckpt()
       val none = ins.limit(0)
-      val y = EdgeOps.applyBatch(x, ins, none).ckpt()
-      val allIds = y.select(col("src").as("id")).distinct()
-      val dtSeeds = pr.bfsClosure(y, pr.frontierSeeds(x, y, ins, none))
-
-      val (dfR, tDf) = df.advance(
-        (g, st) => dyn.applyBatch(g, st, ins, none, prune = false))
-      val (dfpR, tDfp) = dfp.advance(
-        (g, st) => dyn.applyBatch(g, st, ins, none, prune = true))
-      val (dtR, tDt) = dt.advance(
-        (g, st) => dyn.applyBatchSeeded(g, st, ins, none, dtSeeds, prune = false))
-      // naive-dynamic = warm full sweep: seeds = every vertex, fixed frontier
-      val (ndR, tNd) = nd.advance(
-        (g, st) => dyn.applyBatchSeeded(g, st, ins, none, allIds, prune = false))
+      def advance(t: Track, v: DynamicVariant) =
+        t.advance((g, st) => dyn.applyBatch(g, st, ins, none, v))
+      val (dfR, tDf) = advance(df, DynamicVariant.DF)
+      val (dfpR, tDfp) = advance(dfp, DynamicVariant.DFP)
+      val (dtR, tDt) = advance(dt, DynamicVariant.DT)
+      val (ndR, tNd) = advance(nd, DynamicVariant.ND)
       // static baseline + 1e-15 oracle on the updated graph, reusing the DF
       // track's spliced blocks (same adjacency) — zero re-freezes; every
       // technique is scored against the oracle's aligned rank blocks
@@ -145,7 +136,6 @@ object SnapMain {
       oBlocks.unpersist(false)
       out += m
       emitBatch(emit, b, hi - lo, m)
-      x = y
       lo = hi
       b += 1
     }

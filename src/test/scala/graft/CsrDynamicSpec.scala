@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.EdgeOps
 import graft.ingest.WebGraphFixture
+import graft.model.DynamicVariant
 import graft.pagerank.{CsrDynamic, CsrPageRank, PageRank}
 
 /** CSR dynamic-frontier engine (push-based delta propagation over
@@ -52,7 +53,7 @@ class CsrDynamicSpec extends AnyFunSuite {
     // vs the sequential DF reference from the same warm ranks (same
     // variant, same tolerances)
     val (ref, _) = Oracle.dynamic(base, y, TestSpark.collectRanks(staticRun.ranks),
-      ins, Nil, Oracle.DF)
+      ins, Nil, DynamicVariant.DF)
     assert(Oracle.allclose(got, ref, 1e-9), s"maxDiff=${Oracle.maxDiff(got, ref)}")
   }
 
@@ -82,7 +83,7 @@ class CsrDynamicSpec extends AnyFunSuite {
     val prev = TestSpark.collectRanks(staticRun.ranks)
     val y = (base ++ ins).distinct
     val tol = graft.model.PagerankOptions().tolerance
-    for ((prune, v) <- Seq(false -> Oracle.DF, true -> Oracle.DFP)) {
+    for ((prune, v) <- Seq(false -> DynamicVariant.DF, true -> DynamicVariant.DFP)) {
       val (_, run, _) = dyn.applyBatch(g0, st0, insDf, none, prune)
       val recs = run.stats.supersteps
       val kernelMs = recs.map(_.kernelCritMs).sum
@@ -164,11 +165,11 @@ class CsrDynamicSpec extends AnyFunSuite {
     val pr = new PageRank(spark)
     val prev = pr.static(xDf).ranks.cache()
     val prevMap = TestSpark.collectRanks(prev)
-    for (v <- Oracle.Variants) {
+    for (v <- DynamicVariant.all) {
       val got = TestSpark.collectRanks(
-        TestSpark.dynamicRun(pr, v, xDf, yDf, insDf, none, prev).ranks)
+        pr.dynamic(v, xDf, yDf, insDf, none, prev).ranks)
       assert(got.size === want.size)
-      assert(Oracle.allclose(got, want, if (v == Oracle.DFP) 2e-6 else 1e-6),
+      assert(Oracle.allclose(got, want, if (v == DynamicVariant.DFP) 2e-6 else 1e-6),
         s"$v maxDiff=${Oracle.maxDiff(got, want)}")
       // and value-identical (within residual tolerance) to the reference
       val (ref, _) = Oracle.dynamic(base, y, prevMap, ins, Nil, v)
@@ -176,7 +177,7 @@ class CsrDynamicSpec extends AnyFunSuite {
     }
   }
 
-  test("one-shot runFromSeeds equals carried-state applyBatch (same batch, same fixpoint)") {
+  test("one-shot PageRank.dynamicFrontier equals carried-state applyBatch (same batch, same fixpoint)") {
     val (base, ins) = fixture(150L)
     val y = (base ++ ins).distinct
     val xDf = TestSpark.edgesDf(spark, base)
@@ -194,6 +195,30 @@ class CsrDynamicSpec extends AnyFunSuite {
     val a = TestSpark.collectRanks(carried.ranks)
     val b = TestSpark.collectRanks(oneShot.ranks)
     assert(Oracle.allclose(a, b, 1e-9), s"maxDiff=${Oracle.maxDiff(a, b)}")
+  }
+
+  test("an edge both deleted and inserted by one batch stays (delete, then insert)") {
+    val (base, ins) = fixture(150L)
+    val both = base.filter { case (a, b) => a != b }.head
+    val insB = Seq(both, ins.head)
+    val y = (base.filterNot(_ == both) ++ insB).distinct
+    val dyn = new CsrDynamic(spark)
+    val g0 = new CsrPageRank(spark).build(TestSpark.edgesDf(spark, base))
+    val (staticRun, st0) = dyn.staticWithState(g0)
+    val (g1, run, _) = dyn.applyBatch(g0, st0, TestSpark.edgesDf(spark, insB),
+      TestSpark.edgesDf(spark, Seq(both)), DynamicVariant.DF)
+    assert(g1.nEdges === y.size)
+    val blocks = g1.blocks.collect()
+    val spliced = for {
+      blk <- blocks.toSeq
+      i <- blk.srcs.indices
+      e <- blk.offsets(i) until blk.offsets(i + 1)
+    } yield (blk.srcs(i), blocks(blk.dstPart(e)).srcs(blk.dstIdx(e)))
+    assert(spliced.toSet === y.toSet && spliced.contains(both))
+    val (ref, _) = Oracle.dynamic(base, y, TestSpark.collectRanks(staticRun.ranks),
+      insB, Seq(both), DynamicVariant.DF)
+    val got = TestSpark.collectRanks(run.ranks)
+    assert(Oracle.allclose(got, ref, 1e-9), s"maxDiff=${Oracle.maxDiff(got, ref)}")
   }
 
   test("batch touching a vertex outside the universe raises UniverseGrowthRequired") {

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.EdgeOps
 import graft.ingest.WebGraphFixture
+import graft.model.{DynamicVariant, PagerankOptions}
 import graft.pagerank.PageRank
 
 /** Dynamic-variant semantics: marking rules pinned on tiny hand-checked
@@ -22,35 +23,44 @@ class DynamicPageRankSpec extends AnyFunSuite {
   }
 
   def df(e: Seq[(Long, Long)]): DataFrame = TestSpark.edgesDf(spark, e)
-  def ids(d: DataFrame): Set[Long] = d.collect().map(_.getLong(0)).toSet
 
   val xE = selfLooped(Seq((1L, 2L), (2L, 3L), (3L, 4L)))  // line4 + loops
 
+  /** One superstep of `v` on the batch from static ranks of x: the vertices
+    * it swept are the variant's initial frontier. Checks that the first
+    * superstep leaves `want.size` vertices flagged and every vertex outside
+    * `want` bit-identical to the warm ranks. DF and DT never unflag a swept
+    * vertex, and marks in flight to the next round are not counted. */
+  def firstFrontier(v: DynamicVariant, yE: Seq[(Long, Long)],
+      ins: Seq[(Long, Long)], del: Seq[(Long, Long)], want: Set[Long]): Unit = {
+    val prev = new PageRank(spark).static(df(xE)).ranks.cache()
+    val pr = new PageRank(spark, PagerankOptions(maxIterations = 1))
+    val run = pr.dynamic(v, df(xE), df(yE), df(ins), df(del), prev)
+    assert(run.stats.supersteps.head.flagged === want.size.toLong, v)
+    val before = TestSpark.collectRanks(prev)
+    val after = TestSpark.collectRanks(run.ranks)
+    assert(after.keySet === before.keySet)
+    val swept = after.keySet.filter(k => after(k) != before(k))
+    assert(swept.subsetOf(want), s"$v swept $swept outside $want")
+  }
+
   test("DF marking: insertion (2,4) marks out-neighbors of 2 in y = {2,3,4}") {
-    val yE = selfLooped(xE :+ (2L -> 4L))
-    val pr = new PageRank(spark)
-    val seeds = pr.frontierSeeds(df(xE), df(yE),
-      insertions = df(Seq((2L, 4L))), deletions = df(Seq.empty))
-    assert(ids(seeds) === Set(2L, 3L, 4L))
+    firstFrontier(DynamicVariant.DF, selfLooped(xE :+ (2L -> 4L)),
+      ins = Seq((2L, 4L)), del = Nil, want = Set(2L, 3L, 4L))
   }
 
   test("DF marking: deletion (2,3) marks out-neighbors of 2 in x = {2,3}") {
-    val yE = selfLooped(Seq((1L, 2L), (3L, 4L)))
-    val pr = new PageRank(spark)
-    val seeds = pr.frontierSeeds(df(xE), df(yE),
-      insertions = df(Seq.empty), deletions = df(Seq((2L, 3L))))
-    assert(ids(seeds) === Set(2L, 3L))
+    firstFrontier(DynamicVariant.DF, selfLooped(Seq((1L, 2L), (3L, 4L))),
+      ins = Nil, del = Seq((2L, 3L)), want = Set(2L, 3L))
   }
 
   test("DT marking: BFS closure from the seeds in y") {
-    val yE = selfLooped(xE :+ (2L -> 4L))
-    val pr = new PageRank(spark)
-    val seeds = pr.frontierSeeds(df(xE), df(yE), df(Seq((2L, 4L))), df(Seq.empty))
     // closure of {2,3,4} in y (line + 2->4): stays {2,3,4}
-    assert(ids(pr.bfsClosure(df(yE), seeds)) === Set(2L, 3L, 4L))
+    firstFrontier(DynamicVariant.DT, selfLooped(xE :+ (2L -> 4L)),
+      ins = Seq((2L, 4L)), del = Nil, want = Set(2L, 3L, 4L))
     // from vertex 1's neighborhood the closure reaches everything
-    val all = pr.bfsClosure(df(yE), Seq(1L).toDF("id"))
-    assert(ids(all) === Set(1L, 2L, 3L, 4L))
+    firstFrontier(DynamicVariant.DT, selfLooped(xE :+ (1L -> 3L)),
+      ins = Seq((1L, 3L)), del = Nil, want = Set(1L, 2L, 3L, 4L))
   }
 
   test("all four dynamic variants converge to the static fixpoint after a batch") {
@@ -104,14 +114,26 @@ class DynamicPageRankSpec extends AnyFunSuite {
 
   test("warm start: new vertices init at 0.0, not 1/N (reference R3 quirk)") {
     // y adds a brand-new vertex 5 via edge (4,5); naive-dynamic must still
-    // converge to the static fixpoint of y.
+    // converge to the static fixpoint of y, and every variant must match
+    // the sequential reference, which starts vertex 5 at 0.0.
     val pr = new PageRank(spark)
     val x = df(xE)
-    val y = df(selfLooped(xE :+ (4L -> 5L)))
+    val yE = selfLooped(xE :+ (4L -> 5L))
+    val y = df(yE)
+    val ins = Seq((4L, 5L))
     val prev = pr.static(x).ranks.cache()
+    val prevMap = TestSpark.collectRanks(prev)
+    assert(!prevMap.contains(5L))
     val want = TestSpark.collectRanks(pr.static(y).ranks)
-    val got = TestSpark.collectRanks(pr.naiveDynamic(y, prev).ranks)
-    assert(got.keySet.contains(5L))
-    assert(Oracle.allclose(got, want, 1e-6))
+    val nd = TestSpark.collectRanks(pr.naiveDynamic(y, prev).ranks)
+    assert(nd.keySet.contains(5L))
+    assert(Oracle.allclose(nd, want, 1e-6))
+    for (v <- DynamicVariant.all) {
+      val run = pr.dynamic(v, x, y, df(ins), df(Seq.empty), prev)
+      val (ref, refIters) = Oracle.dynamic(xE, yE, prevMap, ins, Nil, v)
+      val got = TestSpark.collectRanks(run.ranks)
+      assert(Oracle.allclose(got, ref, 1e-9), s"$v maxDiff=${Oracle.maxDiff(got, ref)}")
+      assert(run.stats.iterations === refIters, v)
+    }
   }
 }

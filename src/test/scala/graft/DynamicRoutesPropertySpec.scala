@@ -8,6 +8,7 @@ import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.EdgeOps
+import graft.model.DynamicVariant
 import graft.pagerank.{CsrDynamic, CsrPageRank, PageRank}
 import graft.streaming.IncrementalPageRank
 
@@ -69,8 +70,8 @@ class DynamicRoutesPropertySpec extends AnyFunSuite {
 
     // one-shot variants: the raw batch, y merged by the caller
     val pr = new PageRank(spark)
-    for (v <- Oracle.Variants) {
-      val run = TestSpark.dynamicRun(pr, v, xDf, yDf, insDf, delDf, prev)
+    for (v <- DynamicVariant.all) {
+      val run = pr.dynamic(v, xDf, yDf, insDf, delDf, prev)
       val (ref, refIters) = Oracle.dynamic(x, y, prevMap, c.ins, del, v)
       recorded(s"PageRank $v", run, refIters)
       close(s"PageRank $v", TestSpark.collectRanks(run.ranks), ref)
@@ -80,7 +81,7 @@ class DynamicRoutesPropertySpec extends AnyFunSuite {
     val insT = c.ins.distinct.filterNot(x.toSet)
     val delT = del.distinct.filter(x.toSet)
     val yT = (x.filterNot(delT.toSet) ++ insT).distinct
-    for ((prune, v) <- Seq(false -> Oracle.DF, true -> Oracle.DFP)) {
+    for ((prune, v) <- Seq(false -> DynamicVariant.DF, true -> DynamicVariant.DFP)) {
       val (_, run, _) = dyn.applyBatch(g0, st0, EdgeOps.tidyInsertions(insDf, xDf),
         EdgeOps.tidyDeletions(delDf, xDf), prune)
       val (ref, refIters) = Oracle.dynamic(x, yT, prevMap, insT, delT, v)
@@ -98,7 +99,7 @@ class DynamicRoutesPropertySpec extends AnyFunSuite {
       .union(df(c.del).withColumn("op", lit("del"))))
     val moved = delT.filterNot(c.ins.toSet)
     close("IncrementalPageRank", TestSpark.collectRanks(inc.currentRanks),
-      Oracle.dynamic(x, y, incPrev, insT, moved, Oracle.DF)._1)
+      Oracle.dynamic(x, y, incPrev, insT, moved, DynamicVariant.DF)._1)
   }
 
   test("every dynamic route agrees with Oracle.dynamic on random batches") {

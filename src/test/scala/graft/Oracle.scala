@@ -2,7 +2,8 @@ package graft
 
 import scala.collection.mutable
 
-import graft.model.PagerankOptions
+import graft.model.{DynamicVariant, PagerankOptions}
+import graft.model.DynamicVariant._
 
 /** Test-only in-memory oracles — direct transliteration of the reference
   * kernels (FIXTURES.md §4), executable on graphs up to ~10^4 edges.
@@ -50,14 +51,6 @@ object Oracle {
     r
   }
 
-  /** The four dynamic variants of `PageRank` (ND, DT, DF, DF-P). */
-  sealed trait Variant
-  case object ND extends Variant
-  case object DT extends Variant
-  case object DF extends Variant
-  case object DFP extends Variant
-  val Variants: Seq[Variant] = Seq(ND, DT, DF, DFP)
-
   /** Sequential Jacobi reference for the dynamic variants, with the
     * semantics of the reference's pagerankInvoke
     * (/root/reference/inc/pagerank.hxx:335-373, inc/pagerankPrune.hxx):
@@ -75,7 +68,7 @@ object Oracle {
     * @return (ranks over y's vertices, supersteps run) */
   def dynamic(x: Seq[(Long, Long)], y: Seq[(Long, Long)],
       prev: Map[Long, Double], ins: Seq[(Long, Long)],
-      del: Seq[(Long, Long)], variant: Variant,
+      del: Seq[(Long, Long)], variant: DynamicVariant,
       opts: PagerankOptions = PagerankOptions()): (Map[Long, Double], Int) = {
     val gx = new G(x)
     val gy = new G(y)

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.EdgeOps
 import graft.ingest.WebGraphFixture
-import graft.model.PagerankOptions
+import graft.model.{DynamicVariant, PagerankOptions}
 import graft.pagerank.PageRank
 
 class PageRankSpec extends AnyFunSuite {
@@ -90,7 +90,7 @@ class PageRankSpec extends AnyFunSuite {
     val want = Oracle.pagerank(new Oracle.G(y), tol = 1e-100)
     assert(Oracle.allclose(got, want, 1e-6), s"maxDiff=${Oracle.maxDiff(got, want)}")
     val (ref, _) = Oracle.dynamic(base, y, TestSpark.collectRanks(prev), ins,
-      Nil, Oracle.DF)
+      Nil, DynamicVariant.DF)
     assert(Oracle.allclose(got, ref, 1e-9), s"maxDiff=${Oracle.maxDiff(got, ref)}")
   }
 

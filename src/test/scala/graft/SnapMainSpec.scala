@@ -6,6 +6,7 @@ import org.apache.spark.GraftSparkBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.model.DynamicVariant
 import graft.pagerank.CsrPageRank
 import graft.tools.SnapMain
 
@@ -93,8 +94,10 @@ class SnapMainSpec extends AnyFunSuite {
     val loops = (1L to rows).map(v => (v, v))
     var x = (body.take(360) ++ loops).distinct
     val r0 = Oracle.pagerank(new Oracle.G(x), tol = 1e-15)
-    val techs = Seq("naiveDynamic" -> Oracle.ND,
-      "dynamicTraversal" -> Oracle.DT, "dynamicFrontier" -> Oracle.DF, "dynamicFrontierPrune" -> Oracle.DFP)
+    val techs = Seq("naiveDynamic" -> DynamicVariant.ND,
+      "dynamicTraversal" -> DynamicVariant.DT,
+      "dynamicFrontier" -> DynamicVariant.DF,
+      "dynamicFrontierPrune" -> DynamicVariant.DFP)
     val reg = scala.collection.mutable.Map(techs.map(_._2 -> r0): _*)
     results.zipWithIndex.foreach { case (m, b) =>
       val ins = body.slice(360 + 4 * b, 364 + 4 * b).distinct.filterNot(x.toSet)
